@@ -83,15 +83,29 @@ object AppSession {
     (good, qBad)
   }
 
+  /** A `SPARK_GRAFT_CPUS` value as a task-slot count: plain decimal
+    * digits naming a positive Int, else None. */
+  def parseCpus(raw: String): Option[Int] =
+    if (raw.forall(_.isDigit)) raw.toIntOption.filter(_ > 0) else None
+
   def make(name: String): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val raw = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = parseCpus(raw).getOrElse(
+      fail(s"SPARK_GRAFT_CPUS must be a positive integer, got '$raw'"))
     val builder = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName(name)
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toLong)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // List files on the driver. Every file-stream micro-batch hands its
+      // files to InMemoryFileIndex as root paths, and above this threshold
+      // (default 32) Spark lists them in a job with one task per file. The
+      // session is always local[N], so those tasks run in this JVM against
+      // the same filesystem: the job adds no I/O parallelism, only a job
+      // per micro-batch whose cost grows with the file count.
+      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", Int.MaxValue.toLong)
     // RocksDB state store for large assembly state (SCALE.md); HDFS-backed
     // default keeps small runs light. SPARK_GRAFT_STATE_STORE=rocksdb opts in,
     // with changelog checkpointing (incremental deltas, not full snapshots).
