@@ -6,10 +6,12 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-/** State-store scaling study: how the four assembler arms (fMGWS vs
-  * transformWithState × payload-buffered vs disk-mode) behave as the
-  * number of IN-FLIGHT partial files sweeps 10³ → 10⁵ — the reference's
-  * known failure mode is unbounded `files_in_progress_by_path` growth
+import graft.app.AppSession
+
+/** State-store scaling study: how the two assembler arms (payload-buffered
+  * vs disk-mode) behave as the number of IN-FLIGHT partial files sweeps
+  * 10³ → 10⁵ — the reference's known failure mode is unbounded
+  * `files_in_progress_by_path` growth
   * (stream_handler_registries.py:19-51), so the engine's claim that
   * eviction + offsets-only state keep 10⁵ partials cheap needs NUMBERS,
   * not prose. Per (arm, n): wall time, chunk rows/s, and the state rows /
@@ -19,14 +21,16 @@ import org.apache.spark.sql.streaming.Trigger
   *
   * Corpus shape per n: n files × 3 chunks of 1 KiB; 90% of files are
   * missing their last chunk (they STAY in state), 10% complete (output
-  * flows, so the run exercises emission too). RocksDB provider for all
-  * arms (TWS supports nothing else; the HDFS-vs-RocksDB comparison lives
-  * in [[StreamBench]]). One JSON line (Bench's contract), bare copy at
-  * STATE_SCALE_LATEST.json (SPARK_GRAFT_STATE_SCALE_OUT overrides);
-  * SPARK_GRAFT_STATE_SCALE_SIZES overrides the sweep. */
+  * flows, so the run exercises emission too). RocksDB provider for both
+  * arms (the HDFS-vs-RocksDB comparison lives in [[StreamBench]]). One
+  * JSON line (Bench's contract), bare copy at STATE_SCALE_LATEST.json
+  * (SPARK_GRAFT_STATE_SCALE_OUT overrides); SPARK_GRAFT_STATE_SCALE_SIZES
+  * overrides the sweep. */
 object StateScaleBench {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val rawCpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = AppSession.parseCpus(rawCpus).getOrElse(
+      AppSession.fail(s"SPARK_GRAFT_CPUS must be a positive integer, got '$rawCpus'"))
     val sizes = sys.env.getOrElse("SPARK_GRAFT_STATE_SCALE_SIZES",
       "1000,10000,100000").split(',').map(_.trim.toInt).toSeq
     val spark = SparkSession.builder()
@@ -57,7 +61,7 @@ object StateScaleBench {
       }.toDF().repartition(32).write.mode("overwrite").parquet(topic)
       val nRows = spark.read.parquet(topic).count()
 
-      val arms = Seq("fmgws_buffered", "fmgws_disk", "tws_buffered", "tws_disk")
+      val arms = Seq("fmgws_buffered", "fmgws_disk")
       val rows = arms.map { arm =>
         val registryDir = base.resolve(s"registry_$arm").toString
         val outDir = base.resolve(s"out_$arm").toString
@@ -74,14 +78,8 @@ object StateScaleBench {
           case "fmgws_buffered" =>
             graft.streaming.AssemblyStream.assemble(chunks, timeoutMs = 0)
               .writeStream
-          case "tws_buffered" =>
-            graft.streaming.AssemblyStreamTws.assemble(chunks, timeoutMs = 0)
-              .writeStream
           case "fmgws_disk" =>
             graft.streaming.DiskModeAssembly.assemble(chunks, outDir, timeoutMs = 0)
-              .writeStream
-          case "tws_disk" =>
-            graft.streaming.DiskModeAssemblyTws.assemble(chunks, outDir, timeoutMs = 0)
               .writeStream
         }).format("noop")
           .option("checkpointLocation", ckpt)

@@ -5,6 +5,8 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 
+import graft.app.AppSession
+
 /** Streaming-dataflow throughput benchmark — the engine's REASON TO EXIST
   * (chunk → produce → consume → reassemble) measured end to end, which the
   * SQL bench never touches. Three corpus shapes stress the three state
@@ -35,7 +37,9 @@ object StreamBench {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val rawCpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = AppSession.parseCpus(rawCpus).getOrElse(
+      AppSession.fail(s"SPARK_GRAFT_CPUS must be a positive integer, got '$rawCpus'"))
     val scale = sys.env.get("SPARK_GRAFT_STREAM_SCALE")
       .flatMap(s => scala.util.Try(s.toInt).toOption).filter(_ >= 1).getOrElse(1)
     val chunkSize = 128 * 1024
@@ -94,11 +98,10 @@ object StreamBench {
       }
       val chunkRows = spark.read.parquet(topicDir).count()
 
-      def consume(outDir: String, disk: Boolean, tws: Boolean = false,
+      def consume(outDir: String, disk: Boolean,
           provider: String = "rocksdb"): Double = {
         // like-for-like backend comparison: the provider is a per-query
-        // SQLConf, so each consume arm pins it explicitly (TWS supports
-        // RocksDB only; the fMGWS arms run under both)
+        // SQLConf, so each consume arm pins it explicitly
         spark.conf.set("spark.sql.streaming.stateStore.providerClass",
           if (provider == "hdfs")
             "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
@@ -111,20 +114,14 @@ object StreamBench {
           val chunks = graft.batch.ChunkPipeline.decode(wire)
           val q =
             if (disk)
-              (if (tws)
-                 graft.streaming.DiskModeAssemblyTws.assemble(chunks, outDir, timeoutMs = 0)
-               else
-                 graft.streaming.DiskModeAssembly.assemble(chunks, outDir, timeoutMs = 0))
+              graft.streaming.DiskModeAssembly.assemble(chunks, outDir, timeoutMs = 0)
                 .writeStream.format("parquet")
                 .option("path", s"$outDir/_manifests")
                 .option("checkpointLocation", s"$outDir/_checkpoint")
                 .trigger(Trigger.AvailableNow())
                 .start()
             else
-              (if (tws)
-                 graft.streaming.AssemblyStreamTws.assemble(chunks, timeoutMs = 0)
-               else
-                 graft.streaming.AssemblyStream.assemble(chunks, timeoutMs = 0))
+              graft.streaming.AssemblyStream.assemble(chunks, timeoutMs = 0)
                 .writeStream
                 .foreach(new graft.streaming.CompletedFileWriter(outDir))
                 .outputMode("append")
@@ -156,12 +153,6 @@ object StreamBench {
       val outDiskH = base.resolve("out_disk_hdfs").toString
       val tBufH = consume(outBufH, disk = false, provider = "hdfs")
       val tDiskH = consume(outDiskH, disk = true, provider = "hdfs")
-      // the transformWithState twins of both consumers — same shared folds,
-      // modern state API (TWS is RocksDB-only)
-      val outBufTws = base.resolve("out_buffered_tws").toString
-      val outDiskTws = base.resolve("out_disk_tws").toString
-      val tBufTws = consume(outBufTws, disk = false, tws = true)
-      val tDiskTws = consume(outDiskTws, disk = true, tws = true)
 
       // best-effort cleanup so three shapes don't stack tmp usage
       def rm(p: java.nio.file.Path): Unit = if (Files.exists(p)) {
@@ -170,21 +161,19 @@ object StreamBench {
       }
       rm(base)
 
-      (label, totalMb, chunkRows, tProduce, tBuf, tDisk, tBufTws, tDiskTws,
-        tBufH, tDiskH)
+      (label, totalMb, chunkRows, tProduce, tBuf, tDisk, tBufH, tDiskH)
     }
 
     def f1(v: Double): String = f"$v%.1f"
-    val js = results.map { case (label, mb, rows, tp, tb, td, tbt, tdt, tbh, tdh) =>
+    val js = results.map { case (label, mb, rows, tp, tb, td, tbh, tdh) =>
       s""""$label":{"mb":${f1(mb)},"chunks":$rows,""" +
         s""""produce_s":${f1(tp)},"produce_mb_s":${f1(mb / tp)},""" +
         s""""buffered_s":${f1(tb)},"buffered_mb_s":${f1(mb / tb)},"buffered_rows_s":${f1(rows / tb)},""" +
         s""""disk_s":${f1(td)},"disk_mb_s":${f1(mb / td)},"disk_rows_s":${f1(rows / td)},""" +
         s""""buffered_hdfs_mb_s":${f1(mb / tbh)},"disk_hdfs_mb_s":${f1(mb / tdh)},""" +
-        s""""buffered_tws_mb_s":${f1(mb / tbt)},"disk_tws_mb_s":${f1(mb / tdt)},""" +
         s""""verified":true}"""
     }.mkString("{", ",", "}")
-    val total = results.map(r => r._4 + r._5 + r._6 + r._7 + r._8 + r._9 + r._10).sum
+    val total = results.map(r => r._4 + r._5 + r._6 + r._7 + r._8).sum
     val json =
       s"""{"metric":"stream_total","value":${f1(total)},"unit":"sec","chunk_kb":${chunkSize / 1024},"scale":$scale,"scenarios":$js}"""
     println(json)

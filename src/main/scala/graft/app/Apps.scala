@@ -216,23 +216,16 @@ object UploadDirectoryApp {
   * ENCRYPTED_MESSAGES/ shape, data_file_download_directory.py:108-136).
   * `--disk-mode` selects the large-file path (reference `mode="disk"`):
   * payloads write straight to positioned offsets, state stays tiny, and
-  * verified manifests land in `<outDir>/_manifests`. `--tws` runs the
-  * buffered reassembly on the `transformWithState` operator (RocksDB state
-  * store switched on automatically; own checkpoint dir). */
+  * verified manifests land in `<outDir>/_manifests`. */
 object DownloadDirectoryApp {
   def main(args: Array[String]): Unit = {
     val usage =
-      "DownloadDirectoryApp <topicDir> <outDir> [--disk-mode] [--tws] " +
+      "DownloadDirectoryApp <topicDir> <outDir> [--disk-mode] " +
       "[--decrypt-key=K | --key-exchange=<identityDir>] [--trust-producers=<fp1,fp2,...>]"
     AppSession.rejectUnknownFlags(args, usage,
-      boolFlags = Set("disk-mode", "tws"),
+      boolFlags = Set("disk-mode"),
       valueFlags = Set("decrypt-key", "key-exchange", "trust-producers"))
     val diskMode = args.contains("--disk-mode")
-    // --tws: run reassembly on the transformWithState operator instead of
-    // flatMapGroupsWithState (same shared policy fold, buffered OR disk
-    // mode). Requires the RocksDB state store, which we switch on here
-    // rather than fail confusingly.
-    val useTws = args.contains("--tws")
     val explicitKey = AppSession.flagValue(args, "decrypt-key")
     // --key-exchange=<identityDir>: recover the wire key through the C4bis
     // side-topic protocol — the identity dir holds this consumer's durable
@@ -271,8 +264,6 @@ object DownloadDirectoryApp {
         ring.map(_._2)
       })
     val spark = AppSession.make("graft-download")
-    if (useTws) spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     import spark.implicits._
     val rawWire = spark.readStream
       .schema("key STRING, value BINARY")
@@ -299,34 +290,21 @@ object DownloadDirectoryApp {
     // mode's checkpoint with the other fails confusingly
     val q =
       if (diskMode)
-        (if (useTws)
-           graft.streaming.DiskModeAssemblyTws.assemble(good, outDir, timeoutMs = 0)
-         else
-           graft.streaming.DiskModeAssembly.assemble(good, outDir, timeoutMs = 0))
+        graft.streaming.DiskModeAssembly.assemble(good, outDir, timeoutMs = 0)
           .writeStream
           .format("parquet")
           .option("path", s"$outDir/_manifests")
-          .option("checkpointLocation",
-            if (useTws) s"$outDir/_checkpoint_download_disk_tws"
-            else s"$outDir/_checkpoint_download_disk")
+          .option("checkpointLocation", s"$outDir/_checkpoint_download_disk")
           .trigger(Trigger.AvailableNow())
           .start()
-      else {
-        val assembled =
-          if (useTws) graft.streaming.AssemblyStreamTws.assemble(good, timeoutMs = 0)
-          else AssemblyStream.assemble(good, timeoutMs = 0)
-        assembled.writeStream
+      else
+        AssemblyStream.assemble(good, timeoutMs = 0)
+          .writeStream
           .foreach(new CompletedFileWriter(outDir))
           .outputMode("append")
-          // separate checkpoint per operator: their state schemas differ
-          // (AsmBuf map vs flattened arrays), so resuming one operator's
-          // checkpoint with the other must be impossible by construction
-          .option("checkpointLocation",
-            if (useTws) s"$outDir/_checkpoint_download_tws"
-            else s"$outDir/_checkpoint_download")
+          .option("checkpointLocation", s"$outDir/_checkpoint_download")
           .trigger(Trigger.AvailableNow())
           .start()
-      }
     q.awaitTermination()
     qBad.awaitTermination()
     qEncrypted.foreach(_.awaitTermination())

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.batch.{AsmBuf, AssembledFile, ChunkRow}
@@ -34,20 +34,19 @@ object AssemblyStream {
   private def tombstone(rel: String, name: String, s: Assembly.State): AsmBuf =
     AsmBuf(rel, name, s.fileHash, s.nTotal, s.mtime, Map.empty, completed = true)
 
-  /** Quarantine row for a timed-out partial buffer; tombstone expiry is
-    * silent (None). Shared by both stateful operators' eviction paths. */
-  def quarantineRow(b: AsmBuf): Option[AssembledFile] =
+  /** Eviction of a buffered key: a timed-out partial surfaces as an
+    * InProgress quarantine row carrying what it had buffered; a completion
+    * tombstone expires silently (None). */
+  private def quarantineRow(b: AsmBuf): Option[AssembledFile] =
     if (b.completed) None
     else Some(AssembledFile(b.relFilepath, b.filename, Assembly.Code.InProgress,
       b.buffered.size, b.buffered.valuesIterator.map(_.length.toLong).sum,
       b.fileHash, b.mtime, null))
 
   /** Pure fold of one microbatch's rows for a key: prior buffer → (emitted
-    * files, next buffer). ONE policy loop shared by the
-    * `flatMapGroupsWithState` operator ([[update]]) and the
-    * `transformWithState` port ([[AssemblyProcessor]]) — the two can never
-    * drift semantically because neither owns any assembly logic. */
-  def foldRows(key: String, prior: Option[AsmBuf], rows: Iterator[ChunkRow])
+    * files, next buffer). Completion leaves a tombstone so late duplicates of
+    * the finished generation drop; a newer generation replaces it. */
+  private def foldRows(key: String, prior: Option[AsmBuf], rows: Iterator[ChunkRow])
       : (Seq[AssembledFile], Option[AsmBuf]) = {
     var tomb: Option[AsmBuf] = prior.filter(_.completed)
     var current: Option[Assembly.State] = prior.filterNot(_.completed).map(buf2state)
@@ -88,41 +87,50 @@ object AssemblyStream {
     (emitted.result(), nextBuf)
   }
 
-  /** The per-group update function (pure policy + state-store plumbing). */
-  def update(timeoutMs: Long)(
-      key: String,
-      rows: Iterator[ChunkRow],
-      state: GroupState[AsmBuf]): Iterator[AssembledFile] = {
-    if (state.hasTimedOut) {
-      val b = state.get
-      state.remove()
-      quarantineRow(b).iterator
-    } else {
-      val (emitted, nextBuf) = foldRows(key, state.getOption, rows)
-      nextBuf match {
-        case Some(b) =>
-          state.update(b)
-          if (timeoutMs > 0) state.setTimeoutDuration(timeoutMs)
-        case None => if (state.exists) state.remove()
-      }
-      emitted.iterator
-    }
-  }
-
-  /** Wire the streaming assembly over a (streaming) chunk Dataset.
+  /** The state-store plumbing both assembly modes share, around a pure
+    * per-key `fold` (prior state → emitted rows, next state) and an `expire`
+    * for timed-out keys. `None` from the fold removes the key's state; any
+    * other state is stored and its eviction timeout re-armed.
+    *
     * `timeoutMs <= 0` disables eviction (NoTimeout) — processing-time
     * timeouts make the microbatch loop re-trigger continuously even with no
     * data, which is the right behavior for a standing production stream but
     * pure churn for availableNow/test runs. */
+  private[streaming] def assembleWith[S: Encoder, O: Encoder](
+      chunks: Dataset[ChunkRow], timeoutMs: Long)(
+      fold: (String, Option[S], Iterator[ChunkRow]) => (Seq[O], Option[S]),
+      expire: (String, S) => Option[O]): Dataset[O] = {
+    val timeout =
+      if (timeoutMs > 0) GroupStateTimeout.ProcessingTimeTimeout
+      else GroupStateTimeout.NoTimeout
+    def update(key: String, rows: Iterator[ChunkRow],
+        state: GroupState[S]): Iterator[O] =
+      if (state.hasTimedOut) {
+        val s = state.get
+        state.remove()
+        expire(key, s).iterator
+      } else {
+        val (out, next) = fold(key, state.getOption, rows)
+        next match {
+          case Some(s) =>
+            state.update(s)
+            if (timeoutMs > 0) state.setTimeoutDuration(timeoutMs)
+          case None => if (state.exists) state.remove()
+        }
+        out.iterator
+      }
+    chunks
+      .groupByKey(_.toChunk.relFilepath)(Encoders.STRING)
+      .flatMapGroupsWithState(OutputMode.Append, timeout)(update _)
+  }
+
+  /** Wire the buffered streaming assembly over a (streaming) chunk Dataset;
+    * completed files carry their bytes. */
   def assemble(
       chunks: Dataset[ChunkRow],
       timeoutMs: Long = DefaultTimeoutMs): Dataset[AssembledFile] = {
     import chunks.sparkSession.implicits._
-    val timeout =
-      if (timeoutMs > 0) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    chunks
-      .groupByKey(_.toChunk.relFilepath)
-      .flatMapGroupsWithState(OutputMode.Append, timeout)(update(timeoutMs))
+    assembleWith[AsmBuf, AssembledFile](chunks, timeoutMs)(
+      foldRows, (_, b) => quarantineRow(b))
   }
 }

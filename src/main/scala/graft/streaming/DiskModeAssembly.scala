@@ -6,7 +6,6 @@ import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 import java.security.MessageDigest
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.batch.ChunkRow
 import graft.core.Assembly
@@ -70,10 +69,10 @@ object DiskModeAssembly {
     md.digest()
   }
 
-  /** Expiry handling shared by both state APIs: a verified tombstone
-    * expires silently; an unfinished partial quarantines its bytes and
+  /** Eviction of a disk-mode key: a verified tombstone expires silently;
+    * an unfinished partial moves its bytes to `_quarantine_files/` and
     * surfaces an InProgress manifest. */
-  private[streaming] def expire(rootDir: String, key: String,
+  private def expire(rootDir: String, key: String,
       s: DiskState): Option[FileManifest] =
     if (s.completed) None // tombstone expiry; the file is verified
     else {
@@ -83,32 +82,11 @@ object DiskModeAssembly {
         Assembly.Code.InProgress, s.offsets.size, -1L, hash_ok = false))
     }
 
-  def update(rootDir: String, timeoutMs: Long)(
-      key: String,
-      rows: Iterator[ChunkRow],
-      state: GroupState[DiskState]): Iterator[FileManifest] = {
-    if (state.hasTimedOut) {
-      val s = state.get
-      state.remove()
-      expire(rootDir, key, s).iterator
-    } else {
-      val (out, next) = foldDisk(rootDir, key, state.getOption, rows)
-      next match {
-        case Some(s) =>
-          state.update(s)
-          if (timeoutMs > 0) state.setTimeoutDuration(timeoutMs)
-        case None => if (state.exists) state.remove()
-      }
-      out.iterator
-    }
-  }
-
-  /** The state-API-agnostic disk fold: positioned writes, generation
-    * policy, completion verification — shared by the `GroupState` operator
-    * above and [[DiskModeAssemblyTws]], so the classic and
-    * transformWithState paths cannot drift (the same contract
-    * [[AssemblyStream.foldRows]] gives the buffered pair). */
-  private[streaming] def foldDisk(rootDir: String, key: String,
+  /** Pure-policy disk fold of one microbatch's rows for a key: positioned
+    * writes, generation decisions, sha512 verification on completion. A
+    * verified file leaves a tombstone; a mismatched one is quarantined and
+    * its state dropped so replay can reassemble it. */
+  private def foldDisk(rootDir: String, key: String,
       prior: Option[DiskState], rows: Iterator[ChunkRow])
       : (Seq[FileManifest], Option[DiskState]) = {
     if (!graft.core.SafePaths.isSafe(key)) {
@@ -180,11 +158,7 @@ object DiskModeAssembly {
       rootDir: String,
       timeoutMs: Long = AssemblyStream.DefaultTimeoutMs): Dataset[FileManifest] = {
     import chunks.sparkSession.implicits._
-    val timeout =
-      if (timeoutMs > 0) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    chunks
-      .groupByKey(_.toChunk.relFilepath)
-      .flatMapGroupsWithState(OutputMode.Append, timeout)(update(rootDir, timeoutMs))
+    AssemblyStream.assembleWith[DiskState, FileManifest](chunks, timeoutMs)(
+      foldDisk(rootDir, _, _, _), expire(rootDir, _, _))
   }
 }

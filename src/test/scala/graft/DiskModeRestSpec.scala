@@ -48,6 +48,62 @@ class DiskModeRestSpec extends AnyFunSuite {
       assert(ms("o.bin") == ((Assembly.Code.Complete, 1000L, true)))
       assert(Files.readAllBytes(rootDir.resolve("d/big.bin")).toSeq == big.toSeq)
       assert(Files.readAllBytes(rootDir.resolve("o.bin")).toSeq == other.toSeq)
+      // late duplicate after completion: the tombstone drops it, no new
+      // manifest, the finished file stays byte-identical
+      val manifestCount = spark.table("manifests").count()
+      input.addData(gNew.take(1))
+      q.processAllAvailable()
+      assert(spark.table("manifests").count() == manifestCount)
+      assert(Files.readAllBytes(rootDir.resolve("d/big.bin")).toSeq == big.toSeq)
+      // a wire-supplied subdir escaping rootDir dead-letters as one
+      // UnsafePath manifest and never touches the filesystem
+      input.addData(Chunker.chunk("evil.bin", "../escape", Array[Byte](1, 2),
+        256, Nil, None).map(ChunkRow(_)))
+      q.processAllAvailable()
+      val unsafe = spark.table("manifests")
+        .where($"code" === Assembly.Code.UnsafePath).collect()
+      assert(unsafe.length == 1)
+      assert(unsafe.head.getAs[String]("rel_filepath") == "../escape/evil.bin")
+      assert(!Files.exists(rootDir.resolveSibling("escape").resolve("evil.bin")))
+      assert(!Files.exists(rootDir.resolve("escape")))
+    } finally q.stop()
+  }
+
+  test("disk-mode eviction quarantines a stalled partial off the destination path") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val rootDir = Files.createTempDirectory("graft_diskmode_evict")
+    val content = new Array[Byte](900)
+    new scala.util.Random(7).nextBytes(content)
+    val stall = Chunker.chunk("stall.bin", "d", content, 256, Nil, None).map(ChunkRow(_))
+    val tiny = Chunker.chunk("tiny.bin", "d", Array[Byte](1, 2, 3), 256, Nil, None)
+      .map(ChunkRow(_))
+    val input = MemoryStream[ChunkRow]
+    val q = DiskModeAssembly.assemble(input.toDS(), rootDir.toString, timeoutMs = 1)
+      .writeStream.format("memory").queryName("diskmode_evict")
+      .outputMode("append").start()
+    try {
+      // no processAllAvailable: under ProcessingTimeTimeout the engine keeps
+      // constructing microbatches to evaluate timeouts, so the no-new-data
+      // condition it waits on never holds. Poll the sink instead.
+      input.addData(stall.dropRight(1) ++ tiny) // stall's last chunk never arrives
+      def sink(): Map[String, Int] = spark.table("diskmode_evict")
+        .selectExpr("rel_filepath", "code").collect()
+        .map(r => r.getString(0) -> r.getInt(1)).toMap
+      val deadline = System.currentTimeMillis() + 120000
+      var rows = sink()
+      while (System.currentTimeMillis() < deadline &&
+          !(rows.contains("d/stall.bin") && rows.contains("d/tiny.bin"))) {
+        Thread.sleep(200)
+        rows = sink()
+      }
+      assert(rows.get("d/tiny.bin").contains(Assembly.Code.Complete), s"$rows")
+      assert(rows.get("d/stall.bin").contains(Assembly.Code.InProgress),
+        s"stalled partial not evicted: $rows")
+      // the partial moved aside — a consumer can't mistake it for done
+      assert(!Files.exists(rootDir.resolve("d/stall.bin")))
+      assert(Files.exists(rootDir.resolve("_quarantine_files/d/stall.bin")))
+      assert(Files.readAllBytes(rootDir.resolve("d/tiny.bin")).toSeq == Seq[Byte](1, 2, 3))
     } finally q.stop()
   }
 

@@ -72,5 +72,20 @@ class RestartResumeSpec extends AnyFunSuite {
       val written = Files.readAllBytes(out.resolve("d").resolve(name))
       assert(written.toSeq == c.toSeq, s"$name differs after resume")
     }
+
+    // a partial file's buffered state survives a restart: the first run
+    // checkpoints two chunks of p.bin, the next restores them from the
+    // state store and completes the file once the rest arrive
+    val p = new Array[Byte](1100); rnd.nextBytes(p)
+    val pChunks = Chunker.chunk("p.bin", "d", p, 256, Nil, Some(9.0)).map(ChunkRow(_))
+    ChunkPipeline.encode(spark.createDataset(pChunks.take(2)))
+      .write.mode("append").parquet(topic.toString)
+    runOnce()
+    assert(!Files.exists(out.resolve("d").resolve("p.bin")), "completed too early")
+    ChunkPipeline.encode(spark.createDataset(pChunks.drop(2)))
+      .write.mode("append").parquet(topic.toString)
+    runOnce()
+    assert(Files.readAllBytes(out.resolve("d").resolve("p.bin")).toSeq == p.toSeq,
+      "p.bin differs after resuming its partial state")
   }
 }

@@ -53,6 +53,12 @@ class StreamingAssemblySpec extends AnyFunSuite {
       assert(rows("d/a.bin")._1 == Assembly.Code.Complete)
       assert(rows("d/a.bin")._3.toSeq == contentA.toSeq) // newest generation won
       assert(rows("d/b.bin")._3.toSeq == contentB.toSeq)
+      // batch 3: every chunk of the completed generation again (an
+      // at-least-once redelivery) — the completion tombstone drops them
+      // instead of re-assembling and re-emitting the file
+      input.addData(a)
+      q.processAllAvailable()
+      assert(spark.table("assembled").count() == 2)
     } finally q.stop()
   }
 
