@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every declared query on SPARK_GRAFT_SF_DIR and prints
   * one JSON line. Each query is executed fully via the noop sink (a bare
   * count() would let Catalyst prune projections and understate the work).
@@ -9,26 +7,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // WindowExec's "No Partition Defined" WARN is a false positive for the
-    // two-pass globalRank/globalCumSum offsets frame (a window over ≤32
-    // per-partition totals — the design that AVOIDS the whole-data funnel
-    // the WARN is about, batch/Joins.scala). A literal PARTITION BY cannot
-    // silence it (EliminateWindowPartitions folds it away), so the bench
-    // filters the logger and keeps the tail clean for reviewers.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
-    Harness.silenceSweepWarn()
+    val spark = Harness.session("graft-bench")
 
     // Untimed warmup: exercise each table family's parquet scan plus
     // shuffle/sort/codegen once so the first measured query per family
@@ -234,10 +213,7 @@ object Bench {
     // via SPARK_GRAFT_BENCH_OUT.
     val outEnv = sys.env.get("SPARK_GRAFT_BENCH_OUT")
     val out = outEnv.getOrElse("BENCH_LATEST.json")
-    if (args.isEmpty || outEnv.isDefined)
-      try java.nio.file.Files.write(java.nio.file.Paths.get(out),
-        (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      catch { case e: Exception => System.err.println(s"[bench] write $out: ${e.getMessage}") }
+    if (args.isEmpty || outEnv.isDefined) Harness.writeLatest("bench", out, json)
     else System.err.println(
       s"[bench] subset run (${args.length} queries): not writing $out; set SPARK_GRAFT_BENCH_OUT to persist")
     spark.stop()

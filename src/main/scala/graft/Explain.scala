@@ -1,62 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan inspector: `runMain graft.Explain [queryName ...]` prints the
   * formatted physical plan of each named declared query (all if none given)
-  * against SPARK_GRAFT_SF_DIR. Used to audit pushdown/pruning/broadcast
-  * decisions (see SCALE.md).
+  * against SPARK_GRAFT_SF_DIR, under the session config `graft.Bench` times.
+  * Used to audit pushdown/pruning/broadcast decisions (see SCALE.md).
   */
-/** Exchange auditor: `runMain graft.ShuffleBytes <queryName ...>` executes
-  * each named declared query against SPARK_GRAFT_SF_DIR and reports total
-  * shuffle WRITE bytes and records from the stage metrics — the number the
-  * 100 TB design notes in SCALE.md quote when a plan claims a narrower
-  * exchange (e.g. the 8-byte hashed gram keys vs gram strings).
-  */
-object ShuffleBytes {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    @volatile var bytes = 0L
-    @volatile var records = 0L
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        bytes += sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten
-        records += sc.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten
-      }
-    })
-    args.foreach { name =>
-      SparkEntry.queries.get(name) match {
-        case Some(fn) =>
-          bytes = 0L; records = 0L
-          val n = fn(spark, sfDir).count()
-          // listener events are async (the bus drain API is private) —
-          // a short settle is fine for a diagnostic tool
-          Thread.sleep(1500)
-          println(f"$name%-28s rows=$n%-8d shuffleWrite=$bytes%12d bytes  $records%10d records")
-        case None => System.err.println(s"unknown query: $name")
-      }
-    }
-    spark.stop()
-  }
-}
-
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Harness.session("graft-explain")
     spark.sparkContext.setLogLevel("ERROR")
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
     names.foreach { name =>

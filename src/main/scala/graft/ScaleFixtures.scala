@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-study fixture generator: writes an N× version of a driver test
@@ -33,15 +33,7 @@ object ScaleFixtures {
     val Array(srcDir, outDir, copiesStr) = args.take(3)
     val copies = copiesStr.toInt
     require(copies >= 1 && copies <= 104, "copies in [1, 104]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scale-fixtures")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.app.AppSession.make("graft-scale-fixtures")
     new java.io.File(outDir).mkdirs()
 
     val lower = "abcdefghijklmnopqrstuvwxyz"
@@ -54,8 +46,8 @@ object ScaleFixtures {
 
     def write(name: String, df: DataFrame): Unit = {
       // a handful of output files so downstream scans parallelize without
-      // depending on spread(); 32 is the local core count and a fine
-      // default for the study's data sizes
+      // depending on spread(); 32 is a fine default for the study's data
+      // sizes
       df.repartition(32).write.mode("overwrite")
         .parquet(s"$outDir/$name.parquet")
       println(s"[scale-fixtures] wrote $name x$copies")

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -28,21 +27,11 @@ import graft.app.AppSession
   * overrides the sweep. */
 object StateScaleBench {
   def main(args: Array[String]): Unit = {
-    val rawCpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val cpus = AppSession.parseCpus(rawCpus).getOrElse(
-      AppSession.fail(s"SPARK_GRAFT_CPUS must be a positive integer, got '$rawCpus'"))
     val sizes = sys.env.getOrElse("SPARK_GRAFT_STATE_SCALE_SIZES",
       "1000,10000,100000").split(',').map(_.trim.toInt).toSeq
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-state-scale")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = AppSession.make("graft-state-scale")
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     import spark.implicits._
 
     val results = sizes.flatMap { n =>
@@ -91,7 +80,7 @@ object StateScaleBench {
         spark.streams.removeListener(listener)
         // empty/absent registry (e.g. all beats dropped) must report 0, not NPE
         val (stateRows, stateBytes) =
-          if (!Files.exists(java.nio.file.Paths.get(registryDir))) (0L, 0L)
+          if (!Files.exists(Paths.get(registryDir))) (0L, 0L)
           else {
             val reg = spark.read.parquet(registryDir)
               .agg(max("num_rows_total").as("r"), max("state_bytes").as("b"))
@@ -105,22 +94,14 @@ object StateScaleBench {
           s""""state_rows":$stateRows,"state_bytes":$stateBytes}"""
       }
       // cleanup between sweep points so 10^5 disk-mode files don't linger
-      def rm(p: java.nio.file.Path): Unit = if (Files.exists(p)) {
-        Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-          .forEach(q => Files.deleteIfExists(q))
-      }
-      rm(base)
+      Harness.rmTree(base)
       rows
     }
 
     val json = s"""{"metric":"state_scale","points":[${results.mkString(",")}]}"""
     println(json)
-    val out = sys.env.getOrElse("SPARK_GRAFT_STATE_SCALE_OUT",
-      "STATE_SCALE_LATEST.json")
-    try Files.write(Paths.get(out),
-      (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch { case e: Exception =>
-      System.err.println(s"[state-scale] write $out: ${e.getMessage}") }
+    Harness.writeLatest("state-scale",
+      sys.env.getOrElse("SPARK_GRAFT_STATE_SCALE_OUT", "STATE_SCALE_LATEST.json"), json)
     spark.stop()
   }
 

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.app.AppSession
@@ -18,10 +17,16 @@ import graft.app.AppSession
   *   - produce: watched dir → [[graft.core.Chunker]] → sha512 + msgpack
   *     wire codec → file-backed topic (parquet, availableNow)
   *   - consume_buffered: topic → decode → [[graft.streaming.AssemblyStream]]
-  *     (flatMapGroupsWithState on the RocksDB state store, payload
-  *     buffered in state) → verified whole files on disk
+  *     (flatMapGroupsWithState, payload buffered in state) → verified whole
+  *     files on disk
   *   - consume_disk: topic → decode → [[graft.streaming.DiskModeAssembly]]
   *     (positioned writes, offsets-only state) → verified manifests
+  *
+  * Each consume phase runs twice on the same topic, once per state store
+  * provider: RocksDB (`buffered_*`, `disk_*`) and the HDFS-backed default
+  * (`buffered_hdfs_mb_s`, `disk_hdfs_mb_s`). The session is the app
+  * session ([[graft.app.AppSession.make]]): `SPARK_GRAFT_CPUS` task slots
+  * and shuffle partitions, file listing on the driver.
   *
   * Every reassembled byte is digest-compared with its source; a mismatch
   * fails the run — a throughput number for an incorrect pipeline is
@@ -37,22 +42,10 @@ object StreamBench {
   }
 
   def main(args: Array[String]): Unit = {
-    val rawCpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val cpus = AppSession.parseCpus(rawCpus).getOrElse(
-      AppSession.fail(s"SPARK_GRAFT_CPUS must be a positive integer, got '$rawCpus'"))
     val scale = sys.env.get("SPARK_GRAFT_STREAM_SCALE")
       .flatMap(s => scala.util.Try(s.toInt).toOption).filter(_ >= 1).getOrElse(1)
     val chunkSize = 128 * 1024
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-stream-bench")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = AppSession.make("graft-stream-bench")
     import spark.implicits._
 
     // (label, nFiles, bytesPerFile): 128 / 256 / 256 MB at scale 1
@@ -155,11 +148,7 @@ object StreamBench {
       val tDiskH = consume(outDiskH, disk = true, provider = "hdfs")
 
       // best-effort cleanup so three shapes don't stack tmp usage
-      def rm(p: java.nio.file.Path): Unit = if (Files.exists(p)) {
-        Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-          .forEach(q => Files.deleteIfExists(q))
-      }
-      rm(base)
+      Harness.rmTree(base)
 
       (label, totalMb, chunkRows, tProduce, tBuf, tDisk, tBufH, tDiskH)
     }
@@ -177,10 +166,8 @@ object StreamBench {
     val json =
       s"""{"metric":"stream_total","value":${f1(total)},"unit":"sec","chunk_kb":${chunkSize / 1024},"scale":$scale,"scenarios":$js}"""
     println(json)
-    val out = sys.env.getOrElse("SPARK_GRAFT_STREAM_BENCH_OUT", "STREAM_BENCH_LATEST.json")
-    try Files.write(Paths.get(out),
-      (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch { case e: Exception => System.err.println(s"[stream-bench] write $out: ${e.getMessage}") }
+    Harness.writeLatest("stream-bench",
+      sys.env.getOrElse("SPARK_GRAFT_STREAM_BENCH_OUT", "STREAM_BENCH_LATEST.json"), json)
     spark.stop()
   }
 }

@@ -83,19 +83,34 @@ object AppSession {
     (good, qBad)
   }
 
-  /** A `SPARK_GRAFT_CPUS` value as a task-slot count: plain decimal
-    * digits naming a positive Int, else None. */
-  def parseCpus(raw: String): Option[Int] =
+  /** A count read from the environment: plain decimal digits naming a
+    * positive Int, else None. */
+  def parsePositive(raw: String): Option[Int] =
     if (raw.forall(_.isDigit)) raw.toIntOption.filter(_ > 0) else None
 
+  /** The positive count that environment variable `name` sets, or `unset`
+    * when it is absent; Left(message) when it is set to anything else. */
+  def positiveSetting(name: String, unset: => Int,
+      env: Map[String, String] = sys.env): Either[String, Int] =
+    env.get(name) match {
+      case None => Right(unset)
+      case Some(raw) => parsePositive(raw)
+        .toRight(s"$name must be a positive integer, got '$raw'")
+    }
+
+  /** Task slots, and shuffle partitions: `SPARK_GRAFT_CPUS`, else every
+    * processor this JVM sees. */
+  def cpus(env: Map[String, String] = sys.env): Either[String, Int] =
+    positiveSetting("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors, env)
+
+  /** The one session builder of the program: the CLI apps, the harness
+    * mains and the benchmarks all run on it. */
   def make(name: String): SparkSession = {
-    val raw = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val cpus = parseCpus(raw).getOrElse(
-      fail(s"SPARK_GRAFT_CPUS must be a positive integer, got '$raw'"))
+    val n = cpus().fold(fail, identity)
     val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
+      .master(s"local[$n]")
       .appName(name)
-      .config("spark.sql.shuffle.partitions", cpus.toLong)
+      .config("spark.sql.shuffle.partitions", n.toLong)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -13,14 +12,7 @@ import graft.streaming.Pipelines
   * watermarks close past the join window (the global watermark is the MIN
   * across sides, so both streams must advance for outer results to emit).
   */
-class AckJoinStreamSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class AckJoinStreamSpec extends AnyFunSuite with LocalSpark {
 
   private val base = 1700000000L
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.Similarity
@@ -11,16 +10,9 @@ import graft.queries.Similarity
   * pass its own oracle (the oracle replicates the approximation). Fixture
   * is deterministic, so recall here is a fixed number; the floors pin it
   * against regression. */
-class AnnQualitySpec extends AnyFunSuite {
+class AnnQualitySpec extends AnyFunSuite with LocalSpark {
 
   private val sf = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private def ids(df: org.apache.spark.sql.DataFrame): Seq[Long] =
     df.select("vec_id").collect().map(_.getLong(0)).toSeq

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.Archives
@@ -15,13 +14,7 @@ import graft.streaming.Pipelines
   * the plan is STATIC, unbounded recursion is not expressible in it,
   * and an expansion bomb hits this depth floor instead of the
   * executor heap. */
-class ArchiveDepthPolicySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ArchiveDepthPolicySpec extends AnyFunSuite with LocalSpark {
 
   private def rows(df: org.apache.spark.sql.DataFrame): Seq[(String, String, String, Boolean)] =
     df.select("path", "member", "kind", "ok").collect()

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.{Archives, Pdfs}
@@ -16,13 +15,7 @@ import graft.streaming.Pipelines
   * the quarantine arms: an unreadable container (truncated ZIP, corrupt
   * PAX record) is ONE dead-letter row, a CRC-failed member a `corrupt`
   * row, never an exception into the standing query. */
-class ArchiveTextStreamSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ArchiveTextStreamSpec extends AnyFunSuite with LocalSpark {
 
   private def docx(text: String): Array[Byte] = {
     val xml = "<?xml version=\"1.0\"?><w:document xmlns:w=\"http://schemas" +

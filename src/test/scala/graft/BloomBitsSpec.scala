@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,13 +7,7 @@ import graft.functions.BloomBits
 
 /** The distributed Bloom-filter aggregate: bit layout, cross-partition
   * merge, the no-false-negative guarantee, and the analysis-time guards. */
-class BloomBitsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class BloomBitsSpec extends AnyFunSuite with LocalSpark {
 
   import spark.implicits._
 

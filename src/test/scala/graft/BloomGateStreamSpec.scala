@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,13 +13,7 @@ import graft.streaming.Pipelines
   * the stream's verdicts match an exact in-JVM replay of the same bucket
   * formulas (no false negatives; duplicate files rejected, novel ones
   * admitted). */
-class BloomGateStreamSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class BloomGateStreamSpec extends AnyFunSuite with LocalSpark {
 
   private val M = 1 << 16
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.batch.Bpe
@@ -10,13 +9,7 @@ import graft.batch.Bpe
   * partition-count independence (the distributed argmax must not depend on
   * how the corpus is split).
   */
-class BpeSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class BpeSpec extends AnyFunSuite with LocalSpark {
 
   test("mergePair fuses left-to-right, non-overlapping") {
     assert(Bpe.mergePair(IndexedSeq("l", "o", "w"), "l", "o") ===

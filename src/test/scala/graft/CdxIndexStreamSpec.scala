@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.Warc
@@ -12,13 +11,7 @@ import graft.streaming.Pipelines
   * dropped into a watched directory come out as per-record index rows
   * whose extents really slice (x169's contract); junk archives emit a
   * quarantine row instead of vanishing. */
-class CdxIndexStreamSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CdxIndexStreamSpec extends AnyFunSuite with LocalSpark {
 
   test("watched archives stream out as sliceable index rows") {
     val dir = Files.createTempDirectory("cdx_stream").toFile

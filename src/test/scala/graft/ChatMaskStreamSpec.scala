@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.Pipelines
@@ -10,13 +9,7 @@ import graft.streaming.Pipelines
 /** Streaming SFT-ingest gate: chat-template loss accounting per watched
   * conversation, prompt-heavy examples flagged below the trainable-ratio
   * floor. Shares Pipelines.chatMaskStats with the x215 batch gate. */
-class ChatMaskStreamSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ChatMaskStreamSpec extends AnyFunSuite with LocalSpark {
 
   test("trainable-ratio accounting and admission per conversation") {
     val dir = Files.createTempDirectory("chatmask").toFile

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.batch.ChunkPipeline
@@ -10,13 +9,7 @@ import graft.core.Assembly
   * repartition (simulated broker shuffle) → decode → assemble, byte-identical
   * (the reference's filecmp-style e2e, test_data_file_directories.py:208-213).
   */
-class ChunkPipelineSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ChunkPipelineSpec extends AnyFunSuite with LocalSpark {
 
   test("distributed roundtrip is byte-identical under duplication and shuffle") {
     import spark.implicits._

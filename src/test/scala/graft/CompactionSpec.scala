@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.batch.Compaction
@@ -10,13 +9,7 @@ import graft.batch.Compaction
 /** Compaction: many small files rewrite into few target-sized ones with
   * identical contents; FileStreamSink dirs are refused.
   */
-class CompactionSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CompactionSpec extends AnyFunSuite with LocalSpark {
 
   test("compactDir merges small files and preserves every row") {
     import spark.implicits._

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,13 +8,7 @@ import graft.batch.Components
 /** Min-label fixpoint: converges to true connected components on graphs
   * where one propagation round under-merges (chains), handles isolated
   * nodes, and is iteration-order independent. */
-class ComponentsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ComponentsSpec extends AnyFunSuite with LocalSpark {
 
   test("chain merges to one component; isolated nodes keep themselves") {
     import spark.implicits._

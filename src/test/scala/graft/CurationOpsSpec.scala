@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.{Similarity, TextOps}
@@ -9,16 +8,9 @@ import graft.queries.{Similarity, TextOps}
   * oracle hash cannot express (it only proves both engines agree; these
   * prove the answer means what it claims). Data: sf0.001 fixtures.
   */
-class CurationOpsSpec extends AnyFunSuite {
+class CurationOpsSpec extends AnyFunSuite with LocalSpark {
 
   private val sf = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   test("x46: dup counts are bounded and the fraction is consistent") {
     import spark.implicits._

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.Pipelines
@@ -10,13 +9,7 @@ import graft.streaming.Pipelines
 /** Streaming URL decontamination: canonicalized (query-stripped) crawl URLs
   * check membership against the plan-literal eval manifest; tracking
   * parameters must not let a manifest page slip through. */
-class DecontamStreamSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class DecontamStreamSpec extends AnyFunSuite with LocalSpark {
 
   test("manifest pages block even behind tracking query strings") {
     val dir = Files.createTempDirectory("decontam").toFile

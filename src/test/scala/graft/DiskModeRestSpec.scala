@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,13 +11,7 @@ import graft.streaming.{DiskModeAssembly, RestSink}
 
 /** Disk-mode (manifest) assembly and the Girder-shaped REST sink, driven
   * against a real local HTTP server. */
-class DiskModeRestSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class DiskModeRestSpec extends AnyFunSuite with LocalSpark {
 
   test("disk-mode assembly writes files on disk, keeps only offsets in state") {
     import spark.implicits._

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, GraftColumnShim, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftColumnShim, Row}
 import org.apache.spark.sql.catalyst.expressions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -27,16 +27,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * Spark/C on negative dividends (verified in tools/compare.py's engine),
   * so only `//` differs between the engines.
   */
-class DivAuditSpec extends AnyFunSuite {
+class DivAuditSpec extends AnyFunSuite with LocalSpark {
 
   private val sf = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   /** Floor-division rewrite of a truncating IntegralDivide:
     * floor(a/b) = trunc(a/b) − 1 when the remainder is nonzero and the

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.{Archives, Emls, Epubs, Odts, Pdfs, Rtfs}
@@ -15,13 +14,7 @@ import graft.streaming.Pipelines
   * the same payload's in-archive text, and the dead-letter posture
   * (unknown extension and broken inner format keep their rows with
   * ok = false — route, don't drop). */
-class DocTextStreamSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class DocTextStreamSpec extends AnyFunSuite with LocalSpark {
 
   private def payloads: Seq[(String, Array[Byte])] = Seq(
     ("plain.txt", "loose text file".getBytes),

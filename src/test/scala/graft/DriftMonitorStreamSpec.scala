@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.Pipelines
@@ -10,13 +9,7 @@ import graft.streaming.Pipelines
 /** Streaming drift monitor: per-bucket doc counts vs a baseline histogram
   * embedded as a plan literal — volume ratios in ppm, buckets outside
   * [0.5x, 2x] flagged, unseen buckets flagged against base 0. */
-class DriftMonitorStreamSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class DriftMonitorStreamSpec extends AnyFunSuite with LocalSpark {
 
   test("bucket volumes compare against the literal baseline") {
     val dir = Files.createTempDirectory("drift_mon").toFile

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -15,14 +14,7 @@ import graft.streaming.{IdempotentParquetSink, Pipelines}
   * (IdempotentParquetSink): a replayed micro-batch (same batchId)
   * overwrites its own batch_id partition instead of duplicating rows.
   */
-class EnrichIdempotentSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class EnrichIdempotentSpec extends AnyFunSuite with LocalSpark {
 
   test("enrichStream: broadcast dim enriches each batch; left_outer null-pads") {
     import spark.implicits._
@@ -53,15 +45,13 @@ class EnrichIdempotentSpec extends AnyFunSuite {
     val dim = Seq(("en", "English")).toDF("lang", "lang_name")
     val facts = spark.range(1000).toDF("doc_id")
       .withColumn("lang", when(col("doc_id") % 2 === 0, "en").otherwise("xx"))
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    LocalSpark.withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val physical = Pipelines.enrichStream(facts, dim, Seq("lang"))
         .queryExecution.executedPlan.toString
       assert(physical.contains("BroadcastHashJoin"),
         s"expected broadcast join, got:\n$physical")
       assert(!physical.contains("SortMergeJoin"))
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("IdempotentParquetSink: replaying a batchId overwrites, not appends") {

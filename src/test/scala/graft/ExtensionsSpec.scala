@@ -7,23 +7,17 @@ import graft.functions.GraftExtensions
 
 /** The SparkSessionExtensions install path: a session built with
   * GraftExtensions resolves pack_chunk/unpack_chunk in SQL with no explicit
-  * registration call. Runs in its own suite so the fresh session (with
-  * extensions applied at build time) isn't shadowed by a cached default. */
+  * registration call. The session is private to the test: extensions apply
+  * only when a session is built, and none may reach another spec. */
 class ExtensionsSpec extends AnyFunSuite {
 
   test("withExtensions installs codec functions for SQL") {
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      // Fail loudly (no interpreted fallback) if the codec expressions'
-      // doGenCode emits Java that janino can't compile.
-      .config("spark.sql.codegen.fallback", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    try {
+    LocalSpark.isolated(SparkSession.builder()
+        // Fail loudly (no interpreted fallback) if the codec expressions'
+        // doGenCode emits Java that janino can't compile.
+        .config("spark.sql.codegen.fallback", "false")
+        .withExtensions(new GraftExtensions)
+        .getOrCreate()) { spark =>
       import spark.implicits._
       val data = "extensions payload".getBytes
       val chunk = graft.core.Chunker.chunk("e.bin", "", data, 16, Nil, Some(7.0))
@@ -148,9 +142,12 @@ class ExtensionsSpec extends AnyFunSuite {
           Array(Array(0.0f, 1.0f), Array(9.0f, 9.0f))))
         .select("vec_id", "cid").as[(Long, Long)].collect().toMap
       assert(cids == Map(1L -> 7L, 2L -> 8L))
-    } finally {
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
     }
+    // the private session ended with the block: later specs get the shared
+    // session back, and its conf never saw the fallback setting
+    val shared = LocalSpark.session
+    assert(SparkSession.getActiveSession.exists(_ eq shared))
+    assert(SparkSession.getDefaultSession.exists(_ eq shared))
+    assert(shared.conf.get("spark.sql.codegen.fallback") == "true")
   }
 }

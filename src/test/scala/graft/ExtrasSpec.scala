@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,14 +13,7 @@ import graft.streaming.{Heartbeats, ObjectStoreSink}
 
 /** Catalyst codec expressions, dead-letter routing, verified object sink,
   * heartbeat windows, and the INI config system. */
-class ExtrasSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ExtrasSpec extends AnyFunSuite with LocalSpark {
 
   test("pack_chunk/unpack_chunk Catalyst expressions roundtrip via SQL") {
     import spark.implicits._

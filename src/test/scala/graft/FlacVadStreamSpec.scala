@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.{AudioHeaders, FlacCodec}
@@ -12,13 +11,7 @@ import graft.streaming.Pipelines
   * directory match an exact batch replay of decode + windowing, the
   * energy verdict separates a flat lead-in from the hot wave, and an
   * undecodable payload routes to one quarantine row. */
-class FlacVadStreamSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class FlacVadStreamSpec extends AnyFunSuite with LocalSpark {
 
   test("stream windows == batch replay; quarantine on CRC corruption") {
     val dir = Files.createTempDirectory("flac_vad").toFile

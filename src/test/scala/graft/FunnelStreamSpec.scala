@@ -2,7 +2,6 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -15,14 +14,7 @@ import graft.streaming.FunnelStream
   * user's stream is in timestamp order — the batch/stream parity contract
   * NearDupStream set for dedup, applied to funnels.
   */
-class FunnelStreamSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class FunnelStreamSpec extends AnyFunSuite with LocalSpark {
 
   private def runStream(batches: Seq[Seq[(Long, String, Long)]]): Map[Long, Int] = {
     import spark.implicits._

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,7 +10,11 @@ import graft.functions.{GearBoundaries, GearFunctions}
   * function of the trailing maskBits characters only, so a prefix edit
   * never moves boundaries more than maskBits past it), and codegen.
   */
-class GearSpec extends AnyFunSuite {
+class GearSpec extends AnyFunSuite with LocalSpark {
+
+  // no interpreted fallback: generated code that fails to compile fails the test
+  override def withFixture(test: NoArgTest) =
+    LocalSpark.withConf("spark.sql.codegen.fallback" -> "false")(super.withFixture(test))
 
   private val maskBits = 6
 
@@ -30,13 +33,6 @@ class GearSpec extends AnyFunSuite {
       case c if c > 'z' => ' '
       case c => c
     }).mkString
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.codegen.fallback", "false")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   test("expression matches the brute-force reference (incl. empty / 1-char)") {
     import spark.implicits._

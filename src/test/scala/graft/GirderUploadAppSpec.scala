@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.app.{GirderTransferApp, UploadFileApp}
@@ -15,13 +14,7 @@ import graft.core.{ChunkCodec, Chunker}
   * [[GirderTransferApp]] (the reference's `GirderUploadStreamProcessor`)
   * consumes a chunk topic and lands every completed file on a live local
   * REST server with a registry row per file. */
-class GirderUploadAppSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class GirderUploadAppSpec extends AnyFunSuite with LocalSpark {
 
   test("UploadFileApp: one file -> topic -> download path, byte-identical") {
     import spark.implicits._

@@ -3,20 +3,13 @@ package graft
 import org.apache.logging.log4j.{Level, LogManager}
 import org.apache.logging.log4j.core.{Filter, LoggerContext}
 import org.apache.logging.log4j.message.SimpleMessage
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The harness mains' between-query hygiene stays scoped to what it must
   * touch: the unpersist sweep leaves persisted data alone while a stream
   * runs, and the log filter drops the sweep's one warning and no other. */
-class HarnessSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class HarnessSpec extends AnyFunSuite with LocalSpark {
 
   test("sweepCheckpoints skips while a stream is active, sweeps once it stops") {
     val rdd = spark.sparkContext.parallelize(1 to 10, 2).cache()

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -19,13 +18,7 @@ import graft.streaming.{AssemblyStream, DiskModeAssembly}
   * (≈1k rows), never per chunk (100k), and (c) the disk-mode state for the
   * hot file stays offset-sized rather than payload-sized — the design
   * reason DiskModeAssembly exists. */
-class HotKeyAssemblySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class HotKeyAssemblySpec extends AnyFunSuite with LocalSpark {
 
   private val HotChunks = 100000
   private val ChunkSize = 64

@@ -10,14 +10,7 @@ import graft.functions.ImageHeaders
   * builder and parser can't share a wrong offset), reject non-images, and
   * run as a native expression with codegen fallback disabled.
   */
-class ImageHeaderSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ImageHeaderSpec extends AnyFunSuite with LocalSpark {
 
   test("parse inverts build for all four formats") {
     val body = "pixels-go-here".getBytes
@@ -381,15 +374,10 @@ class ImageHeaderSpec extends AnyFunSuite {
   }
 
   test("image_header runs as a native expression with codegen fallback off") {
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val strict = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.codegen.fallback", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    try {
+    LocalSpark.isolated(SparkSession.builder()
+        .config("spark.sql.codegen.fallback", "false")
+        .withExtensions(new graft.functions.GraftExtensions)
+        .getOrCreate()) { strict =>
       import strict.implicits._
       val rows = Seq(
         (1L, ImageHeaders.buildPng(12, 34, "a".getBytes)),
@@ -401,9 +389,6 @@ class ImageHeaderSpec extends AnyFunSuite {
           if (r.isNullAt(1)) null else r.getString(1))).toMap
       assert(out(1L) == "png")
       assert(out(2L) == null)
-    } finally {
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
     }
   }
 }

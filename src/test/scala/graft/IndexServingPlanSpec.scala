@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,13 +14,7 @@ import graft.streaming.InvertedIndex
   * full posting-store rescan for document lengths. Asserted structurally
   * on the physical plan: every FileScan over the posting family carries
   * the pushed In(tok,…) filter, and the length side reads `_stats`. */
-class IndexServingPlanSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class IndexServingPlanSpec extends AnyFunSuite with LocalSpark {
 
   private val docs = Seq(
     (1L, "the quick brown fox jumps over the lazy dog"),

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,13 +14,7 @@ import graft.streaming.InvertedIndex
   * straggler), and chunking must be invisible to every read shape: the
   * merged serving index, the flat posting view, and the per-term stats
   * all equal the unchunked build. */
-class InvertedIndexChunkSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class InvertedIndexChunkSpec extends AnyFunSuite with LocalSpark {
 
   // "common" appears in all 50 docs; each "z??" in exactly one; "w?" in
   // ~7 — tokens are letter-only because the tokenizer splits on [^a-z]+

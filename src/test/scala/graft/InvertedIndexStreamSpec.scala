@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,13 +13,7 @@ import graft.streaming.InvertedIndex
   * a resumed query picks up only new arrivals, a replayed batch does not
   * double count (IdempotentParquetSink overwrite), and posting-level
   * compaction folds segments without changing the served index. */
-class InvertedIndexStreamSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class InvertedIndexStreamSpec extends AnyFunSuite with LocalSpark {
 
   private def doc(id: Long, text: String) = (id, text)
 

@@ -1,25 +1,16 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.batch.Joins
 
 /** Salted-join equivalence under skew and bucketed join shuffle elimination. */
-class JoinsSpec extends AnyFunSuite {
+class JoinsSpec extends AnyFunSuite with LocalSpark {
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // set at runtime: builder config is ignored when another suite already
-    // created the shared session
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ paths
-    s
-  }
+  // force SMJ paths, for this spec's tests only
+  override def withFixture(test: NoArgTest) =
+    LocalSpark.withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1")(super.withFixture(test))
 
   test("saltedJoin returns exactly the plain-join result under heavy skew") {
     import spark.implicits._

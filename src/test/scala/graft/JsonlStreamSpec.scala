@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.Pipelines
@@ -10,13 +9,7 @@ import graft.streaming.Pipelines
 /** Streaming JSONL ingest under the file source: lines parse through the
   * SAME jsonlParse projection as the x170 batch gate — corrupt lines
   * arrive flagged (never fatal), absent fields surface as null. */
-class JsonlStreamSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class JsonlStreamSpec extends AnyFunSuite with LocalSpark {
 
   test("watched .jsonl files stream out parsed, corrupt lines flagged") {
     val dir = Files.createTempDirectory("jsonl_stream").toFile

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -23,13 +22,7 @@ import graft.streaming.{AssemblyStream, CompletedFileWriter, Pipelines}
   * files through the chunker to a topic, consume + reassemble from that
   * topic, and require every downloaded file byte-identical to its source.
   */
-class KafkaE2eSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class KafkaE2eSpec extends AnyFunSuite with LocalSpark {
 
   private def connectorPresent: Boolean =
     try { Class.forName("org.apache.spark.sql.kafka010.KafkaSourceProvider"); true }

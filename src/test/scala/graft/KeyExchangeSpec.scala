@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.batch.ChunkPipeline
@@ -15,13 +14,7 @@ import graft.streaming.{KeyExchange, WireCrypto}
   * generation-numbered rotation, Ed25519-signed announcements and key
   * messages with fingerprint allow-lists (the signed-chain-of-trust shape),
   * feeding the WireCrypto AES data plane. */
-class KeyExchangeSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class KeyExchangeSpec extends AnyFunSuite with LocalSpark {
 
   test("HKDF-SHA256 matches the RFC 5869 appendix A.1 test vector") {
     def hex(s: String): Array[Byte] =

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.{AudioHeaders, ImageHeaders, VideoHeaders}
@@ -12,14 +11,7 @@ import graft.streaming.Pipelines
   * mixed binary payloads classified per micro-batch by the native header
   * expressions; unknown payloads are routed, not dropped.
   */
-class MediaTriageStreamSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class MediaTriageStreamSpec extends AnyFunSuite with LocalSpark {
 
   test("mixed-directory ingest triages by container and keeps unknowns") {
     val dir = Files.createTempDirectory("media_triage").toFile

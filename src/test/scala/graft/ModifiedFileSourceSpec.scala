@@ -3,7 +3,6 @@ package graft
 import java.nio.file.{Files, Path}
 import java.nio.file.attribute.FileTime
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.{DirStateOffset, ModifiedFileProvider}
@@ -11,13 +10,7 @@ import graft.sources.{DirStateOffset, ModifiedFileProvider}
 /** The modified-file re-emitting source: new files emit once, an overwrite
   * re-emits (the semantic Spark's built-in file source lacks), unchanged
   * files never repeat, and offsets round-trip through their JSON form. */
-class ModifiedFileSourceSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ModifiedFileSourceSpec extends AnyFunSuite with LocalSpark {
 
   private def write(p: Path, s: String, mtimeMs: Long): Unit = {
     Files.write(p, s.getBytes)

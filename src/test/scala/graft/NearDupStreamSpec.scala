@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,13 +10,7 @@ import graft.streaming.NearDupStream
   * against the anchor, distinct texts don't collide, and the band scheme
   * matches the batch queries' (x02) exactly.
   */
-class NearDupStreamSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class NearDupStreamSpec extends AnyFunSuite with LocalSpark {
 
   private val textA = "the quick brown fox jumps over the lazy dog tonight"
   private val textB = "completely different words appear in this other document body"

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.Pdfs
@@ -12,13 +11,7 @@ import graft.streaming.Pipelines
   * per-page text rows that match a batch replay of the same extractor,
   * and a structurally broken file surfaces as one quarantine row instead
   * of throwing or vanishing. */
-class PdfTextStreamSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PdfTextStreamSpec extends AnyFunSuite with LocalSpark {
 
   test("stream pages == batch extraction; broken file routes to quarantine") {
     val dir = Files.createTempDirectory("pdf_stream").toFile

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Blanket physical-plan audit over EVERY declared query: no query may
@@ -10,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * generated calendar, probe list). A new query that accidentally joins
   * without keys fails here instead of melting at scale.
   */
-class PlanAuditSpec extends AnyFunSuite {
+class PlanAuditSpec extends AnyFunSuite with LocalSpark {
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -66,13 +65,6 @@ class PlanAuditSpec extends AnyFunSuite {
     "x217_quality_drift", // 1-row half-totals broadcast cross join
     "x226_index_bm25", // 1-row (N, avgdl) corpus-stats broadcast cross join
     "x235_index_bm25_served") // same 1-row stats cross join, served path
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   test("no declared query plans a CartesianProduct; BNLJ only where designed") {
     val offenders = scala.collection.mutable.ListBuffer[String]()

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.{DQ, Documents, Relational, TextOps}
@@ -12,16 +11,9 @@ import graft.queries.{DQ, Documents, Relational, TextOps}
   * pipelines must stay shuffle-free. Data: the sf0.001 fixtures (plan
   * shapes, not results — results are the oracle gate's job).
   */
-class PlanShapeSpec extends AnyFunSuite {
+class PlanShapeSpec extends AnyFunSuite with LocalSpark {
 
   private val sf = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private def plan(dq: DQ): String =
     dq.run(spark, sf).queryExecution.executedPlan.toString

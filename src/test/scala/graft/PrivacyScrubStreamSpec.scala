@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.{Exif, JpegCodec}
@@ -14,13 +13,7 @@ import graft.streaming.Pipelines
   * scrubbed with pixels intact, GPS-free payloads pass through
   * byte-identical, and unscrubbable GPS-bearing TIFFs are quarantined
   * (content null, flag set). */
-class PrivacyScrubStreamSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PrivacyScrubStreamSpec extends AnyFunSuite with LocalSpark {
 
   test("watched directory: scrub, pass-through, quarantine") {
     val dir = Files.createTempDirectory("privacy_scrub").toFile

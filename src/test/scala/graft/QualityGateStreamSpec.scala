@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.Pipelines
@@ -11,13 +10,7 @@ import graft.streaming.Pipelines
   * gopherAdmit battery as the x183 batch gate — admitted docs carry their
   * integer features, rejected docs stay visible with the failing rule,
   * corrupt lines arrive flagged (never fatal). */
-class QualityGateStreamSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class QualityGateStreamSpec extends AnyFunSuite with LocalSpark {
 
   test("watched docs gate through the shared Gopher battery") {
     val dir = Files.createTempDirectory("quality_gate").toFile

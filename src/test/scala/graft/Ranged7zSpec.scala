@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,13 +14,7 @@ import graft.streaming.Pipelines
   * boundaries), and the ranged mode must ROUTE everything it cannot
   * stream — broken containers, unstreamable coders, flipped pack
   * bytes, unterminated quotes — as dead-letter rows, never silence. */
-class Ranged7zSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Ranged7zSpec extends AnyFunSuite with LocalSpark {
 
   private def esc(s: String) = s.replace("&", "&amp;").replace("<", "&lt;")
     .replace(">", "&gt;").replace("\"", "&quot;")

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -19,13 +18,7 @@ import graft.streaming.Pipelines
   * whole-file `content` column may appear anywhere in a ranged plan
   * (the ranged trio exists precisely to never hold file bytes in a
   * column). */
-class RangedPlanSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class RangedPlanSpec extends AnyFunSuite with LocalSpark {
 
   /** Root-first plan lines of the STATIC physical plan (AQE off for
     * the duration: adaptive execution re-prints each query stage's
@@ -33,13 +26,11 @@ class RangedPlanSpec extends AnyFunSuite {
     * the structure being pinned). */
   private def planLines(
       mk: => org.apache.spark.sql.DataFrame): Seq[String] = {
-    val prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    LocalSpark.withConf("spark.sql.adaptive.enabled" -> "false") {
       val df = mk // built AFTER the conf flip: the QE snapshots it
       df.collect()
       df.queryExecution.executedPlan.toString.linesIterator.toSeq
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+    }
   }
 
   test("sedumpRowsRanged: the listing spreads on path BELOW the " +

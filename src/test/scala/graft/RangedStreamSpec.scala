@@ -3,7 +3,6 @@ package graft
 import java.io.RandomAccessFile
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -18,13 +17,7 @@ import graft.streaming.Pipelines
   * surviving it (and routing it as a quarantine row) PROVES the
   * content column is pruned before any read — the property that lets
   * monoliths land in a watch dir at all. */
-class RangedStreamSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class RangedStreamSpec extends AnyFunSuite with LocalSpark {
 
   test("ranged sedump stream == batch; a sparse 3 GB non-dump routes " +
       "instead of tripping the 2 GB content bound") {

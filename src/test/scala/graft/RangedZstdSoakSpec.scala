@@ -2,7 +2,6 @@ package graft
 
 import java.io.{BufferedOutputStream, FileOutputStream}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,13 +15,7 @@ import graft.streaming.Pipelines
   * O(1) memory (the block-header walk never buffers a frame) and read
   * back record-exact through [[Pipelines.warcZstRanged]] — the file
   * the bounded column path cannot even load. */
-class RangedZstdSoakSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class RangedZstdSoakSpec extends AnyFunSuite with LocalSpark {
 
   test("a ~2.3 GiB .warc.zst scans past 2^31 in O(1) memory and reads " +
       "back record-exact through the ranged path") {

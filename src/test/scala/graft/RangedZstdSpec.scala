@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,13 +14,7 @@ import graft.streaming.Pipelines
   * dictionary-referencing frames), and damage must route the same way
   * (not-zstd → one frame = -1 row; a torn tail → the failing last
   * extent; a frame past the range cap → null-decode dead letter). */
-class RangedZstdSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class RangedZstdSpec extends AnyFunSuite with LocalSpark {
 
   private def conf = spark.sparkContext.hadoopConfiguration
 

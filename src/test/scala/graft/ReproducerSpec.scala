@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.batch.ChunkPipeline
@@ -12,13 +11,7 @@ import graft.streaming.Reproducer
   * size, chunk count, sha512, mtime, and `k: v` header lines parsed from
   * text payloads (reference data_file_stream_reproducer.py:65-297,
   * metadata_json_reproducer.py:12-98). */
-class ReproducerSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ReproducerSpec extends AnyFunSuite with LocalSpark {
 
   test("headerMeta parses leading k: v lines from text, stops at body") {
     val txt = "Instrument: XRD-7\nOperator: jd\nScan points: 120\n\nbody body".getBytes

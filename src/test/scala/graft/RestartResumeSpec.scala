@@ -3,7 +3,6 @@ package graft
 import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicBoolean
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -22,13 +21,7 @@ object FailOnce {
   val armed = new AtomicBoolean(true)
 }
 
-class RestartResumeSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class RestartResumeSpec extends AnyFunSuite with LocalSpark {
 
   test("injected failure, then restart from same checkpoint completes all files") {
     import spark.implicits._

@@ -60,8 +60,7 @@ class SafePathsSpec extends AnyFunSuite {
   }
 
   test("rejected-path accumulator counts dead-lettered rows") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.LocalSpark.session
     val acc = spark.sparkContext.longAccumulator("unsafe_paths")
     val root = Files.createTempDirectory("cfw_acc").toString
     val w = new CompletedFileWriter(root, Some(acc))

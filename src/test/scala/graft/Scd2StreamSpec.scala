@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -13,14 +12,7 @@ import graft.streaming.Scd2Stream
   * same events streamed in order — FunnelStream/NearDupStream's
   * batch/stream parity contract applied to registry history.
   */
-class Scd2StreamSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Scd2StreamSpec extends AnyFunSuite with LocalSpark {
 
   // (user_id, event_id, event_type, us)
   private def runStream(

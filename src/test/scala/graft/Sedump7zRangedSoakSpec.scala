@@ -2,7 +2,6 @@ package graft
 
 import java.io.RandomAccessFile
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -22,13 +21,7 @@ import graft.streaming.Pipelines
   * 2^31 exactly; two planted unique rows (one right at the boundary)
   * round-trip text-exact; the folder CRC (computed while writing)
   * verifies incrementally over the whole pass. */
-class Sedump7zRangedSoakSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Sedump7zRangedSoakSpec extends AnyFunSuite with LocalSpark {
 
   private def writeNum(out: java.io.ByteArrayOutputStream, v: Long): Unit = {
     // REAL_UINT64, independently re-implemented for the cross-check

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,13 +11,7 @@ import graft.streaming.Pipelines
   * table routing one quarantine row, attribute values whose decoded
   * HTML carries quotes and entities, and a dead member staying visible
   * while its siblings serve. */
-class SedumpPostsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SedumpPostsSpec extends AnyFunSuite with LocalSpark {
 
   private def esc(s: String) = s.replace("&", "&amp;").replace("<", "&lt;")
     .replace(">", "&gt;").replace("\"", "&quot;")

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,13 +13,7 @@ import graft.streaming.Pipelines
   * emit rows equal to a batch replay of the same projection —
   * including the quarantine rows, the filter-chained folders, and the
   * dictionary-referencing frames. */
-class SedumpWarcStreamSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SedumpWarcStreamSpec extends AnyFunSuite with LocalSpark {
 
   test("sedump stream == batch: posts, chained folder, torn container") {
     import spark.implicits._

@@ -2,7 +2,6 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -13,14 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * batch plan computes, with late-but-in-watermark events merging sessions
   * across microbatches.
   */
-class SessionWindowStreamSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SessionWindowStreamSpec extends AnyFunSuite with LocalSpark {
 
   private def sessionize(df: org.apache.spark.sql.DataFrame) =
     df.groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("sw"))

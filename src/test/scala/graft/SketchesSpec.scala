@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,13 +11,7 @@ import graft.batch.Sketches
   * counts (the distributed merge must preserve the bound regardless of how
   * partials combine).
   */
-class SketchesSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SketchesSpec extends AnyFunSuite with LocalSpark {
 
   test("MG sketch: presence, underestimate-only, n/(k+1) error bound") {
     import spark.implicits._

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,13 +15,7 @@ import graft.streaming.{AssemblyStream, Heartbeats}
   * the queryable proof that the reference's forever-growing
   * `files_in_progress_by_path` failure mode is fixed here, not just claimed.
   */
-class StateRegistrySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class StateRegistrySpec extends AnyFunSuite with LocalSpark {
 
   test("state metrics land in the parquet registry and shrink after eviction") {
     import spark.implicits._

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.app.StreamProcessorApp
@@ -15,13 +14,7 @@ import graft.core.{ChunkCodec, Chunker}
   * q22-shape queries identically, and a later resumed run must append new
   * batch partitions beside the compacted one without disturbing it.
   */
-class StreamProcessorAppSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class StreamProcessorAppSpec extends AnyFunSuite with LocalSpark {
 
   private def writeTopicFiles(topic: String, names: Seq[String], seed: Int): Map[String, Array[Byte]] = {
     val rnd = new scala.util.Random(seed)

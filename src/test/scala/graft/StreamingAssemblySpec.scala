@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,13 +14,7 @@ import graft.streaming.{AssemblyStream, CompletedFileWriter, Pipelines}
   * directory upload source round-trips through the disk sink
   * (the reference's e2e, test_data_file_directories.py:208-213).
   */
-class StreamingAssemblySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class StreamingAssemblySpec extends AnyFunSuite with LocalSpark {
 
   test("chunks across microbatches assemble exactly once, stale generation dropped") {
     import spark.implicits._

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,14 +12,7 @@ import graft.queries.Core
   * queries), this one spec fails with the offending column named instead of
   * 22 opaque query errors.
   */
-class TestDataSchemaSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class TestDataSchemaSpec extends AnyFunSuite with LocalSpark {
 
   val dir = "/root/testdata/sf0.001"
 

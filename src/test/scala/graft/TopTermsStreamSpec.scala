@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,13 +10,7 @@ import graft.streaming.TopTermsStream
   * carry rising generations, and the merged newest-per-shard view surfaces
   * the global heavy tokens — x84's sketch as an ingest-time monitor.
   */
-class TopTermsStreamSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class TopTermsStreamSpec extends AnyFunSuite with LocalSpark {
 
   private val K = 32
   private val SHARDS = 4

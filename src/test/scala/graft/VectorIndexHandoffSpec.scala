@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.VectorIndex
@@ -12,13 +11,7 @@ import graft.streaming.VectorIndex
   * CRASHED mid-walk) must serve generation N — complete, under its own
   * model — and never a mixed or half-swapped read. The spec injects the
   * exact torn states retrain can die in and asserts serving from each. */
-class VectorIndexHandoffSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class VectorIndexHandoffSpec extends AnyFunSuite with LocalSpark {
 
   private val Dim = 4
 

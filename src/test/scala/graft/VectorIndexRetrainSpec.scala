@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.VectorIndex
@@ -16,13 +15,7 @@ import graft.streaming.VectorIndex
   *    inverted lists, retraining recovers the true structure: nprobe=1
   *    recall against full-probe ground truth strictly improves, and the
   *    assignment-drift metric drops. */
-class VectorIndexRetrainSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class VectorIndexRetrainSpec extends AnyFunSuite with LocalSpark {
 
   private val Dim = 8
 

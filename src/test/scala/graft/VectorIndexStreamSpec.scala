@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,13 +11,7 @@ import graft.streaming.VectorIndex
   * build inverted-list segments, search over the streamed index equals
   * search over a one-shot build, new arrivals become searchable after
   * resume, and a replayed batch does not duplicate vectors. */
-class VectorIndexStreamSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class VectorIndexStreamSpec extends AnyFunSuite with LocalSpark {
 
   private val dim = 8
 

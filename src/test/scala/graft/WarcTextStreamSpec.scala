@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.Warc
@@ -12,13 +11,7 @@ import graft.streaming.Pipelines
   * and member-gzipped `.warc.gz` files dropped into a watched directory
   * come out as main-text rows through the SAME `htmlMainText`
   * projection the batch gates (x160/x164) run. */
-class WarcTextStreamSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class WarcTextStreamSpec extends AnyFunSuite with LocalSpark {
 
   test("watched directory of WARC archives yields stripped main text") {
     val dir = Files.createTempDirectory("warc_text").toFile

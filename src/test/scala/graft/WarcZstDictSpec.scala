@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,13 +13,7 @@ import graft.streaming.Pipelines
   * null-route without it), the 0x184D2A5D magic must be pinned (a
   * plain 0x…50 skippable is NOT a dictionary), and a dictionary that
   * itself ships zstd-compressed must decode transparently. */
-class WarcZstDictSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class WarcZstDictSpec extends AnyFunSuite with LocalSpark {
 
   private val boiler =
     "Header: corpus boilerplate shared across every record payload | " +

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,13 +13,7 @@ import graft.streaming.Pipelines
   * the whole-payload decoder reads straight through it, and the extent
   * walk cuts exactly one data frame per record with the skippable
   * dropped. */
-class WarcZstSinkSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class WarcZstSinkSpec extends AnyFunSuite with LocalSpark {
 
   test("leading skippable frame, frame-per-record extents, whole decode") {
     import spark.implicits._

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -17,13 +16,7 @@ import graft.streaming.Pipelines
   * index that promises a page its stream does not hold — both come
   * back as routed ok = false rows, never exceptions, never wrong
   * text. */
-class WikidumpFetchSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class WikidumpFetchSpec extends AnyFunSuite with LocalSpark {
 
   private def page(id: Long, t: String, b: String): String =
     s"<page><title>$t</title><ns>0</ns><id>$id</id>" +

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -31,13 +30,7 @@ import graft.streaming.Pipelines
   *    below the file size — O(stream), not O(file); whole-file
   *    materialization (2.2 GiB + copies) would blow the bound.
   */
-class WikidumpRangedSoakSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class WikidumpRangedSoakSpec extends AnyFunSuite with LocalSpark {
 
   private val alpha = "abcdefghijklmnopqrstuvwxyzABCDEF0123456789+/ "
 

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.Bzip2
@@ -16,13 +15,7 @@ import graft.streaming.Pipelines
   * its 64 KiB read buffer, the monolith cap (an extent past
   * `maxExtentBytes` quarantines instead of allocating), and an
   * unreadable path landing as a dead-letter row, not an exception. */
-class WikidumpRangedSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class WikidumpRangedSpec extends AnyFunSuite with LocalSpark {
 
   private def page(t: String, b: String): String =
     s"<page><title>$t</title><ns>0</ns><revision>" +

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,13 +14,7 @@ import graft.streaming.Pipelines
   * side above the exchange must never reference the whole-file
   * `content` column — that column ending up post-shuffle is exactly
   * the 2 GB-limit / one-task-decode failure mode this layer removes. */
-class WikidumpSplitPlanSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class WikidumpSplitPlanSpec extends AnyFunSuite with LocalSpark {
 
   private def page(t: String): String =
     s"<page><title>$t</title><revision><text bytes=\"0\">body of $t" +

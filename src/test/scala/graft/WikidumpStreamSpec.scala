@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.Bzip2
@@ -18,13 +17,7 @@ import graft.streaming.Pipelines
   * EXTENT, a page fragment spanning a stream boundary (nonconforming
   * input — the published multistream format aligns pages to streams)
   * quarantines BOTH touched extents, and partial pages never flow. */
-class WikidumpStreamSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class WikidumpStreamSpec extends AnyFunSuite with LocalSpark {
 
   private def page(t: String, b: String): String =
     s"<page><title>$t</title><ns>0</ns><revision>" +

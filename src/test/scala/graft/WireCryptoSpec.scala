@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.batch.ChunkPipeline
@@ -13,13 +12,7 @@ import graft.streaming.WireCrypto
   * dead-letter routing (reference CompoundSerDes serialization.py:16-160;
   * ENCRYPTED_MESSAGES dump data_file_download_directory.py:108-136), and
   * the S6 re-produce tool over the dumped key/value .bin pairs. */
-class WireCryptoSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class WireCryptoSpec extends AnyFunSuite with LocalSpark {
 
   private val keyA = "0123456789abcdef".getBytes("UTF-8") // 16-byte AES key
   private val keyB = "fedcba9876543210".getBytes("UTF-8")
