@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
+
 /** Benchmark main: runs every declared query on SPARK_GRAFT_SF_DIR and prints
   * one JSON line. Each query is executed fully via the noop sink (a bare
   * count() would let Catalyst prune projections and understate the work).
@@ -134,6 +136,11 @@ object Bench {
     }
     var rerunBudget = 10
     var rerunsUsed = 0
+    // Janino compiles in the timed window: cache misses of Spark's
+    // generated-class cache (AppSession.CodegenCacheEntries), so a change
+    // that moves code generation into or out of the timed region shows.
+    def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val compilesBefore = compiles
     val results = names.map { name =>
       val fn = wanted(name)
       def once(): (Double, Boolean) = {
@@ -172,6 +179,7 @@ object Bench {
       val stillSlow = threshold.exists(guardedMedian > _)
       (name, guardedMedian, times.forall(_._2), stillSlow)
     }
+    val codegenCompiles = compiles - compilesBefore
     // A broken query must not masquerade as a fast one: failures are null in
     // the per-query map, listed in "failed", and flip the exit code.
     // The line is kept deliberately compact (adaptive decimals, sf basename,
@@ -203,8 +211,11 @@ object Bench {
     val sampledTag = if (sampleDir.isEmpty) "" else
       results.collect { case (k, _, _, _) if sampleQueries(k) => "\"" + shortKey(k) + "\"" }
         .mkString(""""sampled":[""", ",", "],")
+    // "tables_pinned": Core.table reads every table after its first read
+    // with the schema it inferred then, so the timed region runs no schema
+    // job; "codegen_compiles" is the Janino compile count of the timed loop.
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,$failed$outliers$rerunsTag$runsTag$sampledTag"fixtures_pretimed":true,"sf":"$sfName"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,$failed$outliers$rerunsTag$runsTag$sampledTag"fixtures_pretimed":true,"tables_pinned":true,"codegen_compiles":$codegenCompiles,"sf":"$sfName"}"""
     println(json)
     // stdout passes through sbt's logger with an [info] prefix, which breaks
     // naive line parsers — also drop the bare JSON at a well-known path.

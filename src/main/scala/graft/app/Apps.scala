@@ -103,6 +103,20 @@ object AppSession {
   def cpus(env: Map[String, String] = sys.env): Either[String, Int] =
     positiveSetting("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors, env)
 
+  /** Entries of Spark's generated-class cache (`CodeGenerator`, one per
+    * JVM; default 100). One pass of the benchmark's 13 queries generates
+    * about 160 distinct classes, and the cache is LRU, so at 100 a pass
+    * that cycles through them evicts each class before its query runs
+    * again and recompiles almost all of them (132 of 160 measured), which
+    * the JIT then compiles again. 2000 holds that working set with room
+    * for a long-lived session's many standing and batch queries. An entry
+    * holds a generated source (5 KB on average over that set, 32 KB at
+    * most) and its loaded class (2 KB of bytecode on average), so a full
+    * cache holds a few tens of MB. The cache is sized once per JVM, by the
+    * first session that generates code, so the spec session takes the
+    * value from here too (SCALE.md, "Per-query floor"). */
+  val CodegenCacheEntries: Int = 2000
+
   /** The one session builder of the program: the CLI apps, the harness
     * mains and the benchmarks all run on it. */
   def make(name: String): SparkSession = {
@@ -114,6 +128,7 @@ object AppSession {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
       // List files on the driver. Every file-stream micro-batch hands its
       // files to InMemoryFileIndex as root paths, and above this threshold
       // (default 32) Spark lists them in a job with one task per file. The

@@ -1,7 +1,13 @@
 package graft.queries
 
+import java.util.concurrent.ConcurrentHashMap
+
+import scala.util.Try
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** A declared query: a Spark-first implementation plus (when SQL-expressible)
   * an equivalent ANSI SQL oracle runnable by DuckDB over the same parquet
@@ -16,15 +22,15 @@ object Core {
   val tableNames: Seq[String] = Seq("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")
 
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
     if (name == "events") {
       // The driver has shipped events.ts as parquet INT64 TIMESTAMP(NANOS)
       // (which Spark's vectorized reader rejects outright) and, after a
       // regeneration, as TIMESTAMP(MICROS) without UTC adjustment (which
       // Spark surfaces as TIMESTAMP_NTZ). Dispatch on the read schema so
       // either vintage yields the same session-TZ-UTC TIMESTAMP column.
-      val path = s"$dir/$name.parquet"
-      val raw =
+      val raw = readParquet(spark, path) {
         try spark.read.parquet(path)
         catch {
           case e: Exception
@@ -33,6 +39,7 @@ object Core {
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
             spark.read.parquet(path)
         }
+      }
       raw.schema("ts").dataType match {
         case org.apache.spark.sql.types.LongType =>
           // Nanos as long → microsecond TIMESTAMP (integral division —
@@ -46,7 +53,47 @@ object Core {
             "timestamp_micros(timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts))"))
         case _ => raw // already TIMESTAMP
       }
-    } else spark.read.parquet(s"$dir/$name.parquet")
+    } else readParquet(spark, path)(spark.read.parquet(path))
+  }
+
+  /** A table's inferred schema and the listing it was inferred from: each
+    * entry's name, length and modification time. */
+  private final case class Pin(listing: Seq[(String, Long, Long)], schema: StructType)
+
+  /** Pins by session, then by qualified path. Weak keys: a stopped and
+    * dropped session takes its pins with it. */
+  private val pins = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[String, Pin]]())
+
+  /** Reads the parquet table at `path`. Its first read in a session runs
+    * `infer`, which lets Spark infer the schema (a footer job per read);
+    * later reads pass that schema to the reader and run no job, until the
+    * file, or an entry of the directory, changes length, modification time
+    * or name. Every read is a fresh relation with fresh attribute ids, so
+    * two reads of one table still join as a self-join; a path that cannot
+    * be listed goes to `infer` unpinned, which reports it as before. */
+  private def readParquet(spark: SparkSession, path: String)(infer: => DataFrame): DataFrame = {
+    val p = new Path(path)
+    val listed = Try {
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val st = fs.getFileStatus(p)
+      val entries = if (st.isDirectory) fs.listStatus(p).toSeq else Seq(st)
+      fs.makeQualified(p).toString ->
+        entries.map(e => (e.getPath.getName, e.getLen, e.getModificationTime)).sorted
+    }.toOption
+    listed match {
+      case None => infer
+      case Some((key, listing)) =>
+        val bySession = pins.computeIfAbsent(spark, _ => new ConcurrentHashMap[String, Pin]())
+        Option(bySession.get(key)).filter(_.listing == listing) match {
+          case Some(pin) => spark.read.schema(pin.schema).parquet(path)
+          case None =>
+            val df = infer
+            bySession.put(key, Pin(listing, df.schema))
+            df
+        }
+    }
+  }
 
   /** `chunks` derived view (FIXTURES.md §3): deterministic 64-char chunking of
     * `documents` — the relational mirror of the reference's file chunker

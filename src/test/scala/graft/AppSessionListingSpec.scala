@@ -1,12 +1,9 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -38,19 +35,10 @@ class AppSessionListingSpec extends AnyFunSuite {
     val out = root.resolve("out")
 
     LocalSpark.isolated(AppSession.make("graft-listing-spec")) { spark =>
-      val listingJobs = new AtomicInteger
-      val marker = s"listing-spec-drained-${root.getFileName}"
-      val drained = new CountDownLatch(1)
-      val listener = new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit = {
-          val desc = Option(e.properties).map(_.getProperty("spark.job.description", "")).getOrElse("")
-          if (desc.startsWith("Listing leaf files") && desc.contains(root.toString))
-            listingJobs.incrementAndGet()
-          if (desc == marker) drained.countDown()
-        }
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
+      val listingJobs = LocalSpark.jobsDuring(spark, { e =>
+        val desc = LocalSpark.description(e)
+        desc.startsWith("Listing leaf files") && desc.contains(root.toString)
+      }) {
         // one partition, hence one topic part file, per source file: the
         // consume batch then also spans more than 32 files
         spark.conf.set("spark.sql.files.maxPartitionBytes", "1")
@@ -76,23 +64,16 @@ class AppSessionListingSpec extends AnyFunSuite {
           .start()
           .awaitTermination()
         qBad.awaitTermination()
+      }
+      assert(listingJobs == 0, "file listing ran as a distributed job")
 
-        // a job posted after the round trip: once the listener has seen it,
-        // it has seen every job before it
-        spark.sparkContext.setJobDescription(marker)
-        spark.sparkContext.parallelize(Seq(1), 1).count()
-        spark.sparkContext.setJobDescription(null)
-        assert(drained.await(60, TimeUnit.SECONDS))
-        assert(listingJobs.get == 0, "file listing ran as a distributed job")
-
-        val written = Files.walk(out).iterator().asScala
-          .filter(p => Files.isRegularFile(p) && !out.relativize(p).toString.startsWith("_"))
-          .map(p => out.relativize(p).toString).toSet
-        assert(written == files.keySet)
-        files.foreach { case (rel, data) =>
-          assert(java.util.Arrays.equals(Files.readAllBytes(out.resolve(rel)), data), rel)
-        }
-      } finally spark.sparkContext.removeSparkListener(listener)
+      val written = Files.walk(out).iterator().asScala
+        .filter(p => Files.isRegularFile(p) && !out.relativize(p).toString.startsWith("_"))
+        .map(p => out.relativize(p).toString).toSet
+      assert(written == files.keySet)
+      files.foreach { case (rel, data) =>
+        assert(java.util.Arrays.equals(Files.readAllBytes(out.resolve(rel)), data), rel)
+      }
     }
   }
 
