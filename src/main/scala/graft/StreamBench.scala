@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.app.AppSession
@@ -30,8 +31,10 @@ import graft.app.AppSession
   *
   * Every reassembled byte is digest-compared with its source; a mismatch
   * fails the run — a throughput number for an incorrect pipeline is
-  * worthless. One JSON line on stdout (Bench's contract), plus a bare copy
-  * at STREAM_BENCH_LATEST.json (SPARK_GRAFT_STREAM_BENCH_OUT overrides).
+  * worthless. `codegen_compiles` is the Janino compile count of the timed
+  * phases of all scenarios. One JSON line on stdout (Bench's contract),
+  * plus a bare copy at STREAM_BENCH_LATEST.json
+  * (SPARK_GRAFT_STREAM_BENCH_OUT overrides).
   * SPARK_GRAFT_STREAM_SCALE=k scales file counts (default 1).
   */
 object StreamBench {
@@ -47,6 +50,17 @@ object StreamBench {
     val chunkSize = 128 * 1024
     val spark = AppSession.make("graft-stream-bench")
     import spark.implicits._
+
+    // Janino compiles inside the timed phases, all scenarios together
+    var compiles = 0L
+    def timed[A](f: => A): (A, Double) = {
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val t0 = System.nanoTime()
+      val a = f
+      val t = (System.nanoTime() - t0) / 1e9
+      compiles += CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+      (a, t)
+    }
 
     // (label, nFiles, bytesPerFile): 128 / 256 / 256 MB at scale 1
     val scenarios = Seq(
@@ -71,12 +85,6 @@ object StreamBench {
       val srcDigests = (0 until nFiles).map { i =>
         val n = f"f$i%05d.bin"; n -> sha256(srcDir.resolve(n))
       }.toMap
-
-      def timed[A](f: => A): (A, Double) = {
-        val t0 = System.nanoTime()
-        val a = f
-        (a, (System.nanoTime() - t0) / 1e9)
-      }
 
       // ---- produce: chunk + wire-encode into the file-backed topic
       val (_, tProduce) = timed {
@@ -164,7 +172,7 @@ object StreamBench {
     }.mkString("{", ",", "}")
     val total = results.map(r => r._4 + r._5 + r._6 + r._7 + r._8).sum
     val json =
-      s"""{"metric":"stream_total","value":${f1(total)},"unit":"sec","chunk_kb":${chunkSize / 1024},"scale":$scale,"scenarios":$js}"""
+      s"""{"metric":"stream_total","value":${f1(total)},"unit":"sec","chunk_kb":${chunkSize / 1024},"scale":$scale,"codegen_compiles":$compiles,"scenarios":$js}"""
     println(json)
     Harness.writeLatest("stream-bench",
       sys.env.getOrElse("SPARK_GRAFT_STREAM_BENCH_OUT", "STREAM_BENCH_LATEST.json"), json)

@@ -117,6 +117,25 @@ object AppSession {
     * value from here too (SCALE.md, "Per-query floor"). */
   val CodegenCacheEntries: Int = 2000
 
+  /** Settings that Spark reads only when it builds a session, or once per
+    * JVM, so they go on the builder: `spark.conf.set` on a running session
+    * does not change them. [[make]] and the spec session both apply this
+    * list, so the two cannot run with different values.
+    *
+    * `spark.sql.artifact.isolation.enabled` is off. With isolation on
+    * (Spark's default), every session, and so every streaming query's
+    * cloned session, gets its own artifact state, and its tasks run under
+    * a new `ExecutorClassLoader`. Spark's generated-class cache is keyed on
+    * the task's class loader and the source, so each query start compiled
+    * again every class the last identical query had compiled. Isolation
+    * only separates jars, files and classes that one session adds with
+    * `addArtifact` or `addJar`, and nothing in this program adds any; a
+    * deployment that does must turn it back on (SCALE.md, "One class
+    * loader per app session"). */
+  val StaticSettings: Seq[(String, String)] = Seq(
+    "spark.sql.codegen.cache.maxEntries" -> CodegenCacheEntries.toString,
+    "spark.sql.artifact.isolation.enabled" -> "false")
+
   /** The one session builder of the program: the CLI apps, the harness
     * mains and the benchmarks all run on it. */
   def make(name: String): SparkSession = {
@@ -128,7 +147,7 @@ object AppSession {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
+      .config(StaticSettings.toMap)
       // List files on the driver. Every file-stream micro-batch hands its
       // files to InMemoryFileIndex as root paths, and above this threshold
       // (default 32) Spark lists them in a job with one task per file. The

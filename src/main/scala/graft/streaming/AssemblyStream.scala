@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.batch.{AsmBuf, AssembledFile, ChunkRow}
@@ -24,6 +25,15 @@ import graft.core.Assembly
 object AssemblyStream {
 
   val DefaultTimeoutMs: Long = 15 * 60 * 1000L
+
+  /** The state encoder, built once per JVM. Spark numbers the lambda
+    * variables of a collection's serializer from a JVM-wide counter and
+    * writes the number into the generated source. It renumbers them per
+    * query in a plan's own expressions, but not in the state encoder of
+    * flatMapGroupsWithState, so an encoder derived afresh for each query
+    * gave every query start a new source for its state projection, and a
+    * Janino compile. */
+  private val AsmBufEncoder: Encoder[AsmBuf] = ExpressionEncoder[AsmBuf]()
 
   private def state2buf(rel: String, name: String, s: Assembly.State): AsmBuf =
     AsmBuf(rel, name, s.fileHash, s.nTotal, s.mtime, s.buffered, completed = false)
@@ -129,8 +139,7 @@ object AssemblyStream {
   def assemble(
       chunks: Dataset[ChunkRow],
       timeoutMs: Long = DefaultTimeoutMs): Dataset[AssembledFile] = {
-    import chunks.sparkSession.implicits._
     assembleWith[AsmBuf, AssembledFile](chunks, timeoutMs)(
-      foldRows, (_, b) => quarantineRow(b))
+      foldRows, (_, b) => quarantineRow(b))(AsmBufEncoder, Encoders.product[AssembledFile])
   }
 }

@@ -5,7 +5,8 @@ import java.nio.channels.FileChannel
 import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 import java.security.MessageDigest
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{Dataset, Encoder, Encoders}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 
 import graft.batch.ChunkRow
 import graft.core.Assembly
@@ -34,6 +35,10 @@ object DiskModeAssembly {
       mtime: Option[Double],
       offsets: Set[Long],
       completed: Boolean)
+
+  /** Built once per JVM, for the reason given at
+    * `AssemblyStream.AsmBufEncoder`: `offsets` is a collection. */
+  private val DiskStateEncoder: Encoder[DiskState] = ExpressionEncoder[DiskState]()
 
   /** Completion manifest (the output row — no payload). */
   final case class FileManifest(
@@ -157,8 +162,8 @@ object DiskModeAssembly {
       chunks: Dataset[ChunkRow],
       rootDir: String,
       timeoutMs: Long = AssemblyStream.DefaultTimeoutMs): Dataset[FileManifest] = {
-    import chunks.sparkSession.implicits._
     AssemblyStream.assembleWith[DiskState, FileManifest](chunks, timeoutMs)(
-      foldDisk(rootDir, _, _, _), expire(rootDir, _, _))
+      foldDisk(rootDir, _, _, _), expire(rootDir, _, _))(
+      DiskStateEncoder, Encoders.product[FileManifest])
   }
 }

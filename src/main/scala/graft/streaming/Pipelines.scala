@@ -24,14 +24,17 @@ object Pipelines {
     * that AQE leaves alone; `defaultParallelism` scales it with the
     * cluster (total executor cores) instead of pinning a local constant
     * — the guide §2.5 "input skew"/§2.2 posture. */
-  private def spreadBy(df: DataFrame, keys: Column*): DataFrame = {
-    // Floor at spark.sql.shuffle.partitions (ADVICE r15): under dynamic
-    // allocation defaultParallelism reflects currently-REGISTERED
+  private[graft] def spreadBy(df: DataFrame, keys: Column*): DataFrame = {
+    // Floor at an explicitly set spark.sql.shuffle.partitions: under
+    // dynamic allocation defaultParallelism reflects currently-REGISTERED
     // executors — ~2 at application start — which would re-serialize the
     // very header preads this spread exists to parallelize; the
     // shuffle-partitions conf is the operator's configured width and
-    // does not shrink with a cold cluster. Locally both are the core
-    // count, so bench plans are unchanged.
+    // does not shrink with a cold cluster. A session that never sets it
+    // reads the supplied "1" here, not Spark's default of 200, so a
+    // vanilla session spreads over defaultParallelism alone. The app
+    // session sets it to the core count, which locally equals
+    // defaultParallelism.
     val sess = df.sparkSession
     val n = math.max(sess.sparkContext.defaultParallelism,
       sess.conf.get("spark.sql.shuffle.partitions", "1").toInt)

@@ -77,6 +77,16 @@ class AppSessionListingSpec extends AnyFunSuite {
     }
   }
 
+  test("the app session and the spec session carry every static setting") {
+    assert(AppSession.StaticSettings.nonEmpty)
+    LocalSpark.isolated(AppSession.make("graft-settings-spec")) { app =>
+      AppSession.StaticSettings.foreach { case (k, v) =>
+        assert(LocalSpark.session.conf.get(k) == v, s"spec session: $k")
+        assert(app.conf.get(k) == v, s"app session: $k")
+      }
+    }
+  }
+
   test("SPARK_GRAFT_CPUS must name a positive integer") {
     Seq("1" -> 1, "4" -> 4, "32" -> 32, "007" -> 7).foreach { case (raw, n) =>
       assert(AppSession.parsePositive(raw).contains(n), raw)

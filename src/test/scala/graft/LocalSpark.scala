@@ -8,9 +8,10 @@ import org.apache.spark.sql.SparkSession
 
 /** The Spark session a spec runs on. `Test / fork` runs every spec in one
   * JVM, so there is one session, built once with one config: four task
-  * slots, four shuffle partitions, UTC, and the app session's codegen
-  * cache size (read once per JVM, so it must come from the first session
-  * that generates code). A spec that changes a SQL conf
+  * slots, four shuffle partitions, UTC, and the app session's
+  * [[graft.app.AppSession.StaticSettings]] (the codegen cache is sized
+  * once per JVM, so its size must come from the first session that
+  * generates code). A spec that changes a SQL conf
   * scopes the change with [[LocalSpark.withConf]]; a spec that needs its
   * own session builds it inside [[LocalSpark.isolated]]. */
 trait LocalSpark {
@@ -23,8 +24,7 @@ object LocalSpark {
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
-    .config("spark.sql.codegen.cache.maxEntries",
-      graft.app.AppSession.CodegenCacheEntries.toLong)
+    .config(graft.app.AppSession.StaticSettings.toMap)
     .getOrCreate()
 
   /** Runs `body` with the SQL confs `kvs` set on the shared session, then
