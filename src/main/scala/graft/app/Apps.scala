@@ -131,10 +131,20 @@ object AppSession {
     * only separates jars, files and classes that one session adds with
     * `addArtifact` or `addJar`, and nothing in this program adds any; a
     * deployment that does must turn it back on (SCALE.md, "One class
-    * loader per app session"). */
+    * loader per app session").
+    *
+    * The `file:` scheme runs on [[ShellFreeLocalFileSystem]] and
+    * [[ShellFreeLocalFs]]: Hadoop's own local filesystem starts a `chmod`
+    * or `readlink` subprocess for each step of writing a checkpoint file.
+    * Spark copies `spark.hadoop.*` into the Hadoop configuration when the
+    * SparkContext starts, so these too take effect only on the builder.
+    * Other schemes (HDFS, S3) keep their own filesystems (SCALE.md, "No
+    * subprocess per checkpoint file"). */
   val StaticSettings: Seq[(String, String)] = Seq(
     "spark.sql.codegen.cache.maxEntries" -> CodegenCacheEntries.toString,
-    "spark.sql.artifact.isolation.enabled" -> "false")
+    "spark.sql.artifact.isolation.enabled" -> "false",
+    "spark.hadoop.fs.file.impl" -> classOf[ShellFreeLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[ShellFreeLocalFs].getName)
 
   /** The one session builder of the program: the CLI apps, the harness
     * mains and the benchmarks all run on it. */

@@ -28,9 +28,7 @@ class AppSessionListingSpec extends AnyFunSuite {
       val data = new Array[Byte](500 + rnd.nextInt(3000)); rnd.nextBytes(data)
       s"d${i % 4}/f$i.bin" -> data
     }.toMap
-    files.foreach { case (rel, data) =>
-      val p = src.resolve(rel); Files.createDirectories(p.getParent); Files.write(p, data)
-    }
+    AppIngest.writeTree(src, files)
     val topic = root.resolve("topic").toString
     val out = root.resolve("out")
 
@@ -66,14 +64,7 @@ class AppSessionListingSpec extends AnyFunSuite {
         qBad.awaitTermination()
       }
       assert(listingJobs == 0, "file listing ran as a distributed job")
-
-      val written = Files.walk(out).iterator().asScala
-        .filter(p => Files.isRegularFile(p) && !out.relativize(p).toString.startsWith("_"))
-        .map(p => out.relativize(p).toString).toSet
-      assert(written == files.keySet)
-      files.foreach { case (rel, data) =>
-        assert(java.util.Arrays.equals(Files.readAllBytes(out.resolve(rel)), data), rel)
-      }
+      AppIngest.assertTree(out, files)
     }
   }
 
