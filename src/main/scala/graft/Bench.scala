@@ -153,8 +153,6 @@ object Bench {
               false
           }
         val dt = (System.nanoTime() - t0) / 1e9
-        // UNTIMED between-runs sweep — see Harness.sweepCheckpoints
-        Harness.sweepCheckpoints(spark)
         (dt, ok)
       }
       var times = (1 to runsPerQuery).map(_ => once()).toVector

@@ -42,8 +42,6 @@ object Prof {
             val t0 = System.nanoTime()
             fn(spark, sfDir).write.mode("overwrite").format("noop").save()
             val dt = (System.nanoTime() - t0) / 1e9
-            // untimed sweep, mirroring Bench
-            Harness.sweepCheckpoints(spark)
             // listener events are async (the bus drain API is private) —
             // a short settle is fine for a diagnostic tool
             Thread.sleep(300)

@@ -20,9 +20,6 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(500)
       }
-      // localCheckpoint blocks are per-invocation; sweep them so 300+
-      // queries in one JVM don't accumulate storage
-      Harness.sweepCheckpoints(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -5,8 +5,8 @@ import java.nio.file.Files
 import java.nio.file.attribute.PosixFilePermissions
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FsConstants,
-  FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FSDataInputStream, FileStatus,
+  FsConstants, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 
@@ -40,9 +40,16 @@ class ShellFreeLocalFileSystem extends LocalFileSystem(new ShellFreeRawLocalFile
 /** `fs.AbstractFileSystem.file.impl`: Hadoop's `LocalFs` over the shell-free
   * raw layer. Like `LocalFs` it roots the raw layer at `file:///` whatever
   * path URI the `FileContext` was opened with. The raw half repeats
-  * `RawLocalFs`'s overrides, whose constructors Hadoop keeps package-private. */
+  * `RawLocalFs`'s overrides, whose constructors Hadoop keeps package-private.
+  *
+  * Unlike stock `LocalFs`, a plain `open(path)` checks the `.crc` sidecar:
+  * Hadoop's `FilterFs.open(Path)` forwards it to the raw layer, past
+  * `ChecksumFs`, and it is the call Spark's checkpoint file manager reads
+  * the offset log, the commit log and sink metadata with. */
 class ShellFreeLocalFs(uri: URI, conf: Configuration)
-    extends ChecksumFs(new ShellFreeRawLocalFs(conf))
+    extends ChecksumFs(new ShellFreeRawLocalFs(conf)) {
+  override def open(f: Path): FSDataInputStream = open(f, getServerDefaults(f).getFileBufferSize)
+}
 
 private[app] class ShellFreeRawLocalFs(conf: Configuration) extends DelegateToFileSystem(
     FsConstants.LOCAL_FS_URI, new ShellFreeRawLocalFileSystem, conf, "file", false) {

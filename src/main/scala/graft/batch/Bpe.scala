@@ -71,7 +71,7 @@ object Bpe {
           // so the previous round's cached blocks can be released — without
           // this, executors pin O(rounds × corpus) dead generations
           corpus = corpus.map(s => mergePair(s, a, b)).localCheckpoint()
-          prev.unpersist()
+          Components.release(prev)
           round += 1
         case None => done = true
       }

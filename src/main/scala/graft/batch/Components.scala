@@ -1,6 +1,7 @@
 package graft.batch
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 /** Connected components by iterative min-label propagation — the transitive
@@ -15,9 +16,19 @@ import org.apache.spark.sql.functions._
   * star-shaped, so diameter stays small). The driver only orchestrates
   * plans and reads the converged count — no row data ever leaves executors.
   * Each round materializes via localCheckpoint so the lineage (and thus
-  * task size) stays constant instead of growing per iteration.
+  * task size) stays constant instead of growing per iteration; the
+  * superseded round is released once its successor has materialized.
   */
 object Components {
+
+  /** Frees the blocks of a `localCheckpoint`ed frame. `Dataset.unpersist`
+    * only drops cache-manager entries, and a local checkpoint is an RDD
+    * persisted outside it. */
+  private[batch] def release(cut: Dataset[_]): Unit =
+    cut.queryExecution.logical.foreach {
+      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ =>
+    }
 
   /** `nodes`: one column `id`. `edges`: columns `src`, `dst` (directed; pass
     * both directions for undirected closure). Returns `(id, rep)` where
@@ -101,6 +112,7 @@ object Components {
       val delta = step.filter(col("rep") < col("old"))
       changed = delta.count()
       frontier = delta.select("id", "rep")
+      release(labels)
       labels = step.select("id", "rep")
       iter += 1
     }

@@ -2155,8 +2155,8 @@ object Dataflow {
     (spark, dir) =>
       // one materialization of the (doc, band, key) table: its lineage is
       // the full JPEG/BMP body decode, and it feeds the bucket minima,
-      // the star-edge join AND the node set — localCheckpoint keeps the
-      // decode to a single pass (per-invocation; recomputed every run)
+      // the star-edge join AND the node set. A/B of the cut (CHANGES.md):
+      // cut 6.58 s, no cut 13.07 s, repartition 9.64 s
       val bands = ahashBands(spark, dir).localCheckpoint()
       val bucketMin = bands.groupBy("band", "key")
         .agg(min("doc_id").as("root"))
@@ -3386,13 +3386,12 @@ object Dataflow {
       |FROM a2n JOIN h2n ON h2n.g = a2n.g ORDER BY site""".stripMargin)) {
     (spark, dir) =>
       // sites/edges are ≤50/≤110 rows but their LINEAGE is the documents
-      // scan; without a checkpoint each of the four half-steps re-embeds
-      // the full upstream tree on BOTH its prop branches and the final
-      // a2⋈h2 join re-embeds a2's whole history inside h2's — a ~500 KB
-      // physical plan whose planning time dwarfed the data (measured
-      // round 15; guide §3.3 "planning time itself can become the
-      // bottleneck"). Checkpointing the tiny frontier after each step
-      // keeps every plan constant-size. Same integer math, same rows.
+      // scan; without cuts each of the four half-steps re-embeds the full
+      // upstream tree on BOTH its prop branches and the final a2⋈h2 join
+      // re-embeds a2's whole history inside h2's. Cutting the tiny
+      // frontier after each step keeps every plan constant-size. A/B
+      // (CHANGES.md): cuts 0.80 s, no cut 3.51 s, repartition 3.94 s;
+      // leaving out any one cut was slower (1.23 s → 1.58–1.86 s)
       val sites = spread(table(spark, dir, "documents"))
         .select((col("doc_id") % 50).as("g")).distinct().localCheckpoint()
       val edges = sites.select(col("g").as("src"), ((col("g") + 1) % 50).as("dst"))
@@ -5933,8 +5932,8 @@ object Dataflow {
         .withColumn("path",
           regexp_replace(col("path"), "-index\\.txt\\.bz2$", ".xml.bz2"))
         // materialized once: wikidumpFetch consumes idx twice (hit join +
-        // extent walk) and its lineage is the whole index-file read+decode
-        // — at 10× data that is 2 × 50k small-file bunzips saved
+        // extent walk) and its lineage is the whole index-file read+decode.
+        // A/B (CHANGES.md): cut 3.72 s, no cut 6.07 s, repartition 6.07 s
         .localCheckpoint()
       val wanted = table(spark, dir, "documents")
         .where(col("doc_id") % 11 === 0)
@@ -6200,9 +6199,6 @@ object Dataflow {
             .select(col("path"), col("content")))
         .withColumn("path",
           regexp_replace(col("path"), "-index\\.txt\\.bz2$", ".xml.bz2"))
-        // materialized once: wikidumpFetch consumes idx twice (hit join +
-        // extent walk) and its lineage is the whole index-file read+decode
-        .localCheckpoint()
       val wanted = table(spark, dir, "documents")
         .where(col("doc_id") % 9 === 0)
         .select(col("doc_id").as("page_id"))

@@ -573,16 +573,13 @@ object TextOps {
        |              <> substring(b.simhash, CAST(p AS INT), 1))) <= 2
        |GROUP BY a.doc_id ORDER BY a.doc_id""".stripMargin)) {
     (spark, dir) =>
-      // sig materializes once for its two consumers (the histogram agg and
-      // the final degree probe): its rows are two small columns but its
-      // lineage is the full tokenize+hash pass. (The round-12 note that a
-      // persist() here measured slower predates the harness unpersist
-      // sweep; re-measured round 16 WITH the sweep: checkpoint wins at
-      // 10× data where the tokenize pass dominates, flat at sf0.1.)
+      // sig is cut for its two consumers (the histogram agg and the final
+      // degree probe): two small columns whose lineage is the full
+      // tokenize+hash pass. A/B (CHANGES.md): cut 3.06 s, no cut 3.62 s,
+      // repartition 3.47 s; a cut on hist as well measured flat and went
       val sig = simhashSigs(spark, dir).localCheckpoint()
       val hist = sig.groupBy("simhash").agg(count(lit(1)).as("cnt"))
         .withColumn("iv", conv(col("simhash"), 2, 10).cast("long"))
-        .localCheckpoint() // ≤ 2^16 rows; three consumers below
       // Round 16 (§1.2 step 1): HAMMING-BALL ENUMERATION replaces the
       // 3-band histogram self-join. Banding buckets 16-bit signatures by
       // 5–6 bit prefixes — at most 64 buckets — so once the histogram
@@ -1388,9 +1385,7 @@ object TextOps {
        |JOIN documents d2 ON d2.doc_id = p.id2
        |ORDER BY id1, id2""".stripMargin)) {
     (spark, dir) =>
-      // materialized once: the tokenize→shingle→minhash pipeline fed both
-      // sides of the candidate self-join
-      val bands = lshBands(spark, dir).localCheckpoint()
+      val bands = lshBands(spark, dir)
       val a = bands.select(col("doc_id").as("id1"), col("band"), col("sig"))
       val b = bands.select(col("doc_id").as("id2"), col("band").as("band2"),
         col("sig").as("sig2"))
@@ -1678,8 +1673,9 @@ object TextOps {
       |       coalesce(a.cleaned, '') AS cleaned
       |FROM n LEFT JOIN agg a USING (doc_id) ORDER BY n.doc_id""".stripMargin)) {
     (spark, dir) =>
-      // tokenized once (localCheckpoint): t0 feeds the gram-position
-      // explode, the token posexplode AND the final length projection
+      // tokenized once (cut): t0 feeds the gram-position explode, the token
+      // posexplode AND the final length projection. A/B (CHANGES.md): cut
+      // 1.88 s, no cut 2.04 s, repartition 2.31 s
       val t0 = spread(table(spark, dir, "documents"))
         .select(col("doc_id"), Core.tokens(col("text")).as("l"))
         .localCheckpoint()
@@ -1947,7 +1943,9 @@ object TextOps {
         .agg(round(
           sum(col("tf") * log(col("total").cast("double") / col("cnt"))) /
             sum("tf"), 6).as("nll"))
-        .localCheckpoint() // feeds both the global rank and the count
+        // cut: feeds both the global rank and the count. A/B (CHANGES.md):
+        // cut 1.13 s, no cut 1.64 s, repartition 1.63 s
+        .localCheckpoint()
       val ranked = graft.batch.Joins.globalRank(scored, 32, "nll", "doc_id")
       val n = scored.agg(count(lit(1)).as("n"))
       ranked.crossJoin(broadcast(n))
@@ -2387,10 +2385,9 @@ object TextOps {
         // (doc_id, nll, n_toks) — three scalars per surviving doc, NOT the
         // token-array frame the round-15 note below rejects. Its consumers
         // are three separate evaluations (globalRank's ranged + offsets
-        // branches, the tertile count): checkpointing collapses the
-        // tokenize → dedup → tf → LM pipeline to ONE run (A/B'd round 16
-        // together with the n_toks fold: 5.6–5.8 → 3.4–3.7 s steady at
-        // local[32] sf0.1; 2.1 s in the final bench window).
+        // branches, the tertile count): the cut runs the tokenize → dedup →
+        // tf → LM pipeline once. A/B (CHANGES.md): cut 1.88 s, no cut
+        // 3.04 s, repartition 3.05 s
         .localCheckpoint()
       // stage 4: keep head+middle tertiles via the two-pass global rank
       val ranked = graft.batch.Joins.globalRank(scored, 32, "nll", "doc_id")
@@ -2672,7 +2669,9 @@ object TextOps {
         .groupBy("g")
         .agg(max(when(col("par") === 0, 1).otherwise(0)).as("has0"),
           max(when(col("par") === 1, 1).otherwise(0)).as("has1"))
-        .localCheckpoint() // feeds the Bloom bits agg AND the probe side
+        // cut: feeds the Bloom bits agg AND the probe side. A/B (CHANGES.md):
+        // cut 1.91 s, no cut 2.10 s, repartition 2.14 s
+        .localCheckpoint()
       val bits = gstat.filter(col("has0") === 1)
         .select(buckets(col("g")).as("hs"))
         .agg(BloomBits.bloomBits(col("hs"), M).as("bits"))
@@ -2840,8 +2839,9 @@ object TextOps {
       |       c AS n_pair, CAST(ppm AS BIGINT) AS pmi_p100k
       |FROM r WHERE rn <= 3 ORDER BY word, rank""".stripMargin)) {
     (spark, dir) =>
-      // tokenized once (localCheckpoint): t0 feeds the pair explode AND
-      // the unigram explode — two tokenize passes collapsed to one
+      // tokenized once (cut): t0 feeds the pair explode AND the unigram
+      // explode. A/B (CHANGES.md): both cuts 0.66 s, no cut 0.81 s,
+      // repartition 1.08 s; without this cut 0.88 s vs 0.80 s
       val t0 = spread(table(spark, dir, "documents"))
         .select(col("doc_id"), tokens(col("text")).as("l"))
         .localCheckpoint()
@@ -2874,7 +2874,9 @@ object TextOps {
         .crossJoin(broadcast(tot))
         .select(col("w1"), col("w2"), col("c"),
           expr("(c * t * 100000) div (c1 * c2)").as("ppm"))
-        .localCheckpoint() // both direction branches of the union read it
+        // cut: both direction branches of the union read it; without it
+        // 0.91 s vs 0.80 s
+        .localCheckpoint()
       val dir2 = sc.select(col("w1").as("word"), col("w2").as("nb"),
           col("c"), col("ppm"))
         .unionAll(sc.select(col("w2").as("word"), col("w1").as("nb"),
@@ -2929,8 +2931,9 @@ object TextOps {
       |       round(avg(nll), 6) AS mean_nll
       |FROM scored GROUP BY doc_id ORDER BY doc_id""".stripMargin)) {
     (spark, dir) =>
-      // tokenized once (localCheckpoint): t0 feeds the bigram explode AND
-      // the unigram explode
+      // tokenized once (cut): t0 feeds the bigram explode AND the unigram
+      // explode. A/B (CHANGES.md): both cuts 0.85 s, without this one 1.01 s,
+      // without either 1.13 s, repartition 1.28 s
       val t0 = spread(table(spark, dir, "documents"))
         .select(col("doc_id"), tokens(col("text")).as("l"))
         .localCheckpoint()
@@ -2943,7 +2946,8 @@ object TextOps {
           .stripMargin)).as("p"))
         .select(col("doc_id"), col("p.w1").as("w1"), col("p.w2").as("w2"))
         .withColumn("bk", gramKey(concat_ws(" ", col("w1"), col("w2"))))
-        .localCheckpoint() // feeds the bigram LM agg AND the scoring probe
+        // cut: feeds the bigram LM agg AND the scoring probe; without it 1.18 s
+        .localCheckpoint()
       val big = bp.groupBy("bk").agg(count(lit(1)).as("c2"))
       val toks = t0.select(explode(col("l")).as("tok"))
       val uni = toks.groupBy("tok").agg(count(lit(1)).as("c1"))
@@ -4196,11 +4200,10 @@ object TextOps {
       // the sweep's whole point is REUSE: sh feeds the candidate ground
       // truth twice and the per-doc counts once, mh feeds three band
       // schemes, kept self-joins, cand feeds both the pair union and the
-      // final scoring join. Materialize each shared frame once
-      // (localCheckpoint — per-invocation, recomputed from parquet every
-      // run) instead of re-embedding the tokenize→shingle pipeline in
-      // every consumer: the round-15 baseline plan was 270 KB of
-      // duplicated subtrees (guide §1.2 step 1, §3.3).
+      // final scoring join. Each shared frame is cut once instead of
+      // re-embedding the tokenize→shingle pipeline in every consumer. A/B
+      // (CHANGES.md): cuts 3.75 s, no cut 6.09 s, repartition 11.13 s;
+      // leaving out any one cut was slower (3.47 s → 3.56–5.12 s)
       val sh = wordShingles(spark, dir).localCheckpoint()
       val mh = minhashesFrom(sh).localCheckpoint()
       def bandsFor(bCount: Int): DataFrame = {
@@ -4462,7 +4465,8 @@ object TextOps {
       // posting array is ever materialized on the BM25 path
       // materialize the chunk rows once: bm25From consumes them twice
       // (query-term hits + the corpus doc-length precompute) and the
-      // segment pipeline (tokenize → tf → chunk) re-ran per consumer
+      // segment pipeline (tokenize → tf → chunk) re-ran per consumer.
+      // A/B (CHANGES.md): cut 1.26 s, no cut 1.86 s, repartition 1.85 s
       val segments = (0 until 3)
         .map(b => InvertedIndex.segment(docs.where(col("doc_id") % 3 === b)))
         .reduce(_ unionByName _)

@@ -73,4 +73,17 @@ class BpeSpec extends AnyFunSuite with LocalSpark {
     assert(merges.size === 3)
     assert(merges.distinct.size === 3) // three different fusions
   }
+
+  test("training keeps only the final generation of the corpus") {
+    import spark.implicits._
+    val seqs = spark.createDataset(Seq("lower", "lowest", "newer", "wider", "low", "low"))
+      .map(w => w.map(_.toString).toIndexedSeq)
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val (merges, corpus) = Bpe.train(seqs, 4)
+    val held = sc.getPersistentRDDs.keySet -- before
+    assert(merges.size > 1)
+    assert(corpus.count() == 6)
+    assert(held.size == 1, s"persisted RDDs left by ${merges.size} merges: $held")
+  }
 }

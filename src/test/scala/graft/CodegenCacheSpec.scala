@@ -31,7 +31,6 @@ class CodegenCacheSpec extends AnyFunSuite with LocalSpark {
     val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     queries.foreach { q =>
       SparkEntry.queries(q)(spark, sf).write.mode("overwrite").format("noop").save()
-      Harness.sweepCheckpoints(spark)
     }
     CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
   }

@@ -45,4 +45,18 @@ class ComponentsSpec extends AnyFunSuite with LocalSpark {
     val minOf = expect.groupBy(_._2).map { case (r, m) => r -> m.keys.min }
     assert(got == expect.map { case (k, r) => k -> minOf(r) })
   }
+
+  test("a multi-round run keeps only the edge cut and the final generation") {
+    import spark.implicits._
+    // chain 0-1-…-15: several rounds even with pointer jumping
+    val undirected = (0L until 15L).map(i => (i, i + 1))
+    val nodes = spark.createDataset(0L to 15L).toDF("id")
+    val edges = spark.createDataset(undirected ++ undirected.map(_.swap)).toDF("src", "dst")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val labels = Components.minLabelFixpoint(nodes, edges)
+    val held = sc.getPersistentRDDs.keySet -- before
+    assert(labels.as[(Long, Long)].collect().forall(_._2 == 0L))
+    assert(held.size == 2, s"persisted RDDs left by the call: $held")
+  }
 }

@@ -96,27 +96,31 @@ class ShellFreeLocalFsSpec extends AnyFunSuite with LocalSpark {
   }
 
   test("checkpoint files keep their .crc sidecar and a flipped byte raises ChecksumException") {
-    Seq(adapterConf, stockConf).foreach { conf =>
+    Seq(adapterConf -> true, stockConf -> false).foreach { case (conf, adapter) =>
       withTempDir { dir =>
         val file = dir.resolve("offsets-0")
         val data = Array.tabulate[Byte](2000)(i => (i * 7).toByte)
         // the commit path: a temporary file renamed into place
-        val out = CheckpointFileManager.create(hpath(dir), conf)
-          .createAtomic(hpath(file), overwriteIfPossible = false)
+        val manager = CheckpointFileManager.create(hpath(dir), conf)
+        val out = manager.createAtomic(hpath(file), overwriteIfPossible = false)
         out.write(data); out.close()
         assert(Files.list(dir).iterator().asScala.map(_.getFileName.toString).toSet ==
           Set("offsets-0", ".offsets-0.crc"))
-        // `FileContext.open(path)` reads past the checksum layer (Hadoop's
-        // `FilterFs` forwards it to the raw filesystem); the sized open checks
+        def readAll(in: java.io.InputStream): Array[Byte] = try in.readAllBytes() finally in.close()
         val fc = FileContext.getFileContext(local, conf)
-        def read(): Array[Byte] = {
-          val in = fc.open(hpath(file), 4096)
-          try in.readAllBytes() finally in.close()
-        }
+        def read(): Array[Byte] = readAll(fc.open(hpath(file), 4096))
+        // the read path of Spark's offset log, commit log and sink metadata
+        def readLog(): Array[Byte] = readAll(manager.open(hpath(file)))
         assert(java.util.Arrays.equals(read(), data))
+        assert(java.util.Arrays.equals(readLog(), data))
         val flipped = data.clone(); flipped(700) = (flipped(700) ^ 1).toByte
         Files.write(file, flipped)
         intercept[ChecksumException](read())
+        // stock `LocalFs` serves the manager's `FileContext.open(path)` from
+        // the raw filesystem (Hadoop's `FilterFs` forwards it past
+        // `ChecksumFs`) and hands back the flipped bytes; the adapter checks
+        if (adapter) intercept[ChecksumException](readLog())
+        else assert(java.util.Arrays.equals(readLog(), flipped))
       }
     }
   }
