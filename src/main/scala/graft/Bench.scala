@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
+
 import org.apache.spark.metrics.source.CodegenMetrics
 
 /** Benchmark main: runs every declared query on SPARK_GRAFT_SF_DIR and prints
@@ -34,7 +36,7 @@ object Bench {
     val sampleQueries = Set("x207_lsh_sweep", "x153s_image_dedup_scale")
     val sampleDir: Option[String] = sys.env.get("SPARK_GRAFT_BENCH_SAMPLE").map { _ =>
       import org.apache.spark.sql.functions.col
-      val d = java.nio.file.Files.createTempDirectory("graft_bench_sample").toString
+      val d = Files.createTempDirectory("graft_bench_sample").toString
       queries.Core.table(spark, sfDir, "documents")
         .where(col("doc_id") % 4 === 0)
         .write.mode("overwrite").parquet(s"$d/documents.parquet")
@@ -86,53 +88,17 @@ object Bench {
     // one query's median (the round-9 snapshot read x188–x191 at 3–6×
     // with none of their code changed — alphabetically consecutive, the
     // classic stall signature). When a query's median exceeds
-    // max(2.5× prior, prior + 0.5 s) against the last committed snapshot,
+    // max(2.5× prior, prior + 0.5 s) against the committed snapshots of
+    // this run's slot count (priorsAt),
     // give it up to 4 extra runs (global budget 10 across the whole
     // bench) and re-take the median: a stall washes out, a genuine
     // regression stays slow on every rerun and is reported in "outliers".
-    def parseBench(path: String): Map[String, Double] =
-      try {
-        // two shapes: our own snapshot (bare JSON line) and the driver's
-        // wrapper (escaped, possibly FRONT-TRUNCATED bench output inside
-        // a "tail" string) — unescape first, then prefer the "queries"
-        // object; when truncation ate its opening, fall back to every
-        // query-shaped key:number pair (q/x ids can't collide with the
-        // wrapper's own numeric fields, which are space-separated anyway)
-        val s = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(path)), java.nio.charset.StandardCharsets.UTF_8)
-          .replace("\\\"", "\"")
-        val qStart = s.indexOf("\"queries\":{")
-        val body =
-          if (qStart >= 0) s.substring(qStart + 11, s.indexOf('}', qStart))
-          else s
-        "\"([qx][0-9]+[a-z]?)\":([0-9.]+)".r.findAllMatchIn(body)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      } catch { case _: Exception => Map.empty }
-    // The per-query prior is the MIN across BENCH_LATEST and the newest
-    // committed driver snapshot (BENCH_r{N}.json): a snapshot taken in a
-    // stalled window must not RATCHET the baseline — round 10's x208 read
-    // 2.7 s under host load with untouched source, and a guard anchored
-    // only to that snapshot would wave the next stall through. An explicit
-    // SPARK_GRAFT_BENCH_BASELINE overrides both (exact-control semantics).
+    // An explicit SPARK_GRAFT_BENCH_BASELINE snapshot overrides the
+    // committed ones (exact-control semantics).
+    val cpus = graft.app.AppSession.cpus().fold(graft.app.AppSession.fail, identity)
     val priorTimes: Map[String, Double] = sys.env.get("SPARK_GRAFT_BENCH_BASELINE") match {
-      case Some(path) => parseBench(path)
-      case None =>
-        val driverSnap =
-          try {
-            import scala.jdk.CollectionConverters._
-            java.nio.file.Files.list(java.nio.file.Paths.get("."))
-              .iterator().asScala
-              .map(_.getFileName.toString)
-              .filter(_.matches("BENCH_r\\d+\\.json"))
-              // newest by ROUND NUMBER — a lexicographic sort would pick
-              // r99 over r100 once the zero-pad width is outgrown
-              .toSeq
-              .sortBy(n => "\\d+".r.findFirstIn(n).get.toInt)
-              .lastOption
-          } catch { case _: Exception => None }
-        val maps = ("BENCH_LATEST.json" +: driverSnap.toSeq).map(parseBench)
-        maps.flatMap(_.keys).distinct
-          .map(k => k -> maps.flatMap(_.get(k)).min).toMap
+      case Some(path) => parseBench(read(Paths.get(path)))
+      case None => priorsAt(Paths.get("."), cpus)
     }
     var rerunBudget = 10
     var rerunsUsed = 0
@@ -211,9 +177,10 @@ object Bench {
         .mkString(""""sampled":[""", ",", "],")
     // "tables_pinned": Core.table reads every table after its first read
     // with the schema it inferred then, so the timed region runs no schema
-    // job; "codegen_compiles" is the Janino compile count of the timed loop.
+    // job; "codegen_compiles" is the Janino compile count of the timed loop;
+    // "cpus" is the task slot count, which picks the guard's priors.
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,$failed$outliers$rerunsTag$runsTag$sampledTag"fixtures_pretimed":true,"tables_pinned":true,"codegen_compiles":$codegenCompiles,"sf":"$sfName"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,$failed$outliers$rerunsTag$runsTag$sampledTag"fixtures_pretimed":true,"tables_pinned":true,"codegen_compiles":$codegenCompiles,"cpus":$cpus,"sf":"$sfName"}"""
     println(json)
     // stdout passes through sbt's logger with an [info] prefix, which breaks
     // naive line parsers — also drop the bare JSON at a well-known path.
@@ -227,6 +194,58 @@ object Bench {
       s"[bench] subset run (${args.length} queries): not writing $out; set SPARK_GRAFT_BENCH_OUT to persist")
     spark.stop()
     if (results.exists(!_._3)) sys.exit(1)
+  }
+
+  /** A snapshot's text, with the round snapshots' escaped quotes undone. */
+  private def read(path: Path): String =
+    try Files.readString(path).replace("\\\"", "\"")
+    catch { case _: java.io.IOException => "" }
+
+  /** Per-query times of a snapshot. Two shapes: our own snapshot (bare JSON
+    * line) and a round snapshot's wrapper (escaped, possibly FRONT-TRUNCATED
+    * bench output inside a "tail" string, unescaped by [[read]]). Prefer the
+    * "queries" object; when truncation ate its opening, fall back to every
+    * query-shaped key:number pair (q/x ids can't collide with the wrapper's
+    * own numeric fields, which are space-separated anyway). */
+  private def parseBench(s: String): Map[String, Double] = {
+    val qStart = s.indexOf("\"queries\":{")
+    val body = if (qStart >= 0) s.substring(qStart + 11).takeWhile(_ != '}') else s
+    "\"([qx][0-9]+[a-z]?)\":([0-9.]+)".r.findAllMatchIn(body)
+      .map(m => m.group(1) -> m.group(2).toDouble).toMap
+  }
+
+  /** The task slots a snapshot was taken at: its first `"cpus"` field. */
+  private def snapshotCpus(s: String): Option[Int] =
+    "\"cpus\"\\s*:\\s*([0-9]+)".r.findFirstMatchIn(s).flatMap(_.group(1).toIntOption)
+
+  /** The variance guard's per-query priors in `dir` for a run at `cpus`
+    * task slots: the MIN across BENCH_LATEST.json and the newest committed
+    * round snapshot (BENCH_r{N}.json or BENCH_r{N}_c{M}.json), each counted
+    * only when its `"cpus"` equals `cpus`. A snapshot taken in a stalled
+    * window must not RATCHET the baseline — round 10's x208 read 2.7 s
+    * under host load with untouched source, and a guard anchored only to
+    * that snapshot would wave the next stall through. A snapshot of another
+    * slot count, or one without the field, gives no prior: at 4 slots
+    * against a `local[32]` snapshot, 6–12 unchanged queries read as stalls
+    * on every run and spent the whole rerun budget. */
+  private[graft] def priorsAt(dir: Path, cpus: Int): Map[String, Double] = {
+    import scala.jdk.CollectionConverters._
+    val Snapshot = "BENCH_r([0-9]+)(?:_c[0-9]+)?\\.json".r
+    def atCpus(name: String): Option[String] =
+      Some(read(dir.resolve(name))).filter(snapshotCpus(_).contains(cpus))
+    val names =
+      try Files.list(dir).iterator().asScala.map(_.getFileName.toString).toList
+      catch { case _: java.io.IOException => Nil }
+    // newest by ROUND NUMBER — a lexicographic sort would pick r99 over
+    // r100 once the zero-pad width is outgrown
+    val roundSnap = names
+      .collect { case n @ Snapshot(round) => (round.toInt, n) }
+      .sortBy(_._1).reverseIterator
+      .flatMap { case (_, n) => atCpus(n) }
+      .nextOption()
+    val maps = (atCpus("BENCH_LATEST.json") ++ roundSnap).toSeq.map(parseBench)
+    maps.flatMap(_.keys).distinct
+      .map(k => k -> maps.flatMap(_.get(k)).min).toMap
   }
 
   /** Test hook: the variance-guard threshold formula. */

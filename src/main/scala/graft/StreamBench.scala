@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.app.AppSession
+import graft.app.{AppSession, DownloadDirectoryApp}
 
 /** Streaming-dataflow throughput benchmark — the engine's REASON TO EXIST
   * (chunk → produce → consume → reassemble) measured end to end, which the
@@ -22,6 +22,10 @@ import graft.app.AppSession
   *     files on disk
   *   - consume_disk: topic → decode → [[graft.streaming.DiskModeAssembly]]
   *     (positioned writes, offsets-only state) → verified manifests
+  *
+  * Each consume phase is [[graft.app.DownloadDirectoryApp.run]], the path
+  * the app ships: the `_quarantine` query of
+  * [[graft.app.AppSession.consume]] runs beside the assembly query.
   *
   * Each consume phase runs twice on the same topic, once per state store
   * provider: RocksDB (`buffered_*`, `disk_*`) and the HDFS-backed default
@@ -109,27 +113,7 @@ object StreamBench {
           else
             "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
         val (_, t) = timed {
-          val wire = spark.readStream
-            .schema("key STRING, value BINARY")
-            .parquet(topicDir)
-          val chunks = graft.batch.ChunkPipeline.decode(wire)
-          val q =
-            if (disk)
-              graft.streaming.DiskModeAssembly.assemble(chunks, outDir, timeoutMs = 0)
-                .writeStream.format("parquet")
-                .option("path", s"$outDir/_manifests")
-                .option("checkpointLocation", s"$outDir/_checkpoint")
-                .trigger(Trigger.AvailableNow())
-                .start()
-            else
-              graft.streaming.AssemblyStream.assemble(chunks, timeoutMs = 0)
-                .writeStream
-                .foreach(new graft.streaming.CompletedFileWriter(outDir))
-                .outputMode("append")
-                .option("checkpointLocation", s"$outDir/_checkpoint")
-                .trigger(Trigger.AvailableNow())
-                .start()
-          q.awaitTermination()
+          DownloadDirectoryApp.run(spark, topicDir, outDir, diskMode = disk)
         }
         // correctness gate: every file byte-identical to its source
         srcDigests.foreach { case (name, want) =>

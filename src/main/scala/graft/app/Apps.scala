@@ -1,11 +1,11 @@
 package graft.app
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
-import graft.batch.ChunkRow
-import graft.core.ChunkCodec
-import graft.streaming.{AssemblyStream, CompletedFileWriter, Pipelines}
+import graft.batch.{AssembledFile, ChunkPipeline, ChunkRow}
+import graft.streaming.{AssemblyStream, CompletedFileWriter, DiskModeAssembly,
+  IdempotentParquetSink, Pipelines}
 
 /** CLI entry points mirroring the reference's console scripts
   * (openmsistream pyproject.toml:22-31): upload a directory as chunks,
@@ -13,7 +13,8 @@ import graft.streaming.{AssemblyStream, CompletedFileWriter, Pipelines}
   * completed files. The transport here is a file-backed topic (a directory
   * of parquet `(key, value)` batches) so the apps run in this offline
   * environment; `graft.streaming.Pipelines.toKafka/fromKafka` swap in the
-  * broker transport unchanged.
+  * broker transport unchanged, since every consumer decodes, quarantines
+  * and commits through [[AppSession.consume]].
   */
 object AppSession {
   def require(ok: Boolean, usage: String): Unit =
@@ -46,29 +47,39 @@ object AppSession {
       }
     }
 
-  /** Shared consume preamble: read the file-backed topic, decode with
-    * dead-letter routing, and start the `_quarantine` sink under `baseDir`
-    * — one corrupt message must never poison a checkpointed query, and
-    * every app leaves the same queryable trail. Returns the good chunks
-    * and the quarantine query to await. */
-  def consumeWithQuarantine(spark: SparkSession, topicDir: String, baseDir: String):
-      (org.apache.spark.sql.Dataset[ChunkRow],
-       org.apache.spark.sql.streaming.StreamingQuery) = {
-    import spark.implicits._
-    val wire = spark.readStream
-      .schema("key STRING, value BINARY")
-      .parquet(topicDir)
-    val decoded = graft.batch.ChunkPipeline.decodeOrDeadLetter(wire)
-    decodedWithQuarantine(decoded, baseDir)
+  /** The file-backed topic as a stream of `(key STRING, value BINARY)`
+    * wire rows: a directory of parquet batches. The broker source,
+    * [[graft.streaming.Pipelines.fromKafka]], yields the same shape. */
+  def topic(spark: SparkSession, dir: String): DataFrame =
+    spark.readStream.schema("key STRING, value BINARY").parquet(dir)
+
+  /** The consume loop of every topic consumer: decode `wire` with
+    * dead-letter routing, start the `_quarantine` sink under `baseDir`,
+    * start `sink(good chunks)` with its checkpoint at `baseDir/checkpoint`,
+    * both under `AvailableNow`, and wait for the sink, then the quarantine.
+    * One corrupt message never poisons a checkpointed query, and every
+    * consumer leaves the same queryable trail. */
+  def consume(wire: DataFrame, baseDir: String, checkpoint: String)(
+      sink: Dataset[ChunkRow] => DataStreamWriter[_]): Unit = {
+    val (good, qBad) = quarantined(wire, baseDir)
+    val q = sink(good)
+      .option("checkpointLocation", s"$baseDir/$checkpoint")
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    qBad.awaitTermination()
   }
 
-  /** Same quarantine contract for callers that pre-process the wire (e.g.
-    * decrypt) before decoding. */
-  def decodedWithQuarantine(
-      decoded: org.apache.spark.sql.Dataset[graft.batch.ChunkPipeline.DecodeResult],
-      baseDir: String):
-      (org.apache.spark.sql.Dataset[ChunkRow],
-       org.apache.spark.sql.streaming.StreamingQuery) = {
+  /** The first half of [[consume]] over the topic at `topicDir`, for a
+    * caller that starts its sink query itself: returns the good chunks and
+    * the started quarantine query to await. */
+  def consumeWithQuarantine(spark: SparkSession, topicDir: String, baseDir: String):
+      (Dataset[ChunkRow], StreamingQuery) =
+    quarantined(topic(spark, topicDir), baseDir)
+
+  private def quarantined(wire: DataFrame, baseDir: String):
+      (Dataset[ChunkRow], StreamingQuery) = {
+    val decoded = ChunkPipeline.decodeOrDeadLetter(wire)
     val spark = decoded.sparkSession
     import spark.implicits._
     val good = decoded.filter(_.error == null).map(_.chunk.get)
@@ -323,51 +334,49 @@ object DownloadDirectoryApp {
         ring.map(_._2)
       })
     val spark = AppSession.make("graft-download")
-    import spark.implicits._
-    val rawWire = spark.readStream
-      .schema("key STRING, value BINARY")
-      .parquet(topicDir)
+    run(spark, topicDir, outDir, diskMode, decryptKeys)
+    spark.stop()
+  }
+
+  /** The app body, factored for tests and benchmarks, and the one place
+    * that wires the two download sinks: [[CompletedFileWriter]] (buffered)
+    * and [[DiskModeAssembly]] with its `_manifests` (disk mode). Does not
+    * stop `spark`. */
+  def run(spark: SparkSession, topicDir: String, outDir: String,
+      diskMode: Boolean = false, decryptKeys: Option[Seq[Array[Byte]]] = None): Unit = {
+    val rawWire = AppSession.topic(spark, topicDir)
     // C4: decrypt ahead of unpack; undecryptable messages dump as key/value
     // .bin pairs (the reference's ENCRYPTED_MESSAGES/ dir) for later
     // recovery via ReproduceUndecryptableApp — they never fail the run.
-    var qEncrypted: Option[org.apache.spark.sql.streaming.StreamingQuery] = None
-    val wire = decryptKeys.fold(rawWire) { ks =>
+    val decrypted = decryptKeys.map { ks =>
       val (ok, dead) = graft.streaming.WireCrypto.splitDecryptedAny(rawWire, ks)
-      qEncrypted = Some(dead.writeStream
+      (ok, dead.writeStream
         .foreach(new graft.streaming.WireCrypto.UndecryptableDumpWriter(
           s"$outDir/_encrypted_messages"))
         .outputMode("append")
         .option("checkpointLocation", s"$outDir/_checkpoint_encrypted")
         .trigger(Trigger.AvailableNow())
         .start())
-      ok
     }
-    val (good, qBad) = AppSession.decodedWithQuarantine(
-      graft.batch.ChunkPipeline.decodeOrDeadLetter(wire), outDir)
+    val wire = decrypted.fold(rawWire)(_._1)
     // per-mode checkpoints: buffered (AsmBuf state, foreach sink) and disk
     // mode (DiskState, parquet sink) are schema-incompatible — resuming one
     // mode's checkpoint with the other fails confusingly
-    val q =
-      if (diskMode)
-        graft.streaming.DiskModeAssembly.assemble(good, outDir, timeoutMs = 0)
+    if (diskMode)
+      AppSession.consume(wire, outDir, "_checkpoint_download_disk") { good =>
+        DiskModeAssembly.assemble(good, outDir, timeoutMs = 0)
           .writeStream
           .format("parquet")
           .option("path", s"$outDir/_manifests")
-          .option("checkpointLocation", s"$outDir/_checkpoint_download_disk")
-          .trigger(Trigger.AvailableNow())
-          .start()
-      else
+      }
+    else
+      AppSession.consume(wire, outDir, "_checkpoint_download") { good =>
         AssemblyStream.assemble(good, timeoutMs = 0)
           .writeStream
           .foreach(new CompletedFileWriter(outDir))
           .outputMode("append")
-          .option("checkpointLocation", s"$outDir/_checkpoint_download")
-          .trigger(Trigger.AvailableNow())
-          .start()
-    q.awaitTermination()
-    qBad.awaitTermination()
-    qEncrypted.foreach(_.awaitTermination())
-    spark.stop()
+      }
+    decrypted.foreach(_._2.awaitTermination())
   }
 }
 
@@ -399,22 +408,19 @@ object StreamProcessorApp {
       spark, "stream-processor", s"$registryDir/_state_metrics")
     spark.streams.addListener(stateBeats)
     try {
-      val (chunks, qBad) = AppSession.consumeWithQuarantine(spark, topicDir, registryDir)
-      val processed = AssemblyStream.assemble(chunks, timeoutMs = 0)
-        .map { f =>
-          val sha = if (f.data == null) null
-            else graft.core.ChunkCodec.digestHex("SHA-256", f.data)
-          (f.rel_filepath, f.code, f.n_chunks, f.size, sha, f.file_mtime)
-        }
-        .toDF("rel_filepath", "status_code", "n_chunks", "size", "sha256", "mtime")
-      val q = processed.writeStream
-        .foreachBatch(graft.streaming.IdempotentParquetSink.writeBatch(registryDir) _)
-        .outputMode("append")
-        .option("checkpointLocation", s"$registryDir/_checkpoint_processor")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      qBad.awaitTermination()
+      AppSession.consume(AppSession.topic(spark, topicDir), registryDir,
+          "_checkpoint_processor") { chunks =>
+        AssemblyStream.assemble(chunks, timeoutMs = 0)
+          .map { f =>
+            val sha = if (f.data == null) null
+              else graft.core.ChunkCodec.digestHex("SHA-256", f.data)
+            (f.rel_filepath, f.code, f.n_chunks, f.size, sha, f.file_mtime)
+          }
+          .toDF("rel_filepath", "status_code", "n_chunks", "size", "sha256", "mtime")
+          .writeStream
+          .foreachBatch(IdempotentParquetSink.writeBatch(registryDir) _)
+          .outputMode("append")
+      }
     } finally spark.streams.removeListener(stateBeats)
     compactTarget.foreach { t =>
       val (b, a) = graft.batch.Compaction.compactBatchPartitioned(spark, registryDir, t)
@@ -548,17 +554,13 @@ object MetadataReproducerApp {
       "MetadataReproducerApp <topicDir> <outTopicDir>")
     val Array(topicDir, outTopicDir) = args: @unchecked
     val spark = AppSession.make("graft-metadata-reproducer")
-    val (good, qBad) = AppSession.consumeWithQuarantine(spark, topicDir, outTopicDir)
-    val results = graft.streaming.Reproducer.resultMessages(
-      AssemblyStream.assemble(good, timeoutMs = 0))
-    val q = results.writeStream
-      .format("parquet")
-      .option("path", outTopicDir)
-      .option("checkpointLocation", s"$outTopicDir/_checkpoint_reproducer")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    qBad.awaitTermination()
+    AppSession.consume(AppSession.topic(spark, topicDir), outTopicDir,
+        "_checkpoint_reproducer") { good =>
+      graft.streaming.Reproducer.resultMessages(AssemblyStream.assemble(good, timeoutMs = 0))
+        .writeStream
+        .format("parquet")
+        .option("path", outTopicDir)
+    }
     spark.stop()
   }
 }
@@ -636,30 +638,26 @@ object UploadFileApp {
   * .py:28-552; console entry pyproject.toml:30): consume the chunk topic,
   * reassemble, upload each completed file to the REST endpoint with
   * ensure-folder + checksum skip-if-same + bounded retry on 403/429/5xx
-  * ([[graft.streaming.RestSink]]), and append one registry row per file
-  * (rel_filepath, action, attempts, batch_id) to a parquet table —
+  * ([[graft.streaming.RestSink]]), and write one registry row per file
+  * (rel_filepath, action, attempts) to a parquet table —
   * the same consume→process→registry loop as [[ObjectStoreTransferApp]]
-  * with the REST connector as the processor. */
+  * with the REST connector as the processor. Both registries land through
+  * [[IdempotentParquetSink]], one `batch_id=N` partition per micro-batch,
+  * so a replayed batch rewrites its own rows instead of adding them again. */
 object GirderTransferApp {
   /** App body, factored for tests. Does not stop `spark`. */
   def run(spark: SparkSession, topicDir: String, baseUrl: String,
-      registryDir: String): Unit = {
-    val (good, qBad) = AppSession.consumeWithQuarantine(spark, topicDir, registryDir)
-    val q = AssemblyStream.assemble(good, timeoutMs = 0)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[graft.batch.AssembledFile],
-          batchId: Long) =>
-        graft.streaming.RestSink.upload(batch, baseUrl)
-          .withColumn("batch_id", org.apache.spark.sql.functions.lit(batchId))
-          .write.mode("append").parquet(registryDir)
-      }
-      .outputMode("append")
-      .option("checkpointLocation", s"$registryDir/_checkpoint_girder")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    qBad.awaitTermination()
-  }
+      registryDir: String): Unit =
+    AppSession.consume(AppSession.topic(spark, topicDir), registryDir,
+        "_checkpoint_girder") { good =>
+      AssemblyStream.assemble(good, timeoutMs = 0)
+        .writeStream
+        .foreachBatch { (batch: Dataset[AssembledFile], batchId: Long) =>
+          IdempotentParquetSink.writeBatch(registryDir)(
+            graft.streaming.RestSink.upload(batch, baseUrl).toDF(), batchId)
+        }
+        .outputMode("append")
+    }
 
   def main(args: Array[String]): Unit = {
     AppSession.require(args.length == 3,
@@ -676,29 +674,30 @@ object GirderTransferApp {
   * s3_buckets/s3_transfer_stream_processor.py:12-106): consume the chunk
   * topic, reassemble, put each verified file to the object store at
   * `{baseUri}/{topic}/{rel_filepath}` with read-back digest verification,
-  * and append one registry row per object (ok/failed) to a parquet table.
+  * and write one registry row per object (ok/failed) to a parquet table,
+  * partitioned by `batch_id` like [[GirderTransferApp]]'s.
   * `baseUri` is any Hadoop FS URI — file:// here, s3a://bucket in prod. */
 object ObjectStoreTransferApp {
+  /** App body, factored for tests. Does not stop `spark`. */
+  def run(spark: SparkSession, topicDir: String, baseUri: String, topic: String,
+      registryDir: String): Unit =
+    AppSession.consume(AppSession.topic(spark, topicDir), registryDir,
+        "_checkpoint_transfer") { good =>
+      AssemblyStream.assemble(good, timeoutMs = 0)
+        .writeStream
+        .foreachBatch { (batch: Dataset[AssembledFile], batchId: Long) =>
+          IdempotentParquetSink.writeBatch(registryDir)(
+            graft.streaming.ObjectStoreSink.putVerified(batch, baseUri, topic).toDF(), batchId)
+        }
+        .outputMode("append")
+    }
+
   def main(args: Array[String]): Unit = {
     AppSession.require(args.length == 4,
       "ObjectStoreTransferApp <topicDir> <baseUri> <topic> <registryDir>")
     val Array(topicDir, baseUri, topic, registryDir) = args: @unchecked
     val spark = AppSession.make("graft-objectstore-transfer")
-    val (good, qBad) = AppSession.consumeWithQuarantine(spark, topicDir, registryDir)
-    val q = AssemblyStream.assemble(good, timeoutMs = 0)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[graft.batch.AssembledFile],
-          batchId: Long) =>
-        graft.streaming.ObjectStoreSink.putVerified(batch, baseUri, topic)
-          .withColumn("batch_id", org.apache.spark.sql.functions.lit(batchId))
-          .write.mode("append").parquet(registryDir)
-      }
-      .outputMode("append")
-      .option("checkpointLocation", s"$registryDir/_checkpoint_transfer")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    qBad.awaitTermination()
+    run(spark, topicDir, baseUri, topic, registryDir)
     spark.stop()
   }
 }

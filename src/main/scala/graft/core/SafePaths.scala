@@ -11,8 +11,7 @@ import java.nio.file.{Files, Path, Paths}
   * re-roots without validation); on a multi-tenant cluster consuming from a
   * shared topic that trust is wrong, so validation is a deliberate semantic
   * addition. All file sinks ([[graft.streaming.DiskModeAssembly]],
-  * [[graft.streaming.CompletedFileWriter]],
-  * [[graft.streaming.PositionedChunkWriter]]) and key-building sinks
+  * [[graft.streaming.CompletedFileWriter]]) and key-building sinks
   * ([[graft.streaming.RestSink]], [[graft.streaming.ObjectStoreSink]]) go
   * through this one helper.
   */

@@ -1,10 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.batch.{ChunkRow, ChunkPipeline}
-import graft.core.{ChunkCodec, Chunker}
+import graft.core.Chunker
 
 /** Streaming source/sink wiring (S1–S4, K1): the reference's standing
   * dataflows as Structured Streaming plans. Kafka endpoints are plain
@@ -129,19 +129,19 @@ object Pipelines {
       .option("topic", topic)
       .option("checkpointLocation", checkpoint)
 
-  /** S4 download side: Kafka topic → hash-verified chunk rows. Offset
+  /** S4 download side: Kafka topic → `(key STRING, value BINARY)` wire
+    * rows, the shape of [[graft.app.AppSession.topic]], so a broker consumer
+    * decodes, dead-letters and commits through
+    * [[graft.app.AppSession.consume]] like every other. Offset
     * tracking/commit is the checkpoint (exactly-once within Spark). */
   def fromKafka(spark: SparkSession, servers: String, topic: String,
-      startingOffsets: String = "earliest"): Dataset[ChunkRow] = {
-    import spark.implicits._
+      startingOffsets: String = "earliest"): DataFrame =
     spark.readStream.format("kafka")
       .option("kafka.bootstrap.servers", servers)
       .option("subscribe", topic)
       .option("startingOffsets", startingOffsets)
       .load()
-      .select("value").as[Array[Byte]]
-      .map(b => ChunkRow(ChunkCodec.unpack(b)))
-  }
+      .selectExpr("CAST(key AS STRING) AS key", "value")
 
   /** Streaming exact dedup (north-star dedup over a stream): watermarked
     * drop-duplicates on the given keys — state bounded by the watermark
@@ -1918,19 +1918,5 @@ object Pipelines {
         col("frame_bytes"),
         col("p.width").as("width"), col("p.height").as("height"),
         col("p.n_px").as("n_px"), col("p.luma_sum").as("luma_sum"))
-  }
-
-  /** T4/T5 consumer-side filters: message-key regex and filepath regex
-    * (openmsistream_consumer.py:351-449). */
-  def filterChunks(chunks: Dataset[ChunkRow],
-      keyRegex: Option[String] = None,
-      filepathRegex: Option[String] = None): Dataset[ChunkRow] = {
-    import chunks.sparkSession.implicits._
-    val afterKey = keyRegex.fold(chunks) { re =>
-      chunks.filter(r => re.r.findFirstIn(r.toChunk.msgKey).isDefined)
-    }
-    filepathRegex.fold(afterKey) { re =>
-      afterKey.filter(r => re.r.findFirstIn(r.toChunk.relFilepath).isDefined)
-    }
   }
 }

@@ -1,13 +1,11 @@
 package graft.streaming
 
-import java.nio.ByteBuffer
-import java.nio.channels.FileChannel
-import java.nio.file.{Files, Path, Paths, StandardOpenOption}
+import java.nio.file.Files
 
 import org.apache.spark.sql.ForeachWriter
 import org.apache.spark.util.LongAccumulator
 
-import graft.batch.{AssembledFile, ChunkRow}
+import graft.batch.AssembledFile
 
 /** Executor-side sinks (K2 family).
   *
@@ -15,12 +13,11 @@ import graft.batch.{AssembledFile, ChunkRow}
   * data_file_stream_handler.py:57-74): idempotent under replay because the
   * content is hash-verified upstream, so a rewrite is byte-identical.
   *
-  * [[PositionedChunkWriter]] is the disk-mode path
-  * (download_data_file.py:355-372): seek to `chunk_offset_write`, write,
-  * flush — per-partition channels, one file per `rel_filepath`; partitioning
-  * by file path upstream gives single-writer-per-file without locks.
+  * The disk-mode path (download_data_file.py:355-372) is
+  * [[DiskModeAssembly]], which writes each chunk at its offset and verifies
+  * the file's hash before it reports it.
   *
-  * Both writers take an optional `rejected` [[LongAccumulator]] (register one
+  * The writer takes an optional `rejected` [[LongAccumulator]] (register one
   * via `spark.sparkContext.longAccumulator("unsafe_paths")`) so path-rejected
   * rows are a queryable driver-side signal, matching the manifest row the
   * DiskModeAssembly path emits — not just a stderr line lost in executor logs.
@@ -43,36 +40,6 @@ final class CompletedFileWriter(rootDir: String,
     }
   }
   override def close(errorOrNull: Throwable): Unit = ()
-}
-
-final class PositionedChunkWriter(rootDir: String,
-    rejected: Option[LongAccumulator] = None) extends ForeachWriter[ChunkRow] {
-  @transient private var channels: scala.collection.mutable.Map[String, FileChannel] = _
-  override def open(partitionId: Long, epochId: Long): Boolean = {
-    channels = scala.collection.mutable.Map.empty
-    true
-  }
-  private def channel(rel: String): FileChannel =
-    channels.getOrElseUpdate(rel, {
-      val target = graft.core.SafePaths.resolveUnderMkdirs(rootDir, rel)
-      FileChannel.open(target, StandardOpenOption.CREATE, StandardOpenOption.WRITE)
-    })
-  override def process(c: ChunkRow): Unit = {
-    val rel = if (c.subdir_str == null || c.subdir_str.isEmpty) c.filename
-      else s"${c.subdir_str}/${c.filename}"
-    if (graft.core.SafePaths.isSafe(rel))
-      channel(rel).write(ByteBuffer.wrap(c.data), c.chunk_offset_write)
-    else {
-      rejected.foreach(_.add(1L))
-      System.err.println(
-        s"[PositionedChunkWriter] unsafe rel_filepath skipped: '$rel'")
-    }
-  }
-  override def close(errorOrNull: Throwable): Unit = {
-    if (channels != null) channels.valuesIterator.foreach { ch =>
-      try { ch.force(false); ch.close() } catch { case _: Throwable => }
-    }
-  }
 }
 
 /** Exactly-once-over-at-least-once parquet sink for `foreachBatch`.

@@ -7,8 +7,8 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.app.AppSession
-import graft.streaming.{AssemblyStream, CompletedFileWriter, Pipelines}
+import graft.app.{AppSession, DownloadDirectoryApp}
+import graft.streaming.Pipelines
 
 /** The CLI apps' session lists file-stream micro-batches on the driver.
   * Spark hands each micro-batch's files to its file index as root paths and,
@@ -52,16 +52,7 @@ class AppSessionListingSpec extends AnyFunSuite {
           .count(_.getFileName.toString.endsWith(".parquet"))
         assert(parts > 32, s"topic holds $parts part files; the consume arm needs > 32")
 
-        val (good, qBad) = AppSession.consumeWithQuarantine(spark, topic, out.toString)
-        AssemblyStream.assemble(good, timeoutMs = 0)
-          .writeStream
-          .foreach(new CompletedFileWriter(out.toString))
-          .outputMode("append")
-          .option("checkpointLocation", s"$out/_checkpoint_download")
-          .trigger(Trigger.AvailableNow())
-          .start()
-          .awaitTermination()
-        qBad.awaitTermination()
+        DownloadDirectoryApp.run(spark, topic, out.toString)
       }
       assert(listingJobs == 0, "file listing ran as a distributed job")
       AppIngest.assertTree(out, files)

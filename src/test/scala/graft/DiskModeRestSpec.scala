@@ -126,32 +126,6 @@ class DiskModeRestSpec extends AnyFunSuite with LocalSpark {
     } finally q.stop()
   }
 
-  test("PositionedChunkWriter reconstructs files from positioned chunk writes") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val outDir = Files.createTempDirectory("graft_poswriter")
-    val rnd = new scala.util.Random(71)
-    val contents = (0 until 3).map { i =>
-      val c = new Array[Byte](300 + rnd.nextInt(2000)); rnd.nextBytes(c)
-      (s"sub$i/p$i.bin", c)
-    }
-    val chunks = contents.flatMap { case (rel, c) =>
-      val Array(sub, name) = rel.split("/")
-      scala.util.Random.shuffle(Chunker.chunk(name, sub, c, 256, Nil, None).map(ChunkRow(_)))
-    }
-    val input = MemoryStream[ChunkRow]
-    val q = input.toDS().writeStream
-      .foreach(new graft.streaming.PositionedChunkWriter(outDir.toString))
-      .outputMode("append").start()
-    try {
-      input.addData(chunks)
-      q.processAllAvailable()
-      contents.foreach { case (rel, c) =>
-        assert(Files.readAllBytes(outDir.resolve(rel)).toSeq == c.toSeq, s"$rel differs")
-      }
-    } finally q.stop()
-  }
-
   test("multimodal feature/frame-sample stages: shapes, determinism, coverage") {
     import spark.implicits._
     val rnd = new scala.util.Random(51)

@@ -4,20 +4,19 @@ import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.app.{GirderTransferApp, UploadFileApp}
-import graft.batch.ChunkRow
-import graft.core.{ChunkCodec, Chunker}
+import graft.app.{DownloadDirectoryApp, GirderTransferApp, UploadFileApp}
+import graft.core.ChunkCodec
 
 /** The two round-10 console entries, driven end-to-end:
   * [[UploadFileApp]] (the reference's `UploadDataFile` single-file
   * upload) proves byte identity through the download path, and
   * [[GirderTransferApp]] (the reference's `GirderUploadStreamProcessor`)
   * consumes a chunk topic and lands every completed file on a live local
-  * REST server with a registry row per file. */
+  * REST server with one registry row per file, also when a batch whose
+  * commit was lost is replayed. */
 class GirderUploadAppSpec extends AnyFunSuite with LocalSpark {
 
   test("UploadFileApp: one file -> topic -> download path, byte-identical") {
-    import spark.implicits._
     val base = Files.createTempDirectory("upload_file_app")
     val rnd = new scala.util.Random(97)
     val content = new Array[Byte](3000); rnd.nextBytes(content)
@@ -26,22 +25,8 @@ class GirderUploadAppSpec extends AnyFunSuite with LocalSpark {
     val topicDir = base.resolve("topic").toString
     UploadFileApp.run(spark, src.toString, topicDir, chunkSize = 512)
 
-    // the DownloadDirectoryApp consume path over the produced topic
     val outDir = base.resolve("out").toString
-    val wire = spark.readStream
-      .schema("key STRING, value BINARY")
-      .parquet(topicDir)
-    val decoded = graft.batch.ChunkPipeline.decodeOrDeadLetter(wire)
-    assert(decoded.isStreaming)
-    val good = decoded.filter(_.error == null).map(_.chunk.get)
-    val q = graft.streaming.AssemblyStream.assemble(good, timeoutMs = 0)
-      .writeStream
-      .foreach(new graft.streaming.CompletedFileWriter(outDir))
-      .outputMode("append")
-      .option("checkpointLocation", s"$outDir/_ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(120000)
+    DownloadDirectoryApp.run(spark, topicDir, outDir)
     val got = Files.readAllBytes(java.nio.file.Paths.get(outDir, "payload.bin"))
     assert(got.toSeq == content.toSeq, "downloaded bytes differ from source")
   }
@@ -75,20 +60,8 @@ class GirderUploadAppSpec extends AnyFunSuite with LocalSpark {
       val base = Files.createTempDirectory("girder_app")
       val topicDir = base.resolve("topic").toString
       val registryDir = base.resolve("registry").toString
-      val rnd = new scala.util.Random(43)
-      val files = Seq("a/f1.bin", "f2.bin").map { rel =>
-        val c = new Array[Byte](700 + rnd.nextInt(800)); rnd.nextBytes(c)
-        (rel, c)
-      }
-      val chunks = files.flatMap { case (rel, c) =>
-        val (sub, name) = rel.lastIndexOf('/') match {
-          case -1 => ("", rel)
-          case i => (rel.substring(0, i), rel.substring(i + 1))
-        }
-        Chunker.chunk(name, sub, c, 256, Nil, Some(1.0)).map(ChunkRow(_))
-      }
-      graft.batch.ChunkPipeline.encode(spark.createDataset(chunks))
-        .write.parquet(topicDir)
+      val files = randomFiles(Seq("a/f1.bin", "f2.bin"), seed = 43)
+      AppIngest.writeTopic(spark, topicDir, files)
 
       GirderTransferApp.run(spark, topicDir, srv.base, registryDir)
 
@@ -104,5 +77,31 @@ class GirderUploadAppSpec extends AnyFunSuite with LocalSpark {
         .collect().toMap
       assert(reg == Map("a/f1.bin" -> "uploaded", "f2.bin" -> "uploaded"))
     } finally srv.stop()
+  }
+
+  test("GirderTransferApp: a replayed batch leaves one registry row per file") {
+    import spark.implicits._
+    val srv = new FakeRestServer
+    try {
+      val base = Files.createTempDirectory("girder_replay")
+      val topicDir = base.resolve("topic").toString
+      val registryDir = base.resolve("registry").toString
+      val files = randomFiles((0 until 5).map(i => s"d${i % 2}/f$i.bin"), seed = 47)
+      AppIngest.writeTopic(spark, topicDir, files)
+      GirderTransferApp.run(spark, topicDir, srv.base, registryDir)
+      AppIngest.forgetLastCommit(base.resolve("registry/_checkpoint_girder"))
+      GirderTransferApp.run(spark, topicDir, srv.base, registryDir)
+      val rows = spark.read.parquet(registryDir).groupBy("rel_filepath").count()
+        .as[(String, Long)].collect().toMap
+      assert(rows == files.keySet.map(_ -> 1L).toMap)
+    } finally srv.stop()
+  }
+
+  private def randomFiles(rels: Seq[String], seed: Int): Map[String, Array[Byte]] = {
+    val rnd = new scala.util.Random(seed)
+    rels.map { rel =>
+      val c = new Array[Byte](700 + rnd.nextInt(800)); rnd.nextBytes(c)
+      rel -> c
+    }.toMap
   }
 }

@@ -5,8 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.batch.{ChunkPipeline, ChunkRow}
-import graft.core.Chunker
+import graft.app.AppSession
 import graft.streaming.{AssemblyStream, CompletedFileWriter, Pipelines}
 
 /** The S4/K1 broker contract, runnable the day a broker exists.
@@ -41,7 +40,6 @@ class KafkaE2eSpec extends AnyFunSuite with LocalSpark {
     val src = Files.createTempDirectory("graft_kafka_src")
     val out = Files.createTempDirectory("graft_kafka_out")
     val ckUp = Files.createTempDirectory("graft_kafka_ck_up").toString
-    val ckDown = Files.createTempDirectory("graft_kafka_ck_down").toString
     val rnd = new scala.util.Random(5)
     val files = (0 until 3).map { i =>
       val c = new Array[Byte](900 + rnd.nextInt(1200)); rnd.nextBytes(c)
@@ -54,16 +52,14 @@ class KafkaE2eSpec extends AnyFunSuite with LocalSpark {
       .trigger(Trigger.AvailableNow()).start()
     up.awaitTermination()
 
-    // download side: topic -> reassemble -> disk
-    val down = AssemblyStream.assemble(
-        Pipelines.fromKafka(spark, servers, topic), timeoutMs = 0)
-      .writeStream
-      .foreach(new CompletedFileWriter(out.toString))
-      .outputMode("append")
-      .option("checkpointLocation", ckDown)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    down.awaitTermination()
+    // download side: the apps' consume loop over the broker topic
+    AppSession.consume(Pipelines.fromKafka(spark, servers, topic), out.toString,
+        "_checkpoint_download") { good =>
+      AssemblyStream.assemble(good, timeoutMs = 0)
+        .writeStream
+        .foreach(new CompletedFileWriter(out.toString))
+        .outputMode("append")
+    }
 
     files.foreach { case (name, c) =>
       val written = Files.readAllBytes(out.resolve(name))

@@ -73,12 +73,6 @@ class SafePathsSpec extends AnyFunSuite {
     w.process(af("ok.bin", "ok.bin"))
     w.close(null)
     assert(acc.value == 1L)
-    val pw = new PositionedChunkWriter(root, Some(acc))
-    pw.open(0L, 0L)
-    pw.process(graft.batch.ChunkRow("evil.bin", Array[Byte](1), Array[Byte](1),
-      0L, 1, 1, "..", "", payload, Some(1.0)))
-    pw.close(null)
-    assert(acc.value == 2L)
   }
 
   test("RestSink.bodyHasSha matches the sha256 field value, not substrings") {
