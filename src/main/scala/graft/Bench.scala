@@ -66,9 +66,10 @@ object Bench {
     // is the DEFAULT so every committed snapshot carries "runs":3; set
     // SPARK_GRAFT_BENCH_N=1 for a quick single-pass profile. The JSON
     // contract is unchanged: one line, same keys; "runs" is added so a
-    // median snapshot is distinguishable from a single-run one.
-    val runsPerQuery = sys.env.get("SPARK_GRAFT_BENCH_N")
-      .flatMap(s => scala.util.Try(s.toInt).toOption).filter(_ >= 1).getOrElse(3)
+    // median snapshot is distinguishable from a single-run one. A value
+    // that is not a positive integer stops the run before it starts.
+    val runsPerQuery = graft.app.AppSession.positiveSetting("SPARK_GRAFT_BENCH_N", 3)
+      .fold(graft.app.AppSession.fail, identity)
     def median(xs: Seq[Double]): Double = {
       val s = xs.sorted
       if (s.length % 2 == 1) s(s.length / 2)

@@ -39,7 +39,8 @@ import graft.app.{AppSession, DownloadDirectoryApp}
   * phases of all scenarios. One JSON line on stdout (Bench's contract),
   * plus a bare copy at STREAM_BENCH_LATEST.json
   * (SPARK_GRAFT_STREAM_BENCH_OUT overrides).
-  * SPARK_GRAFT_STREAM_SCALE=k scales file counts (default 1).
+  * SPARK_GRAFT_STREAM_SCALE=k scales file counts (default 1); a value that
+  * is not a positive integer stops the run before it starts.
   */
 object StreamBench {
 
@@ -49,8 +50,8 @@ object StreamBench {
   }
 
   def main(args: Array[String]): Unit = {
-    val scale = sys.env.get("SPARK_GRAFT_STREAM_SCALE")
-      .flatMap(s => scala.util.Try(s.toInt).toOption).filter(_ >= 1).getOrElse(1)
+    val scale = AppSession.positiveSetting("SPARK_GRAFT_STREAM_SCALE", 1)
+      .fold(AppSession.fail, identity)
     val chunkSize = 128 * 1024
     val spark = AppSession.make("graft-stream-bench")
     import spark.implicits._

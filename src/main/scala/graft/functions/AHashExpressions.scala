@@ -2,9 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumnShim
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types._
 
 /** Perceptual average-hash (aHash) — the image-side near-dup key, the
@@ -93,34 +91,12 @@ object AHash {
 /** `image_ahash(binary)` → BIGINT perceptual hash (see [[AHash]]); null
   * for undecodable payloads. Codegen'd like the other media
   * expressions. */
-case class ImageAHash(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"image_ahash expects binary, got $other")
-  }
-
+case class ImageAHash(child: Expression) extends BinaryCodecExpression("image_ahash", LongType) {
   override def nullSafeEval(payload: Any): Any =
     AHash.ahash(payload.asInstanceOf[Array[Byte]])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val r = ctx.freshName("ahash")
-    nullSafeCodeGen(ctx, ev, b => {
-      s"""
-         |java.lang.Long $r = graft.functions.AHash.ahash($b);
-         |if ($r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = $r.longValue(); }
-       """.stripMargin
-    })
-  }
-
   override protected def withNewChildInternal(newChild: Expression): ImageAHash =
     copy(child = newChild)
-
-  override def prettyName: String = "image_ahash"
 }
 
 object ImageAHash {

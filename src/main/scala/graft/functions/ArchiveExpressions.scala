@@ -3,9 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumnShim
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -496,39 +494,16 @@ object Archives {
 /** `gunzip_bytes(binary)` → the decompressed member bytes (bounded at
   * 256 MiB); null when the payload is not gzip or the stream breaks —
   * the single-file `.txt.gz` / `.jsonl.gz` form corpora ship in. */
-case class GunzipBytes(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"gunzip_bytes expects binary, got $other")
-  }
-
+case class GunzipBytes(child: Expression)
+    extends BinaryCodecExpression("gunzip_bytes", BinaryType) {
   override def nullSafeEval(payload: Any): Any = {
     val b = payload.asInstanceOf[Array[Byte]]
     if (b.length < 2 || (b(0) & 0xff) != 0x1f || (b(1) & 0xff) != 0x8b) null
     else Archives.gunzip(b)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("gunzipBytes", this,
-      classOf[GunzipBytes].getName)
-    val r = ctx.freshName("gz")
-    nullSafeCodeGen(ctx, ev, b => {
-      s"""
-         |Object $r = $self.nullSafeEval($b);
-         |if ($r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = (byte[]) $r; }
-       """.stripMargin
-    })
-  }
-
   override protected def withNewChildInternal(newChild: Expression): GunzipBytes =
     copy(child = newChild)
-
-  override def prettyName: String = "gunzip_bytes"
 }
 
 object GunzipBytes {
@@ -540,16 +515,8 @@ object GunzipBytes {
   * usize bigint, crc_ok boolean, payload binary>>` via the central
   * directory, payloads decompressed and CRC-verified; null when no
   * EOCD/central directory parses. */
-case class ZipEntries(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ZipEntries.resultType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"zip_entries expects binary, got $other")
-  }
-
+case class ZipEntries(child: Expression)
+    extends BinaryCodecExpression("zip_entries", ZipEntries.resultType) {
   override def nullSafeEval(payload: Any): Any = {
     val es = Archives.zipEntries(payload.asInstanceOf[Array[Byte]])
     if (es == null) null
@@ -557,22 +524,8 @@ case class ZipEntries(child: Expression) extends UnaryExpression {
       UTF8String.fromString(e._1), e._2, e._3, e._4, e._5): Any))
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("zipEntries", this, classOf[ZipEntries].getName)
-    val r = ctx.freshName("zip")
-    nullSafeCodeGen(ctx, ev, b => {
-      s"""
-         |Object $r = $self.nullSafeEval($b);
-         |if ($r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $r; }
-       """.stripMargin
-    })
-  }
-
   override protected def withNewChildInternal(newChild: Expression): ZipEntries =
     copy(child = newChild)
-
-  override def prettyName: String = "zip_entries"
 }
 
 object ZipEntries {
@@ -590,16 +543,8 @@ object ZipEntries {
 /** `tar_entries(binary)` → `array<struct<name string, typeflag string,
   * size bigint, payload binary>>` for checksum-verified ustar archives;
   * null when the first header fails its checksum. */
-case class TarEntries(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = TarEntries.resultType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"tar_entries expects binary, got $other")
-  }
-
+case class TarEntries(child: Expression)
+    extends BinaryCodecExpression("tar_entries", TarEntries.resultType) {
   override def nullSafeEval(payload: Any): Any = {
     val es = Archives.tarEntries(payload.asInstanceOf[Array[Byte]])
     if (es == null) null
@@ -608,22 +553,8 @@ case class TarEntries(child: Expression) extends UnaryExpression {
       e._3, e._4): Any))
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("tarEntries", this, classOf[TarEntries].getName)
-    val r = ctx.freshName("tar")
-    nullSafeCodeGen(ctx, ev, b => {
-      s"""
-         |Object $r = $self.nullSafeEval($b);
-         |if ($r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $r; }
-       """.stripMargin
-    })
-  }
-
   override protected def withNewChildInternal(newChild: Expression): TarEntries =
     copy(child = newChild)
-
-  override def prettyName: String = "tar_entries"
 }
 
 object TarEntries {

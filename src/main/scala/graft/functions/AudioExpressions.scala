@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumnShim
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -623,16 +623,8 @@ object AudioHeaders {
   * walk) payloads; null otherwise. Codegen'd Catalyst expression — audio
   * triage of a binary column stays inside whole-stage codegen, same
   * posture as `image_header`. */
-case class AudioHeader(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = AudioHeader.resultType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"audio_header expects binary, got $other")
-  }
-
+case class AudioHeader(child: Expression)
+    extends BinaryCodecExpression("audio_header", AudioHeader.resultType) {
   override def nullSafeEval(payload: Any): Any = {
     val parsed = AudioHeaders.parse(payload.asInstanceOf[Array[Byte]])
     if (parsed == null) null
@@ -640,22 +632,8 @@ case class AudioHeader(child: Expression) extends UnaryExpression {
       parsed._4, parsed._5)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("audioHeader", this, classOf[AudioHeader].getName)
-    val r = ctx.freshName("audHdr")
-    nullSafeCodeGen(ctx, ev, b => {
-      s"""
-         |Object $r = $self.nullSafeEval($b);
-         |if ($r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = (org.apache.spark.sql.catalyst.InternalRow) $r; }
-       """.stripMargin
-    })
-  }
-
   override protected def withNewChildInternal(newChild: Expression): AudioHeader =
     copy(child = newChild)
-
-  override def prettyName: String = "audio_header"
 }
 
 object AudioHeader {
@@ -676,38 +654,16 @@ object AudioHeader {
   * library) running inside whole-stage codegen — with [[BmpPixels]] this
   * shrinks the multimodal stub to formats whose bodies genuinely need a
   * codec. */
-case class PcmStats(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = PcmStats.resultType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"pcm_stats expects binary, got $other")
-  }
-
+case class PcmStats(child: Expression)
+    extends BinaryCodecExpression("pcm_stats", PcmStats.resultType) {
   override def nullSafeEval(payload: Any): Any = {
     val p = AudioHeaders.parsePcmStats(payload.asInstanceOf[Array[Byte]])
     if (p == null) null
     else InternalRow(p._1, p._2, p._3, p._4)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("pcmStats", this, classOf[PcmStats].getName)
-    val r = ctx.freshName("pcmSt")
-    nullSafeCodeGen(ctx, ev, b => {
-      s"""
-         |Object $r = $self.nullSafeEval($b);
-         |if ($r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = (org.apache.spark.sql.catalyst.InternalRow) $r; }
-       """.stripMargin
-    })
-  }
-
   override protected def withNewChildInternal(newChild: Expression): PcmStats =
     copy(child = newChild)
-
-  override def prettyName: String = "pcm_stats"
 }
 
 object PcmStats {

@@ -2,9 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, GraftColumnShim}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types._
 
 /** AV1 codec-configuration parsing, completing the modern-crawl codec trio
@@ -159,16 +157,8 @@ object Av1 {
   * monochrome, sub_x, sub_y>` from an MP4 payload's av1C record — the AV1
   * face of `h264_meta`/`hevc_meta`: max frame dimensions out of the
   * sequence header OBU's bit syntax. Null without an av01 entry. */
-case class Av1Meta(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = Av1Meta.resultType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"av1_meta expects binary, got $other")
-  }
-
+case class Av1Meta(child: Expression)
+    extends BinaryCodecExpression("av1_meta", Av1Meta.resultType) {
   override def nullSafeEval(payload: Any): Any = {
     val m = Av1.parseMp4(payload.asInstanceOf[Array[Byte]])
     if (m == null) null
@@ -176,22 +166,8 @@ case class Av1Meta(child: Expression) extends UnaryExpression {
       m.monochrome, m.subX, m.subY)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("av1Meta", this, classOf[Av1Meta].getName)
-    val r = ctx.freshName("av1m")
-    nullSafeCodeGen(ctx, ev, b => {
-      s"""
-         |Object $r = $self.nullSafeEval($b);
-         |if ($r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = (org.apache.spark.sql.catalyst.InternalRow) $r; }
-       """.stripMargin
-    })
-  }
-
   override protected def withNewChildInternal(newChild: Expression): Av1Meta =
     copy(child = newChild)
-
-  override def prettyName: String = "av1_meta"
 }
 
 object Av1Meta {

@@ -5,9 +5,7 @@ import scala.util.control.NonFatal
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumnShim
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 
@@ -594,36 +592,13 @@ object Bzip2 {
 
 /** `bunzip_bytes(binary)` → decompressed bytes; null when the payload is
   * not bzip2 or any block fails structurally / on CRC. */
-case class BunzipBytes(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"bunzip_bytes expects binary, got $other")
-  }
-
+case class BunzipBytes(child: Expression)
+    extends BinaryCodecExpression("bunzip_bytes", BinaryType) {
   override def nullSafeEval(payload: Any): Any =
     Bzip2.decode(payload.asInstanceOf[Array[Byte]])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("bunzipBytes", this,
-      classOf[BunzipBytes].getName)
-    val r = ctx.freshName("bz")
-    nullSafeCodeGen(ctx, ev, b => {
-      s"""
-         |Object $r = $self.nullSafeEval($b);
-         |if ($r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = (byte[]) $r; }
-       """.stripMargin
-    })
-  }
-
   override protected def withNewChildInternal(newChild: Expression): BunzipBytes =
     copy(child = newChild)
-
-  override def prettyName: String = "bunzip_bytes"
 }
 
 object BunzipBytes {
@@ -649,16 +624,8 @@ object BunzipBytes {
   * CRC and quarantine, never yielding wrong bytes); at ~2^-74 per
   * aligned position that is ~4e-11 expected false cuts across a
   * 20 GB dump — documented, not defended. */
-case class Bzip2Extents(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = Bzip2Extents.resultType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"bz2_extents expects binary, got $other")
-  }
-
+case class Bzip2Extents(child: Expression)
+    extends BinaryCodecExpression("bz2_extents", Bzip2Extents.resultType) {
   override def nullSafeEval(payload: Any): Any = {
     val offs = Bzip2.streamOffsets(payload.asInstanceOf[Array[Byte]])
     if (offs == null) null
@@ -671,23 +638,8 @@ case class Bzip2Extents(child: Expression) extends UnaryExpression {
     }
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("bz2Extents", this,
-      classOf[Bzip2Extents].getName)
-    val r = ctx.freshName("ext")
-    nullSafeCodeGen(ctx, ev, b => {
-      s"""
-         |Object $r = $self.nullSafeEval($b);
-         |if ($r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $r; }
-       """.stripMargin
-    })
-  }
-
   override protected def withNewChildInternal(newChild: Expression): Bzip2Extents =
     copy(child = newChild)
-
-  override def prettyName: String = "bz2_extents"
 }
 
 object Bzip2Extents {

@@ -12,10 +12,8 @@ import graft.core.{ChunkCodec, FileChunk}
 /** Native Catalyst expressions for the chunk wire codec (C1/C2) — the
   * SURVEY §4 upgrade from the v0 udf: no Row/case-class round trip, null
   * semantics handled by `UnaryExpression.nullSafeEval`, usable from SQL via
-  * [[ChunkFunctions.register]]. `doGenCode` emits a call back into the
-  * expression object (the codec body is one opaque call, so inlining buys
-  * nothing) — unlike CodegenFallback this keeps the surrounding operators
-  * inside one WholeStageCodegen span instead of splitting the pipeline.
+  * [[ChunkFunctions.register]]. `doGenCode` calls back into the
+  * expression object, for the reason [[BinaryCodecExpression]] gives.
   */
 case class PackChunk(child: Expression) extends UnaryExpression {
   override def dataType: DataType = BinaryType
@@ -78,280 +76,87 @@ case class UnpackChunk(child: Expression) extends UnaryExpression {
 }
 
 object ChunkFunctions {
-  /** Register `pack_chunk` / `unpack_chunk` for SQL use in this session. */
+  /** One SQL function: its name, the class of the expression it builds
+    * (for `ExpressionInfo`), and the builder from its argument list. */
+  final case class SqlFunction(
+      name: String, cls: Class[_ <: Expression], build: Seq[Expression] => Expression)
+
+  /** Every SQL function of the package. [[register]] and [[GraftExtensions]]
+    * both install exactly this list. */
+  val table: Seq[SqlFunction] = Seq(
+    SqlFunction("pack_chunk", classOf[PackChunk], es => PackChunk(es.head)),
+    SqlFunction("unpack_chunk", classOf[UnpackChunk], es => UnpackChunk(es.head)),
+    SqlFunction("chunk_binary", classOf[ChunkBinary], es => ChunkBinary(es.head, es(1))),
+    SqlFunction("vec_dot", classOf[FloatVecDot], es => FloatVecDot(es.head, es(1))),
+    SqlFunction("vec_norm", classOf[FloatVecNorm], es => FloatVecNorm(es.head)),
+    SqlFunction("gear_boundaries", classOf[GearBoundaries], es => GearBoundaries(es.head, es(1))),
+    SqlFunction("image_header", classOf[ImageHeader], es => ImageHeader(es.head)),
+    SqlFunction("audio_header", classOf[AudioHeader], es => AudioHeader(es.head)),
+    SqlFunction("video_header", classOf[VideoHeader], es => VideoHeader(es.head)),
+    SqlFunction("video_tracks", classOf[VideoTracks], es => VideoTracks(es.head)),
+    SqlFunction("video_samples", classOf[VideoSamples], es => VideoSamples(es.head)),
+    SqlFunction("mkv_tracks", classOf[MkvTracks], es => MkvTracks(es.head)),
+    SqlFunction("mkv_blocks", classOf[MkvBlocks], es => MkvBlocks(es.head)),
+    SqlFunction("id3_tags", classOf[Id3Tags], es => Id3Tags(es.head)),
+    SqlFunction("exif_tags", classOf[ExifTags], es => ExifTags(es.head)),
+    SqlFunction("exif_scrub_gps", classOf[ExifScrubGps], es => ExifScrubGps(es.head)),
+    SqlFunction("image_ahash", classOf[ImageAHash], es => ImageAHash(es.head)),
+    SqlFunction("ts_packets", classOf[TsPackets], es => TsPackets(es.head)),
+    SqlFunction("ts_pes", classOf[TsPes], es => TsPes(es.head)),
+    SqlFunction("annexb_nals", classOf[AnnexbNals], es => AnnexbNals(es.head)),
+    SqlFunction("h264_sps_meta", classOf[H264SpsMeta], es => H264SpsMeta(es.head)),
+    SqlFunction("warc_records", classOf[WarcRecords], es => WarcRecords(es.head)),
+    SqlFunction("zip_entries", classOf[ZipEntries], es => ZipEntries(es.head)),
+    SqlFunction("tar_entries", classOf[TarEntries], es => TarEntries(es.head)),
+    SqlFunction("pcm_frames", classOf[PcmFrames], es => PcmFrames(es.head, es(1))),
+    SqlFunction("h264_meta", classOf[H264Meta], es => H264Meta(es.head)),
+    SqlFunction("hevc_meta", classOf[HevcMeta], es => HevcMeta(es.head)),
+    SqlFunction("av1_meta", classOf[Av1Meta], es => Av1Meta(es.head)),
+    SqlFunction("bmp_pixels", classOf[BmpPixels], es => BmpPixels(es.head)),
+    SqlFunction("png_pixels", classOf[PngPixels], es => PngPixels(es.head)),
+    SqlFunction("gif_pixels", classOf[GifPixels], es => GifPixels(es.head)),
+    SqlFunction("jpeg_pixels", classOf[JpegPixels], es => JpegPixels(es.head)),
+    SqlFunction("pcm_stats", classOf[PcmStats], es => PcmStats(es.head)),
+    SqlFunction("warc_index", classOf[WarcIndex], es => WarcIndex(es.head)),
+    SqlFunction("pdf_meta", classOf[PdfMeta], es => PdfMeta(es.head)),
+    SqlFunction("pdf_text", classOf[PdfText], es => PdfText(es.head)),
+    SqlFunction("flac_decode", classOf[FlacDecode], es => FlacDecode(es.head)),
+    SqlFunction("odt_text", classOf[OdtText], es => OdtText(es.head)),
+    SqlFunction("epub_chapters", classOf[EpubChapters], es => EpubChapters(es.head)),
+    SqlFunction("rtf_text", classOf[RtfText], es => RtfText(es.head)),
+    SqlFunction("eml_parse", classOf[EmlParse], es => EmlParse(es.head)),
+    SqlFunction("gunzip_bytes", classOf[GunzipBytes], es => GunzipBytes(es.head)),
+    SqlFunction("ods_text", classOf[OdsText], es => OdsText(es.head)),
+    SqlFunction("bunzip_bytes", classOf[BunzipBytes], es => BunzipBytes(es.head)),
+    SqlFunction("bz2_extents", classOf[Bzip2Extents], es => Bzip2Extents(es.head)),
+    SqlFunction("wikitext_plain", classOf[WikitextPlain], es => WikitextPlain(es.head)),
+    SqlFunction("zstd_bytes", classOf[ZstdBytes], es => ZstdBytes(es.head)),
+    SqlFunction("xz_bytes", classOf[XzBytes], es => XzBytes(es.head)),
+    SqlFunction("sevenz_entries", classOf[SevenZipEntries], es => SevenZipEntries(es.head)),
+    SqlFunction("zstd_extents", classOf[ZstdExtents], es => ZstdExtents(es.head)),
+    SqlFunction("zstd_dict", classOf[ZstdDictExpr], es => ZstdDictExpr(es.head)),
+    SqlFunction("zstd_bytes_dict", classOf[ZstdBytesDict], es => ZstdBytesDict(es.head, es(1))),
+    SqlFunction("odp_slides", classOf[OdpSlides], es => OdpSlides(es.head)),
+    // bloom_bits(hs, m): aggregate the array<bigint> bucket positions of
+    // each row into an m-bit Bloom set (m from a foldable int literal)
+    SqlFunction("bloom_bits", classOf[BloomBits], es =>
+      BloomBits(es.head, es(1).eval(null).asInstanceOf[Number].intValue())
+        .toAggregateExpression()))
+
+  /** Register the [[table]] for SQL use in this session. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("pack_chunk", es => PackChunk(es.head), "built-in")
-    reg.createOrReplaceTempFunction("unpack_chunk", es => UnpackChunk(es.head), "built-in")
-    reg.createOrReplaceTempFunction("chunk_binary",
-      es => ChunkBinary(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction("vec_dot",
-      es => FloatVecDot(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction("vec_norm",
-      es => FloatVecNorm(es.head), "built-in")
-    reg.createOrReplaceTempFunction("gear_boundaries",
-      es => GearBoundaries(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction("image_header",
-      es => ImageHeader(es.head), "built-in")
-    reg.createOrReplaceTempFunction("audio_header",
-      es => AudioHeader(es.head), "built-in")
-    reg.createOrReplaceTempFunction("video_header",
-      es => VideoHeader(es.head), "built-in")
-    reg.createOrReplaceTempFunction("video_tracks",
-      es => VideoTracks(es.head), "built-in")
-    reg.createOrReplaceTempFunction("video_samples",
-      es => VideoSamples(es.head), "built-in")
-    reg.createOrReplaceTempFunction("mkv_tracks",
-      es => MkvTracks(es.head), "built-in")
-    reg.createOrReplaceTempFunction("mkv_blocks",
-      es => MkvBlocks(es.head), "built-in")
-    reg.createOrReplaceTempFunction("id3_tags",
-      es => Id3Tags(es.head), "built-in")
-    reg.createOrReplaceTempFunction("exif_tags",
-      es => ExifTags(es.head), "built-in")
-    reg.createOrReplaceTempFunction("exif_scrub_gps",
-      es => ExifScrubGps(es.head), "built-in")
-    reg.createOrReplaceTempFunction("image_ahash",
-      es => ImageAHash(es.head), "built-in")
-    reg.createOrReplaceTempFunction("ts_packets",
-      es => TsPackets(es.head), "built-in")
-    reg.createOrReplaceTempFunction("ts_pes",
-      es => TsPes(es.head), "built-in")
-    reg.createOrReplaceTempFunction("annexb_nals",
-      es => AnnexbNals(es.head), "built-in")
-    reg.createOrReplaceTempFunction("h264_sps_meta",
-      es => H264SpsMeta(es.head), "built-in")
-    reg.createOrReplaceTempFunction("warc_records",
-      es => WarcRecords(es.head), "built-in")
-    reg.createOrReplaceTempFunction("zip_entries",
-      es => ZipEntries(es.head), "built-in")
-    reg.createOrReplaceTempFunction("tar_entries",
-      es => TarEntries(es.head), "built-in")
-    reg.createOrReplaceTempFunction("pcm_frames",
-      es => PcmFrames(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction("h264_meta",
-      es => H264Meta(es.head), "built-in")
-    reg.createOrReplaceTempFunction("hevc_meta",
-      es => HevcMeta(es.head), "built-in")
-    reg.createOrReplaceTempFunction("av1_meta",
-      es => Av1Meta(es.head), "built-in")
-    reg.createOrReplaceTempFunction("bmp_pixels",
-      es => BmpPixels(es.head), "built-in")
-    reg.createOrReplaceTempFunction("png_pixels",
-      es => PngPixels(es.head), "built-in")
-    reg.createOrReplaceTempFunction("gif_pixels",
-      es => GifPixels(es.head), "built-in")
-    reg.createOrReplaceTempFunction("jpeg_pixels",
-      es => JpegPixels(es.head), "built-in")
-    reg.createOrReplaceTempFunction("pcm_stats",
-      es => PcmStats(es.head), "built-in")
-    reg.createOrReplaceTempFunction("odt_text",
-      es => OdtText(es.head), "built-in")
-    reg.createOrReplaceTempFunction("epub_chapters",
-      es => EpubChapters(es.head), "built-in")
-    reg.createOrReplaceTempFunction("rtf_text",
-      es => RtfText(es.head), "built-in")
-    reg.createOrReplaceTempFunction("eml_parse",
-      es => EmlParse(es.head), "built-in")
-    reg.createOrReplaceTempFunction("gunzip_bytes",
-      es => GunzipBytes(es.head), "built-in")
-    reg.createOrReplaceTempFunction("ods_text",
-      es => OdsText(es.head), "built-in")
-    reg.createOrReplaceTempFunction("bunzip_bytes",
-      es => BunzipBytes(es.head), "built-in")
-    reg.createOrReplaceTempFunction("bz2_extents",
-      es => Bzip2Extents(es.head), "built-in")
-    reg.createOrReplaceTempFunction("wikitext_plain",
-      es => WikitextPlain(es.head), "built-in")
-    reg.createOrReplaceTempFunction("zstd_bytes",
-      es => ZstdBytes(es.head), "built-in")
-    reg.createOrReplaceTempFunction("xz_bytes",
-      es => XzBytes(es.head), "built-in")
-    reg.createOrReplaceTempFunction("sevenz_entries",
-      es => SevenZipEntries(es.head), "built-in")
-    reg.createOrReplaceTempFunction("zstd_extents",
-      es => ZstdExtents(es.head), "built-in")
-    reg.createOrReplaceTempFunction("zstd_dict",
-      es => ZstdDictExpr(es.head), "built-in")
-    reg.createOrReplaceTempFunction("zstd_bytes_dict",
-      es => ZstdBytesDict(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction("odp_slides",
-      es => OdpSlides(es.head), "built-in")
+    table.foreach(f => reg.createOrReplaceTempFunction(f.name, f.build, "built-in"))
   }
 }
 
-/** Session extension installing the codec functions at session build time —
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` or
-  * `spark.sql.extensions=graft.functions.GraftExtensions`. */
+/** Session extension installing the [[ChunkFunctions.table]] at session
+  * build time — `SparkSession.builder().withExtensions(new GraftExtensions)`
+  * or `spark.sql.extensions=graft.functions.GraftExtensions`. */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   import org.apache.spark.sql.catalyst.FunctionIdentifier
   import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-  override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    e.injectFunction((FunctionIdentifier("pack_chunk"),
-      new ExpressionInfo(classOf[PackChunk].getName, "pack_chunk"),
-      es => PackChunk(es.head)))
-    e.injectFunction((FunctionIdentifier("unpack_chunk"),
-      new ExpressionInfo(classOf[UnpackChunk].getName, "unpack_chunk"),
-      es => UnpackChunk(es.head)))
-    e.injectFunction((FunctionIdentifier("chunk_binary"),
-      new ExpressionInfo(classOf[ChunkBinary].getName, "chunk_binary"),
-      es => ChunkBinary(es.head, es(1))))
-    e.injectFunction((FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[FloatVecDot].getName, "vec_dot"),
-      es => FloatVecDot(es.head, es(1))))
-    e.injectFunction((FunctionIdentifier("vec_norm"),
-      new ExpressionInfo(classOf[FloatVecNorm].getName, "vec_norm"),
-      es => FloatVecNorm(es.head)))
-    e.injectFunction((FunctionIdentifier("gear_boundaries"),
-      new ExpressionInfo(classOf[GearBoundaries].getName, "gear_boundaries"),
-      es => GearBoundaries(es.head, es(1))))
-    e.injectFunction((FunctionIdentifier("image_header"),
-      new ExpressionInfo(classOf[ImageHeader].getName, "image_header"),
-      es => ImageHeader(es.head)))
-    e.injectFunction((FunctionIdentifier("audio_header"),
-      new ExpressionInfo(classOf[AudioHeader].getName, "audio_header"),
-      es => AudioHeader(es.head)))
-    e.injectFunction((FunctionIdentifier("video_header"),
-      new ExpressionInfo(classOf[VideoHeader].getName, "video_header"),
-      es => VideoHeader(es.head)))
-    e.injectFunction((FunctionIdentifier("video_tracks"),
-      new ExpressionInfo(classOf[VideoTracks].getName, "video_tracks"),
-      es => VideoTracks(es.head)))
-    e.injectFunction((FunctionIdentifier("video_samples"),
-      new ExpressionInfo(classOf[VideoSamples].getName, "video_samples"),
-      es => VideoSamples(es.head)))
-    e.injectFunction((FunctionIdentifier("mkv_tracks"),
-      new ExpressionInfo(classOf[MkvTracks].getName, "mkv_tracks"),
-      es => MkvTracks(es.head)))
-    e.injectFunction((FunctionIdentifier("mkv_blocks"),
-      new ExpressionInfo(classOf[MkvBlocks].getName, "mkv_blocks"),
-      es => MkvBlocks(es.head)))
-    e.injectFunction((FunctionIdentifier("id3_tags"),
-      new ExpressionInfo(classOf[Id3Tags].getName, "id3_tags"),
-      es => Id3Tags(es.head)))
-    e.injectFunction((FunctionIdentifier("exif_tags"),
-      new ExpressionInfo(classOf[ExifTags].getName, "exif_tags"),
-      es => ExifTags(es.head)))
-    e.injectFunction((FunctionIdentifier("exif_scrub_gps"),
-      new ExpressionInfo(classOf[ExifScrubGps].getName, "exif_scrub_gps"),
-      es => ExifScrubGps(es.head)))
-    e.injectFunction((FunctionIdentifier("image_ahash"),
-      new ExpressionInfo(classOf[ImageAHash].getName, "image_ahash"),
-      es => ImageAHash(es.head)))
-    e.injectFunction((FunctionIdentifier("ts_packets"),
-      new ExpressionInfo(classOf[TsPackets].getName, "ts_packets"),
-      es => TsPackets(es.head)))
-    e.injectFunction((FunctionIdentifier("ts_pes"),
-      new ExpressionInfo(classOf[TsPes].getName, "ts_pes"),
-      es => TsPes(es.head)))
-    e.injectFunction((FunctionIdentifier("annexb_nals"),
-      new ExpressionInfo(classOf[AnnexbNals].getName, "annexb_nals"),
-      es => AnnexbNals(es.head)))
-    e.injectFunction((FunctionIdentifier("h264_sps_meta"),
-      new ExpressionInfo(classOf[H264SpsMeta].getName, "h264_sps_meta"),
-      es => H264SpsMeta(es.head)))
-    e.injectFunction((FunctionIdentifier("warc_records"),
-      new ExpressionInfo(classOf[WarcRecords].getName, "warc_records"),
-      es => WarcRecords(es.head)))
-    e.injectFunction((FunctionIdentifier("zip_entries"),
-      new ExpressionInfo(classOf[ZipEntries].getName, "zip_entries"),
-      es => ZipEntries(es.head)))
-    e.injectFunction((FunctionIdentifier("tar_entries"),
-      new ExpressionInfo(classOf[TarEntries].getName, "tar_entries"),
-      es => TarEntries(es.head)))
-    e.injectFunction((FunctionIdentifier("pcm_frames"),
-      new ExpressionInfo(classOf[PcmFrames].getName, "pcm_frames"),
-      es => PcmFrames(es.head, es(1))))
-    e.injectFunction((FunctionIdentifier("h264_meta"),
-      new ExpressionInfo(classOf[H264Meta].getName, "h264_meta"),
-      es => H264Meta(es.head)))
-    e.injectFunction((FunctionIdentifier("hevc_meta"),
-      new ExpressionInfo(classOf[HevcMeta].getName, "hevc_meta"),
-      es => HevcMeta(es.head)))
-    e.injectFunction((FunctionIdentifier("av1_meta"),
-      new ExpressionInfo(classOf[Av1Meta].getName, "av1_meta"),
-      es => Av1Meta(es.head)))
-    e.injectFunction((FunctionIdentifier("bmp_pixels"),
-      new ExpressionInfo(classOf[BmpPixels].getName, "bmp_pixels"),
-      es => BmpPixels(es.head)))
-    e.injectFunction((FunctionIdentifier("png_pixels"),
-      new ExpressionInfo(classOf[PngPixels].getName, "png_pixels"),
-      es => PngPixels(es.head)))
-    e.injectFunction((FunctionIdentifier("gif_pixels"),
-      new ExpressionInfo(classOf[GifPixels].getName, "gif_pixels"),
-      es => GifPixels(es.head)))
-    e.injectFunction((FunctionIdentifier("jpeg_pixels"),
-      new ExpressionInfo(classOf[JpegPixels].getName, "jpeg_pixels"),
-      es => JpegPixels(es.head)))
-    e.injectFunction((FunctionIdentifier("pcm_stats"),
-      new ExpressionInfo(classOf[PcmStats].getName, "pcm_stats"),
-      es => PcmStats(es.head)))
-    e.injectFunction((FunctionIdentifier("warc_index"),
-      new ExpressionInfo(classOf[WarcIndex].getName, "warc_index"),
-      es => WarcIndex(es.head)))
-    e.injectFunction((FunctionIdentifier("pdf_meta"),
-      new ExpressionInfo(classOf[PdfMeta].getName, "pdf_meta"),
-      es => PdfMeta(es.head)))
-    e.injectFunction((FunctionIdentifier("pdf_text"),
-      new ExpressionInfo(classOf[PdfText].getName, "pdf_text"),
-      es => PdfText(es.head)))
-    e.injectFunction((FunctionIdentifier("flac_decode"),
-      new ExpressionInfo(classOf[FlacDecode].getName, "flac_decode"),
-      es => FlacDecode(es.head)))
-    e.injectFunction((FunctionIdentifier("odt_text"),
-      new ExpressionInfo(classOf[OdtText].getName, "odt_text"),
-      es => OdtText(es.head)))
-    e.injectFunction((FunctionIdentifier("epub_chapters"),
-      new ExpressionInfo(classOf[EpubChapters].getName, "epub_chapters"),
-      es => EpubChapters(es.head)))
-    e.injectFunction((FunctionIdentifier("rtf_text"),
-      new ExpressionInfo(classOf[RtfText].getName, "rtf_text"),
-      es => RtfText(es.head)))
-    e.injectFunction((FunctionIdentifier("eml_parse"),
-      new ExpressionInfo(classOf[EmlParse].getName, "eml_parse"),
-      es => EmlParse(es.head)))
-    e.injectFunction((FunctionIdentifier("gunzip_bytes"),
-      new ExpressionInfo(classOf[GunzipBytes].getName, "gunzip_bytes"),
-      es => GunzipBytes(es.head)))
-    e.injectFunction((FunctionIdentifier("ods_text"),
-      new ExpressionInfo(classOf[OdsText].getName, "ods_text"),
-      es => OdsText(es.head)))
-    e.injectFunction((FunctionIdentifier("bunzip_bytes"),
-      new ExpressionInfo(classOf[BunzipBytes].getName, "bunzip_bytes"),
-      es => BunzipBytes(es.head)))
-    e.injectFunction((FunctionIdentifier("bz2_extents"),
-      new ExpressionInfo(classOf[Bzip2Extents].getName, "bz2_extents"),
-      es => Bzip2Extents(es.head)))
-    e.injectFunction((FunctionIdentifier("wikitext_plain"),
-      new ExpressionInfo(classOf[WikitextPlain].getName, "wikitext_plain"),
-      es => WikitextPlain(es.head)))
-    e.injectFunction((FunctionIdentifier("zstd_bytes"),
-      new ExpressionInfo(classOf[ZstdBytes].getName, "zstd_bytes"),
-      es => ZstdBytes(es.head)))
-    e.injectFunction((FunctionIdentifier("xz_bytes"),
-      new ExpressionInfo(classOf[XzBytes].getName, "xz_bytes"),
-      es => XzBytes(es.head)))
-    e.injectFunction((FunctionIdentifier("sevenz_entries"),
-      new ExpressionInfo(classOf[SevenZipEntries].getName, "sevenz_entries"),
-      es => SevenZipEntries(es.head)))
-    e.injectFunction((FunctionIdentifier("zstd_extents"),
-      new ExpressionInfo(classOf[ZstdExtents].getName, "zstd_extents"),
-      es => ZstdExtents(es.head)))
-    e.injectFunction((FunctionIdentifier("zstd_dict"),
-      new ExpressionInfo(classOf[ZstdDictExpr].getName, "zstd_dict"),
-      es => ZstdDictExpr(es.head)))
-    e.injectFunction((FunctionIdentifier("zstd_bytes_dict"),
-      new ExpressionInfo(classOf[ZstdBytesDict].getName, "zstd_bytes_dict"),
-      es => ZstdBytesDict(es.head, es(1))))
-    e.injectFunction((FunctionIdentifier("odp_slides"),
-      new ExpressionInfo(classOf[OdpSlides].getName, "odp_slides"),
-      es => OdpSlides(es.head)))
-    // bloom_bits(hs, m): aggregate the array<bigint> bucket positions of
-    // each row into an m-bit Bloom set (m from a foldable int literal)
-    e.injectFunction((FunctionIdentifier("bloom_bits"),
-      new ExpressionInfo(classOf[BloomBits].getName, "bloom_bits"),
-      es => BloomBits(es.head,
-        es(1).eval(null).asInstanceOf[Number].intValue())
-        .toAggregateExpression()))
-  }
+  override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit =
+    ChunkFunctions.table.foreach(f => e.injectFunction(
+      (FunctionIdentifier(f.name), new ExpressionInfo(f.cls.getName, f.name), f.build)))
 }

@@ -5,9 +5,7 @@ import scala.util.control.NonFatal
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumnShim
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -353,16 +351,8 @@ object Emls {
 
 /** `eml_parse(binary)` → `struct<subject string, from string, dt string,
   * text string>`; null when no RFC 5322 header block parses. */
-case class EmlParse(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = EmlParse.resultType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"eml_parse expects binary, got $other")
-  }
-
+case class EmlParse(child: Expression)
+    extends BinaryCodecExpression("eml_parse", EmlParse.resultType) {
   override def nullSafeEval(payload: Any): Any = {
     val r = Emls.emlParse(payload.asInstanceOf[Array[Byte]])
     if (r == null) null
@@ -373,22 +363,8 @@ case class EmlParse(child: Expression) extends UnaryExpression {
       if (r._4 == null) null else UTF8String.fromString(r._4))
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("emlParse", this, classOf[EmlParse].getName)
-    val r = ctx.freshName("eml")
-    nullSafeCodeGen(ctx, ev, b => {
-      s"""
-         |Object $r = $self.nullSafeEval($b);
-         |if ($r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = (org.apache.spark.sql.catalyst.InternalRow) $r; }
-       """.stripMargin
-    })
-  }
-
   override protected def withNewChildInternal(newChild: Expression): EmlParse =
     copy(child = newChild)
-
-  override def prettyName: String = "eml_parse"
 }
 
 object EmlParse {

@@ -5,9 +5,7 @@ import scala.util.control.NonFatal
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumnShim
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -209,16 +207,8 @@ object Epubs {
 
 /** `epub_chapters(binary)` → `array<struct<href string, text string>>`
   * in spine order; null when the book's container chain is broken. */
-case class EpubChapters(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = EpubChapters.resultType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"epub_chapters expects binary, got $other")
-  }
-
+case class EpubChapters(child: Expression)
+    extends BinaryCodecExpression("epub_chapters", EpubChapters.resultType) {
   override def nullSafeEval(payload: Any): Any = {
     val cs = Epubs.epubChapters(payload.asInstanceOf[Array[Byte]])
     if (cs == null) null
@@ -227,23 +217,8 @@ case class EpubChapters(child: Expression) extends UnaryExpression {
       if (c._2 == null) null else UTF8String.fromString(c._2)): Any))
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("epubChapters", this,
-      classOf[EpubChapters].getName)
-    val r = ctx.freshName("epub")
-    nullSafeCodeGen(ctx, ev, b => {
-      s"""
-         |Object $r = $self.nullSafeEval($b);
-         |if ($r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $r; }
-       """.stripMargin
-    })
-  }
-
   override protected def withNewChildInternal(newChild: Expression): EpubChapters =
     copy(child = newChild)
-
-  override def prettyName: String = "epub_chapters"
 }
 
 object EpubChapters {

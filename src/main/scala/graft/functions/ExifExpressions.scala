@@ -3,9 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumnShim
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -438,16 +436,8 @@ object Exif {
   * null when no EXIF block parses. GPS surfaces as signed
   * centi-arcseconds (1° = 360 000). Codegen'd like the other media
   * expressions. */
-case class ExifTags(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ExifTags.resultType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"exif_tags expects binary, got $other")
-  }
-
+case class ExifTags(child: Expression)
+    extends BinaryCodecExpression("exif_tags", ExifTags.resultType) {
   override def nullSafeEval(payload: Any): Any = {
     val p = Exif.parse(payload.asInstanceOf[Array[Byte]])
     if (p == null) null
@@ -456,22 +446,8 @@ case class ExifTags(child: Expression) extends UnaryExpression {
       UTF8String.fromString(p.datetime), p.iso, p.hasGps, p.latCsec, p.lonCsec)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("exifTags", this, classOf[ExifTags].getName)
-    val r = ctx.freshName("exif")
-    nullSafeCodeGen(ctx, ev, b => {
-      s"""
-         |Object $r = $self.nullSafeEval($b);
-         |if ($r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = (org.apache.spark.sql.catalyst.InternalRow) $r; }
-       """.stripMargin
-    })
-  }
-
   override protected def withNewChildInternal(newChild: Expression): ExifTags =
     copy(child = newChild)
-
-  override def prettyName: String = "exif_tags"
 }
 
 object ExifTags {
@@ -495,35 +471,13 @@ object ExifTags {
   * data untouched), GPS-free payloads pass through unchanged, and a
   * GPS-bearing bare TIFF routes to null (unscrubbable here ⇒ absent,
   * never silently retained). */
-case class ExifScrubGps(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"exif_scrub_gps expects binary, got $other")
-  }
-
+case class ExifScrubGps(child: Expression)
+    extends BinaryCodecExpression("exif_scrub_gps", BinaryType) {
   override def nullSafeEval(payload: Any): Any =
     Exif.scrubGps(payload.asInstanceOf[Array[Byte]])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("exifScrub", this, classOf[ExifScrubGps].getName)
-    val r = ctx.freshName("scrubbed")
-    nullSafeCodeGen(ctx, ev, b => {
-      s"""
-         |Object $r = $self.nullSafeEval($b);
-         |if ($r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = (byte[]) $r; }
-       """.stripMargin
-    })
-  }
-
   override protected def withNewChildInternal(newChild: Expression): ExifScrubGps =
     copy(child = newChild)
-
-  override def prettyName: String = "exif_scrub_gps"
 }
 
 object ExifScrubGps {

@@ -2,9 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumnShim
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types._
 
 /** Library-free FLAC FRAME CODEC (the public xiph format spec /
@@ -605,34 +603,12 @@ object FlacCodec {
 /** `flac_decode(binary)` → `binary`: the FLAC audio decoded to a PCM WAV
   * container (see [[FlacCodec.decodeToWav]]); null for non-FLAC or any
   * structural/CRC/codec break. */
-case class FlacDecode(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"flac_decode expects binary, got $other")
-  }
-
+case class FlacDecode(child: Expression) extends BinaryCodecExpression("flac_decode", BinaryType) {
   override def nullSafeEval(payload: Any): Any =
     FlacCodec.decodeToWav(payload.asInstanceOf[Array[Byte]])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val r = ctx.freshName("flacWav")
-    nullSafeCodeGen(ctx, ev, b => {
-      s"""
-         |byte[] $r = graft.functions.FlacCodec.decodeToWav($b);
-         |if ($r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = $r; }
-       """.stripMargin
-    })
-  }
-
   override protected def withNewChildInternal(newChild: Expression): FlacDecode =
     copy(child = newChild)
-
-  override def prettyName: String = "flac_decode"
 }
 
 object FlacDecode {

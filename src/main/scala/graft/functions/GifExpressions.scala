@@ -2,9 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, GraftColumnShim}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types._
 
 /** REAL GIF body decode — the LZW entropy coder implemented directly (it
@@ -349,38 +347,16 @@ object GifCodec {
   * GIFs — REAL LZW entropy decode in pure integer code (Welch 1984; no
   * library), inside whole-stage codegen. Null for interlaced/corrupt/
   * truncated payloads. */
-case class GifPixels(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BmpPixels.resultType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"gif_pixels expects binary, got $other")
-  }
-
+case class GifPixels(child: Expression)
+    extends BinaryCodecExpression("gif_pixels", BmpPixels.resultType) {
   override def nullSafeEval(payload: Any): Any = {
     val p = GifCodec.parseGifPixels(payload.asInstanceOf[Array[Byte]])
     if (p == null) null
     else InternalRow(p._1, p._2, p._3, p._4, p._5, p._6, p._7, p._8)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("gifPixels", this, classOf[GifPixels].getName)
-    val r = ctx.freshName("gifPx")
-    nullSafeCodeGen(ctx, ev, b => {
-      s"""
-         |Object $r = $self.nullSafeEval($b);
-         |if ($r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = (org.apache.spark.sql.catalyst.InternalRow) $r; }
-       """.stripMargin
-    })
-  }
-
   override protected def withNewChildInternal(newChild: Expression): GifPixels =
     copy(child = newChild)
-
-  override def prettyName: String = "gif_pixels"
 }
 
 object GifPixels {

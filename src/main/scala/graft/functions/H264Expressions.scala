@@ -2,9 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, GraftColumnShim}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types._
 
 /** H.264 codec-configuration parsing with ZERO codec libraries: the avcC
@@ -346,16 +344,8 @@ object H264 {
   * coded dimensions out of the SPS's Exp-Golomb syntax, no codec library.
   * Null for payloads without an avc1/avc3 entry or with malformed
   * configuration. */
-case class H264Meta(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = H264Meta.resultType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"h264_meta expects binary, got $other")
-  }
-
+case class H264Meta(child: Expression)
+    extends BinaryCodecExpression("h264_meta", H264Meta.resultType) {
   override def nullSafeEval(payload: Any): Any = {
     val m = H264.parseMp4Sps(payload.asInstanceOf[Array[Byte]])
     if (m == null) null
@@ -363,22 +353,8 @@ case class H264Meta(child: Expression) extends UnaryExpression {
       m.nSps, m.nPps)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("h264Meta", this, classOf[H264Meta].getName)
-    val r = ctx.freshName("h264m")
-    nullSafeCodeGen(ctx, ev, b => {
-      s"""
-         |Object $r = $self.nullSafeEval($b);
-         |if ($r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = (org.apache.spark.sql.catalyst.InternalRow) $r; }
-       """.stripMargin
-    })
-  }
-
   override protected def withNewChildInternal(newChild: Expression): H264Meta =
     copy(child = newChild)
-
-  override def prettyName: String = "h264_meta"
 }
 
 object H264Meta {
@@ -400,16 +376,8 @@ object H264Meta {
   * start-code split with framing-zero trim, null for streams that do not
   * open with a start code or violate forbidden_zero_bit. Composes with
   * `ts_pes` (TS elementary streams are Annex-B) and `h264_sps_meta`. */
-case class AnnexbNals(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = AnnexbNals.resultType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"annexb_nals expects binary, got $other")
-  }
-
+case class AnnexbNals(child: Expression)
+    extends BinaryCodecExpression("annexb_nals", AnnexbNals.resultType) {
   override def nullSafeEval(payload: Any): Any = {
     val nals = H264.annexbNals(payload.asInstanceOf[Array[Byte]])
     if (nals == null) null
@@ -417,22 +385,8 @@ case class AnnexbNals(child: Expression) extends UnaryExpression {
       nals.map(n => InternalRow(n._1, n._2, n._3): Any))
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("annexbNals", this, classOf[AnnexbNals].getName)
-    val r = ctx.freshName("nals")
-    nullSafeCodeGen(ctx, ev, b => {
-      s"""
-         |Object $r = $self.nullSafeEval($b);
-         |if ($r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $r; }
-       """.stripMargin
-    })
-  }
-
   override protected def withNewChildInternal(newChild: Expression): AnnexbNals =
     copy(child = newChild)
-
-  override def prettyName: String = "annexb_nals"
 }
 
 object AnnexbNals {
@@ -449,38 +403,16 @@ object AnnexbNals {
   * height int>` from ONE bare SPS NAL (header byte included) — the
   * Exp-Golomb parse of [[H264.parseSps]] exposed directly so demuxed
   * Annex-B streams can be interrogated without an avcC wrapper. */
-case class H264SpsMeta(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = H264SpsMeta.resultType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"h264_sps_meta expects binary, got $other")
-  }
-
+case class H264SpsMeta(child: Expression)
+    extends BinaryCodecExpression("h264_sps_meta", H264SpsMeta.resultType) {
   override def nullSafeEval(payload: Any): Any = {
     val m = H264.parseSps(payload.asInstanceOf[Array[Byte]])
     if (m == null) null
     else InternalRow(m._1, m._2, m._3, m._4)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("spsMeta", this, classOf[H264SpsMeta].getName)
-    val r = ctx.freshName("sps")
-    nullSafeCodeGen(ctx, ev, b => {
-      s"""
-         |Object $r = $self.nullSafeEval($b);
-         |if ($r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = (org.apache.spark.sql.catalyst.InternalRow) $r; }
-       """.stripMargin
-    })
-  }
-
   override protected def withNewChildInternal(newChild: Expression): H264SpsMeta =
     copy(child = newChild)
-
-  override def prettyName: String = "h264_sps_meta"
 }
 
 object H264SpsMeta {

@@ -2,9 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, GraftColumnShim}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types._
 
 /** H.265/HEVC codec-configuration parsing, completing the video-config
@@ -205,16 +203,8 @@ object H265 {
   * chroma_format, length_size, n_arrays>` from an MP4 payload's hvcC
   * record — the H.265 face of `h264_meta`, REAL coded dimensions from the
   * SPS's conformance window. Null without an hvc1/hev1 entry. */
-case class HevcMeta(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = HevcMeta.resultType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"hevc_meta expects binary, got $other")
-  }
-
+case class HevcMeta(child: Expression)
+    extends BinaryCodecExpression("hevc_meta", HevcMeta.resultType) {
   override def nullSafeEval(payload: Any): Any = {
     val m = H265.parseMp4Sps(payload.asInstanceOf[Array[Byte]])
     if (m == null) null
@@ -222,22 +212,8 @@ case class HevcMeta(child: Expression) extends UnaryExpression {
       m.chromaFormat, m.lengthSize, m.nArrays)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("hevcMeta", this, classOf[HevcMeta].getName)
-    val r = ctx.freshName("hevcm")
-    nullSafeCodeGen(ctx, ev, b => {
-      s"""
-         |Object $r = $self.nullSafeEval($b);
-         |if ($r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = (org.apache.spark.sql.catalyst.InternalRow) $r; }
-       """.stripMargin
-    })
-  }
-
   override protected def withNewChildInternal(newChild: Expression): HevcMeta =
     copy(child = newChild)
-
-  override def prettyName: String = "hevc_meta"
 }
 
 object HevcMeta {

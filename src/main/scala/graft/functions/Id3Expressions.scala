@@ -3,9 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumnShim
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -175,16 +173,8 @@ object Id3 {
   * Codegen'd, same posture as `audio_header` (which skips the same tag to
   * reach the frames — the two compose into codec facts + provenance from
   * one binary column). */
-case class Id3Tags(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = Id3Tags.resultType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"id3_tags expects binary, got $other")
-  }
-
+case class Id3Tags(child: Expression)
+    extends BinaryCodecExpression("id3_tags", Id3Tags.resultType) {
   override def nullSafeEval(payload: Any): Any = {
     val p = Id3.parse(payload.asInstanceOf[Array[Byte]])
     if (p == null) null
@@ -193,22 +183,8 @@ case class Id3Tags(child: Expression) extends UnaryExpression {
       UTF8String.fromString(p._5))
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("id3Tags", this, classOf[Id3Tags].getName)
-    val r = ctx.freshName("id3")
-    nullSafeCodeGen(ctx, ev, b => {
-      s"""
-         |Object $r = $self.nullSafeEval($b);
-         |if ($r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = (org.apache.spark.sql.catalyst.InternalRow) $r; }
-       """.stripMargin
-    })
-  }
-
   override protected def withNewChildInternal(newChild: Expression): Id3Tags =
     copy(child = newChild)
-
-  override def prettyName: String = "id3_tags"
 }
 
 object Id3Tags {

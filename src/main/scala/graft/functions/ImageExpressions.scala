@@ -3,9 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumnShim
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -689,38 +687,16 @@ object ImageHeaders {
   * 100 TB media corpus stays inside whole-stage codegen — no UDF boxing,
   * no Python round trip; the one opaque call pattern matches
   * pack_chunk/gear_boundaries. */
-case class ImageHeader(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ImageHeader.resultType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"image_header expects binary, got $other")
-  }
-
+case class ImageHeader(child: Expression)
+    extends BinaryCodecExpression("image_header", ImageHeader.resultType) {
   override def nullSafeEval(payload: Any): Any = {
     val parsed = ImageHeaders.parse(payload.asInstanceOf[Array[Byte]])
     if (parsed == null) null
     else InternalRow(UTF8String.fromString(parsed._1), parsed._2, parsed._3)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("imageHeader", this, classOf[ImageHeader].getName)
-    val r = ctx.freshName("imgHdr")
-    nullSafeCodeGen(ctx, ev, b => {
-      s"""
-         |Object $r = $self.nullSafeEval($b);
-         |if ($r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = (org.apache.spark.sql.catalyst.InternalRow) $r; }
-       """.stripMargin
-    })
-  }
-
   override protected def withNewChildInternal(newChild: Expression): ImageHeader =
     copy(child = newChild)
-
-  override def prettyName: String = "image_header"
 }
 
 object ImageHeader {
@@ -739,38 +715,16 @@ object ImageHeader {
   * format needs no codec library, so this is REAL pixel decode running
   * inside whole-stage codegen — the multimodal stub now covers only
   * formats whose bodies genuinely need a codec (JPEG/PNG/GIF, MP4). */
-case class BmpPixels(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BmpPixels.resultType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"bmp_pixels expects binary, got $other")
-  }
-
+case class BmpPixels(child: Expression)
+    extends BinaryCodecExpression("bmp_pixels", BmpPixels.resultType) {
   override def nullSafeEval(payload: Any): Any = {
     val p = ImageHeaders.parseBmpPixels(payload.asInstanceOf[Array[Byte]])
     if (p == null) null
     else InternalRow(p._1, p._2, p._3, p._4, p._5, p._6, p._7, p._8)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("bmpPixels", this, classOf[BmpPixels].getName)
-    val r = ctx.freshName("bmpPx")
-    nullSafeCodeGen(ctx, ev, b => {
-      s"""
-         |Object $r = $self.nullSafeEval($b);
-         |if ($r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = (org.apache.spark.sql.catalyst.InternalRow) $r; }
-       """.stripMargin
-    })
-  }
-
   override protected def withNewChildInternal(newChild: Expression): BmpPixels =
     copy(child = newChild)
-
-  override def prettyName: String = "bmp_pixels"
 }
 
 object BmpPixels {
@@ -797,38 +751,16 @@ object BmpPixels {
   * malformed payloads — route, don't crash. With
   * [[BmpPixels]] and [[PcmStats]] this retires the pixel-decode stub for
   * every format whose body doesn't need an entropy codec beyond DEFLATE. */
-case class PngPixels(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BmpPixels.resultType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"png_pixels expects binary, got $other")
-  }
-
+case class PngPixels(child: Expression)
+    extends BinaryCodecExpression("png_pixels", BmpPixels.resultType) {
   override def nullSafeEval(payload: Any): Any = {
     val p = ImageHeaders.parsePngPixels(payload.asInstanceOf[Array[Byte]])
     if (p == null) null
     else InternalRow(p._1, p._2, p._3, p._4, p._5, p._6, p._7, p._8)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("pngPixels", this, classOf[PngPixels].getName)
-    val r = ctx.freshName("pngPx")
-    nullSafeCodeGen(ctx, ev, b => {
-      s"""
-         |Object $r = $self.nullSafeEval($b);
-         |if ($r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = (org.apache.spark.sql.catalyst.InternalRow) $r; }
-       """.stripMargin
-    })
-  }
-
   override protected def withNewChildInternal(newChild: Expression): PngPixels =
     copy(child = newChild)
-
-  override def prettyName: String = "png_pixels"
 }
 
 object PngPixels {

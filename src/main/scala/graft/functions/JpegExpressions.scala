@@ -2,9 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, GraftColumnShim}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types._
 
 /** REAL JPEG body decode — baseline sequential (ITU-T T.81, public since
@@ -1297,38 +1295,16 @@ object JpegCodec {
   * progressive, dequantize, IDCT, color convert, in pure JVM code inside
   * whole-stage codegen. Null for arithmetic/lossless/12-bit/malformed
   * payloads. */
-case class JpegPixels(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BmpPixels.resultType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"jpeg_pixels expects binary, got $other")
-  }
-
+case class JpegPixels(child: Expression)
+    extends BinaryCodecExpression("jpeg_pixels", BmpPixels.resultType) {
   override def nullSafeEval(payload: Any): Any = {
     val p = JpegCodec.parseJpegPixels(payload.asInstanceOf[Array[Byte]])
     if (p == null) null
     else InternalRow(p._1, p._2, p._3, p._4, p._5, p._6, p._7, p._8)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("jpegPixels", this, classOf[JpegPixels].getName)
-    val r = ctx.freshName("jpegPx")
-    nullSafeCodeGen(ctx, ev, b => {
-      s"""
-         |Object $r = $self.nullSafeEval($b);
-         |if ($r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = (org.apache.spark.sql.catalyst.InternalRow) $r; }
-       """.stripMargin
-    })
-  }
-
   override protected def withNewChildInternal(newChild: Expression): JpegPixels =
     copy(child = newChild)
-
-  override def prettyName: String = "jpeg_pixels"
 }
 
 object JpegPixels {

@@ -3,9 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumnShim
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -413,16 +411,8 @@ object Mkv {
   * codec string, width int, height int, channels int, sample_rate int,
   * duration_us long>>` for Matroska/WebM payloads; null otherwise — the
   * EBML twin of `video_tracks`, same codegen posture. */
-case class MkvTracks(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = MkvTracks.resultType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"mkv_tracks expects binary, got $other")
-  }
-
+case class MkvTracks(child: Expression)
+    extends BinaryCodecExpression("mkv_tracks", MkvTracks.resultType) {
   override def nullSafeEval(payload: Any): Any = {
     val tracks = Mkv.parseTracks(payload.asInstanceOf[Array[Byte]])
     if (tracks == null) null
@@ -432,22 +422,8 @@ case class MkvTracks(child: Expression) extends UnaryExpression {
         t.sampleRate, t.durationUs)).toArray[Any])
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("mkvTracks", this, classOf[MkvTracks].getName)
-    val r = ctx.freshName("mkvTrk")
-    nullSafeCodeGen(ctx, ev, b => {
-      s"""
-         |Object $r = $self.nullSafeEval($b);
-         |if ($r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $r; }
-       """.stripMargin
-    })
-  }
-
   override protected def withNewChildInternal(newChild: Expression): MkvTracks =
     copy(child = newChild)
-
-  override def prettyName: String = "mkv_tracks"
 }
 
 object MkvTracks {
@@ -472,16 +448,8 @@ object MkvTracks {
   * with `substring(media, offset + 1, size)` to slice real frame payloads
   * out of a WebM binary column (MJPEG-shaped tracks then decode with
   * `jpeg_pixels`, zero codec libraries — x145's gate). */
-case class MkvBlocks(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = MkvBlocks.resultType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"mkv_blocks expects binary, got $other")
-  }
-
+case class MkvBlocks(child: Expression)
+    extends BinaryCodecExpression("mkv_blocks", MkvBlocks.resultType) {
   override def nullSafeEval(payload: Any): Any = {
     val blocks = Mkv.parseBlocks(payload.asInstanceOf[Array[Byte]])
     if (blocks == null) null
@@ -489,22 +457,8 @@ case class MkvBlocks(child: Expression) extends UnaryExpression {
       InternalRow(x.trackId, x.tsTicks, x.offset, x.size)).toArray[Any])
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("mkvBlocks", this, classOf[MkvBlocks].getName)
-    val r = ctx.freshName("mkvBlk")
-    nullSafeCodeGen(ctx, ev, b => {
-      s"""
-         |Object $r = $self.nullSafeEval($b);
-         |if ($r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $r; }
-       """.stripMargin
-    })
-  }
-
   override protected def withNewChildInternal(newChild: Expression): MkvBlocks =
     copy(child = newChild)
-
-  override def prettyName: String = "mkv_blocks"
 }
 
 object MkvBlocks {

@@ -3,9 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumnShim
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 
@@ -371,16 +369,8 @@ object MpegTs {
   * packets bigint, payload_starts bigint, cc_errors bigint>>` ascending
   * by PID — per-PID accounting with stream types resolved through the
   * CRC-verified PAT→PMT chain; null for non-TS payloads. */
-case class TsPackets(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = TsPackets.resultType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"ts_packets expects binary, got $other")
-  }
-
+case class TsPackets(child: Expression)
+    extends BinaryCodecExpression("ts_packets", TsPackets.resultType) {
   override def nullSafeEval(payload: Any): Any = {
     val rows = MpegTs.parse(payload.asInstanceOf[Array[Byte]])
     if (rows == null) null
@@ -388,22 +378,8 @@ case class TsPackets(child: Expression) extends UnaryExpression {
       InternalRow(r._1, r._2, r._3, r._4, r._5): Any))
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("tsPackets", this, classOf[TsPackets].getName)
-    val r = ctx.freshName("ts")
-    nullSafeCodeGen(ctx, ev, b => {
-      s"""
-         |Object $r = $self.nullSafeEval($b);
-         |if ($r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $r; }
-       """.stripMargin
-    })
-  }
-
   override protected def withNewChildInternal(newChild: Expression): TsPackets =
     copy(child = newChild)
-
-  override def prettyName: String = "ts_packets"
 }
 
 object TsPackets {
@@ -423,16 +399,7 @@ object TsPackets {
   * ([[MpegTs.parsePes]]): reassembled elementary-stream bytes plus the
   * 90 kHz PTS envelope; null for non-TS payloads. The TS twin of
   * `video_samples`' ISO-BMFF payload slicing (x135). */
-case class TsPes(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = TsPes.resultType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"ts_pes expects binary, got $other")
-  }
-
+case class TsPes(child: Expression) extends BinaryCodecExpression("ts_pes", TsPes.resultType) {
   override def nullSafeEval(payload: Any): Any = {
     val rows = MpegTs.parsePes(payload.asInstanceOf[Array[Byte]])
     if (rows == null) null
@@ -440,22 +407,8 @@ case class TsPes(child: Expression) extends UnaryExpression {
       InternalRow(r._1, r._2, r._3, r._4, r._5): Any))
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("tsPes", this, classOf[TsPes].getName)
-    val r = ctx.freshName("pes")
-    nullSafeCodeGen(ctx, ev, b => {
-      s"""
-         |Object $r = $self.nullSafeEval($b);
-         |if ($r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $r; }
-       """.stripMargin
-    })
-  }
-
   override protected def withNewChildInternal(newChild: Expression): TsPes =
     copy(child = newChild)
-
-  override def prettyName: String = "ts_pes"
 }
 
 object TsPes {

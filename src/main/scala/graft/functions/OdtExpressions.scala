@@ -4,9 +4,7 @@ import scala.util.control.NonFatal
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumnShim
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -292,37 +290,14 @@ object Odts {
 
 /** `odt_text(binary)` → body text (paragraphs newline-joined); null when
   * the payload is not an OpenDocument Text package. */
-case class OdtText(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"odt_text expects binary, got $other")
-  }
-
+case class OdtText(child: Expression) extends BinaryCodecExpression("odt_text", StringType) {
   override def nullSafeEval(payload: Any): Any = {
     val s = Odts.odtText(payload.asInstanceOf[Array[Byte]])
     if (s == null) null else UTF8String.fromString(s)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("odtText", this, classOf[OdtText].getName)
-    val r = ctx.freshName("odt")
-    nullSafeCodeGen(ctx, ev, b => {
-      s"""
-         |Object $r = $self.nullSafeEval($b);
-         |if ($r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = (org.apache.spark.unsafe.types.UTF8String) $r; }
-       """.stripMargin
-    })
-  }
-
   override protected def withNewChildInternal(newChild: Expression): OdtText =
     copy(child = newChild)
-
-  override def prettyName: String = "odt_text"
 }
 
 object OdtText {
@@ -332,37 +307,14 @@ object OdtText {
 
 /** `ods_text(binary)` → spreadsheet text (cells tab-joined, rows
   * newline-joined); null when not an OpenDocument Spreadsheet. */
-case class OdsText(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"ods_text expects binary, got $other")
-  }
-
+case class OdsText(child: Expression) extends BinaryCodecExpression("ods_text", StringType) {
   override def nullSafeEval(payload: Any): Any = {
     val s = Odts.odsText(payload.asInstanceOf[Array[Byte]])
     if (s == null) null else UTF8String.fromString(s)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("odsText", this, classOf[OdsText].getName)
-    val r = ctx.freshName("ods")
-    nullSafeCodeGen(ctx, ev, b => {
-      s"""
-         |Object $r = $self.nullSafeEval($b);
-         |if ($r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = (org.apache.spark.unsafe.types.UTF8String) $r; }
-       """.stripMargin
-    })
-  }
-
   override protected def withNewChildInternal(newChild: Expression): OdsText =
     copy(child = newChild)
-
-  override def prettyName: String = "ods_text"
 }
 
 object OdsText {
@@ -372,16 +324,8 @@ object OdsText {
 
 /** `odp_slides(binary)` → `array<string>`, one text per `<draw:page>`
   * in deck order; null when not an OpenDocument Presentation. */
-case class OdpSlides(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"odp_slides expects binary, got $other")
-  }
-
+case class OdpSlides(child: Expression)
+    extends BinaryCodecExpression("odp_slides", ArrayType(StringType, containsNull = false)) {
   override def nullSafeEval(payload: Any): Any = {
     val ss = Odts.odpSlides(payload.asInstanceOf[Array[Byte]])
     if (ss == null) null
@@ -389,23 +333,8 @@ case class OdpSlides(child: Expression) extends UnaryExpression {
       ss.map(UTF8String.fromString(_): Any))
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("odpSlides", this,
-      classOf[OdpSlides].getName)
-    val r = ctx.freshName("odp")
-    nullSafeCodeGen(ctx, ev, b => {
-      s"""
-         |Object $r = $self.nullSafeEval($b);
-         |if ($r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $r; }
-       """.stripMargin
-    })
-  }
-
   override protected def withNewChildInternal(newChild: Expression): OdpSlides =
     copy(child = newChild)
-
-  override def prettyName: String = "odp_slides"
 }
 
 object OdpSlides {

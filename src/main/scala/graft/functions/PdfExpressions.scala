@@ -3,9 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumnShim
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -1553,38 +1551,16 @@ object Pdfs {
 
 /** `pdf_meta(binary)` → `struct<version string, n_objects int,
   * n_pages int>`; null for non-PDF or structurally broken input. */
-case class PdfMeta(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = PdfMeta.resultType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"pdf_meta expects binary, got $other")
-  }
-
+case class PdfMeta(child: Expression)
+    extends BinaryCodecExpression("pdf_meta", PdfMeta.resultType) {
   override def nullSafeEval(payload: Any): Any = {
     val m = Pdfs.pdfMeta(payload.asInstanceOf[Array[Byte]])
     if (m == null) null
     else InternalRow(UTF8String.fromString(m._1), m._2, m._3)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("pdfMeta", this, classOf[PdfMeta].getName)
-    val r = ctx.freshName("pdf")
-    nullSafeCodeGen(ctx, ev, b => {
-      s"""
-         |Object $r = $self.nullSafeEval($b);
-         |if ($r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = (org.apache.spark.sql.catalyst.InternalRow) $r; }
-       """.stripMargin
-    })
-  }
-
   override protected def withNewChildInternal(newChild: Expression): PdfMeta =
     copy(child = newChild)
-
-  override def prettyName: String = "pdf_meta"
 }
 
 object PdfMeta {
@@ -1601,16 +1577,8 @@ object PdfMeta {
   * streams decoded, FlateDecode inflated, text-showing operators replayed
   * with line ordering — see [[Pdfs.pdfText]]); null for non-PDF or
   * structurally broken input. */
-case class PdfText(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"pdf_text expects binary, got $other")
-  }
-
+case class PdfText(child: Expression)
+    extends BinaryCodecExpression("pdf_text", ArrayType(StringType, containsNull = false)) {
   override def nullSafeEval(payload: Any): Any = {
     val pages = Pdfs.pdfText(payload.asInstanceOf[Array[Byte]])
     if (pages == null) null
@@ -1618,22 +1586,8 @@ case class PdfText(child: Expression) extends UnaryExpression {
       pages.map(p => UTF8String.fromString(p): AnyRef))
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("pdfText", this, classOf[PdfText].getName)
-    val r = ctx.freshName("pdfTxt")
-    nullSafeCodeGen(ctx, ev, b => {
-      s"""
-         |Object $r = $self.nullSafeEval($b);
-         |if ($r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $r; }
-       """.stripMargin
-    })
-  }
-
   override protected def withNewChildInternal(newChild: Expression): PdfText =
     copy(child = newChild)
-
-  override def prettyName: String = "pdf_text"
 }
 
 object PdfText {
@@ -1644,38 +1598,15 @@ object PdfText {
 /** `pdf_revisions(binary)` → `int`: the number of xref sections (1 +
   * incremental updates) — the edited-document provenance signal; null
   * for non-PDF or a broken /Prev chain (see [[Pdfs.pdfRevisions]]). */
-case class PdfRevisions(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = IntegerType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"pdf_revisions expects binary, got $other")
-  }
-
+case class PdfRevisions(child: Expression)
+    extends BinaryCodecExpression("pdf_revisions", IntegerType) {
   override def nullSafeEval(payload: Any): Any = {
     val r = Pdfs.pdfRevisions(payload.asInstanceOf[Array[Byte]])
     if (r < 0) null else r
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("pdfRevisions", this,
-      classOf[PdfRevisions].getName)
-    val r = ctx.freshName("pdfRev")
-    nullSafeCodeGen(ctx, ev, b => {
-      s"""
-         |Object $r = $self.nullSafeEval($b);
-         |if ($r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = ((java.lang.Integer) $r).intValue(); }
-       """.stripMargin
-    })
-  }
-
   override protected def withNewChildInternal(newChild: Expression): PdfRevisions =
     copy(child = newChild)
-
-  override def prettyName: String = "pdf_revisions"
 }
 
 object PdfRevisions {

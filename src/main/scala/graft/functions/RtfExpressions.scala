@@ -4,9 +4,7 @@ import scala.util.control.NonFatal
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumnShim
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -210,37 +208,14 @@ object Rtfs {
 
 /** `rtf_text(binary)` → extracted plain text; null when the payload is
   * not RTF or the walk fails structurally. */
-case class RtfText(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"rtf_text expects binary, got $other")
-  }
-
+case class RtfText(child: Expression) extends BinaryCodecExpression("rtf_text", StringType) {
   override def nullSafeEval(payload: Any): Any = {
     val s = Rtfs.rtfText(payload.asInstanceOf[Array[Byte]])
     if (s == null) null else UTF8String.fromString(s)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("rtfText", this, classOf[RtfText].getName)
-    val r = ctx.freshName("rtf")
-    nullSafeCodeGen(ctx, ev, b => {
-      s"""
-         |Object $r = $self.nullSafeEval($b);
-         |if ($r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = (org.apache.spark.unsafe.types.UTF8String) $r; }
-       """.stripMargin
-    })
-  }
-
   override protected def withNewChildInternal(newChild: Expression): RtfText =
     copy(child = newChild)
-
-  override def prettyName: String = "rtf_text"
 }
 
 object RtfText {

@@ -6,9 +6,7 @@ import scala.util.control.NonFatal
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumnShim
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -856,16 +854,8 @@ object SevenZip {
 /** `sevenz_entries(binary)` → `array<struct<name string, crc_ok
   * boolean, payload binary>>`; null when the CONTAINER is unreadable,
   * per-member dead letters below that (see [[SevenZip]]). */
-case class SevenZipEntries(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = SevenZipEntries.resultType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"sevenz_entries expects binary, got $other")
-  }
-
+case class SevenZipEntries(child: Expression)
+    extends BinaryCodecExpression("sevenz_entries", SevenZipEntries.resultType) {
   override def nullSafeEval(payload: Any): Any = {
     val es = SevenZip.entries(payload.asInstanceOf[Array[Byte]])
     if (es == null) null
@@ -873,23 +863,8 @@ case class SevenZipEntries(child: Expression) extends UnaryExpression {
       UTF8String.fromString(e.name), e.crcOk, e.payload): Any).toArray)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("sevenzEntries", this,
-      classOf[SevenZipEntries].getName)
-    val r = ctx.freshName("sz")
-    nullSafeCodeGen(ctx, ev, b => {
-      s"""
-         |Object $r = $self.nullSafeEval($b);
-         |if ($r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $r; }
-       """.stripMargin
-    })
-  }
-
   override protected def withNewChildInternal(newChild: Expression): SevenZipEntries =
     copy(child = newChild)
-
-  override def prettyName: String = "sevenz_entries"
 }
 
 object SevenZipEntries {

@@ -3,9 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumnShim
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -538,38 +536,16 @@ object VideoHeaders {
 /** `video_header(binary)` → `struct<brand string, timescale int,
   * duration_us long>`, null for non-ISO-BMFF payloads. Codegen'd, same
   * posture as `image_header`/`audio_header`. */
-case class VideoHeader(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = VideoHeader.resultType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"video_header expects binary, got $other")
-  }
-
+case class VideoHeader(child: Expression)
+    extends BinaryCodecExpression("video_header", VideoHeader.resultType) {
   override def nullSafeEval(payload: Any): Any = {
     val parsed = VideoHeaders.parseMp4(payload.asInstanceOf[Array[Byte]])
     if (parsed == null) null
     else InternalRow(UTF8String.fromString(parsed._1), parsed._2, parsed._3)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("videoHeader", this, classOf[VideoHeader].getName)
-    val r = ctx.freshName("vidHdr")
-    nullSafeCodeGen(ctx, ev, b => {
-      s"""
-         |Object $r = $self.nullSafeEval($b);
-         |if ($r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = (org.apache.spark.sql.catalyst.InternalRow) $r; }
-       """.stripMargin
-    })
-  }
-
   override protected def withNewChildInternal(newChild: Expression): VideoHeader =
     copy(child = newChild)
-
-  override def prettyName: String = "video_header"
 }
 
 object VideoHeader {
@@ -589,16 +565,8 @@ object VideoHeader {
   * with zero codec libraries. Null for non-BMFF or structurally broken
   * tables. Codegen'd; at 100 TB this is the per-file video triage scan
   * (bitrate/fps/codec classification) with no frame decode. */
-case class VideoTracks(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = VideoTracks.resultType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"video_tracks expects binary, got $other")
-  }
-
+case class VideoTracks(child: Expression)
+    extends BinaryCodecExpression("video_tracks", VideoTracks.resultType) {
   override def nullSafeEval(payload: Any): Any = {
     val tracks = VideoHeaders.parseTracks(payload.asInstanceOf[Array[Byte]])
     if (tracks == null) null
@@ -609,22 +577,8 @@ case class VideoTracks(child: Expression) extends UnaryExpression {
         t.totalBytes, t.chunkCount)).toArray[Any])
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("videoTracks", this, classOf[VideoTracks].getName)
-    val r = ctx.freshName("vidTrk")
-    nullSafeCodeGen(ctx, ev, b => {
-      s"""
-         |Object $r = $self.nullSafeEval($b);
-         |if ($r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $r; }
-       """.stripMargin
-    })
-  }
-
   override protected def withNewChildInternal(newChild: Expression): VideoTracks =
     copy(child = newChild)
-
-  override def prettyName: String = "video_tracks"
 }
 
 /** `video_samples(binary)` → `array<struct<track_id, sample_idx, offset,
@@ -636,16 +590,8 @@ case class VideoTracks(child: Expression) extends UnaryExpression {
   * decode/dedup/hashing with plain column pruning — the container is read
   * once, no temp files, no external tools). Null for non-BMFF, broken
   * tables, or > 65536 samples (use manifest-level processing there). */
-case class VideoSamples(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = VideoSamples.resultType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"video_samples expects binary, got $other")
-  }
-
+case class VideoSamples(child: Expression)
+    extends BinaryCodecExpression("video_samples", VideoSamples.resultType) {
   override def nullSafeEval(payload: Any): Any = {
     val refs = VideoHeaders.parseSamples(payload.asInstanceOf[Array[Byte]])
     if (refs == null) null
@@ -654,22 +600,8 @@ case class VideoSamples(child: Expression) extends UnaryExpression {
         .toArray[Any])
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("videoSamples", this, classOf[VideoSamples].getName)
-    val r = ctx.freshName("vidSmp")
-    nullSafeCodeGen(ctx, ev, b => {
-      s"""
-         |Object $r = $self.nullSafeEval($b);
-         |if ($r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $r; }
-       """.stripMargin
-    })
-  }
-
   override protected def withNewChildInternal(newChild: Expression): VideoSamples =
     copy(child = newChild)
-
-  override def prettyName: String = "video_samples"
 }
 
 object VideoSamples {

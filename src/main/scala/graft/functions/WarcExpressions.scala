@@ -3,9 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumnShim
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -252,16 +250,8 @@ object Warc {
   * date string, content_length bigint, payload binary>>` for plain or
   * member-gzipped WARC streams; null when the framing does not parse
   * (see [[Warc]]). */
-case class WarcRecords(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = WarcRecords.resultType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"warc_records expects binary, got $other")
-  }
-
+case class WarcRecords(child: Expression)
+    extends BinaryCodecExpression("warc_records", WarcRecords.resultType) {
   override def nullSafeEval(payload: Any): Any = {
     val recs = Warc.parse(payload.asInstanceOf[Array[Byte]])
     if (recs == null) null
@@ -270,22 +260,8 @@ case class WarcRecords(child: Expression) extends UnaryExpression {
       UTF8String.fromString(r._3), r._4, r._5): Any))
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("warcRecords", this, classOf[WarcRecords].getName)
-    val r = ctx.freshName("warc")
-    nullSafeCodeGen(ctx, ev, b => {
-      s"""
-         |Object $r = $self.nullSafeEval($b);
-         |if ($r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $r; }
-       """.stripMargin
-    })
-  }
-
   override protected def withNewChildInternal(newChild: Expression): WarcRecords =
     copy(child = newChild)
-
-  override def prettyName: String = "warc_records"
 }
 
 object WarcRecords {
@@ -306,16 +282,8 @@ object WarcRecords {
   * [[Warc.index]]); null when the framing does not parse. Offsets are
   * into the STORED bytes (compressed-member extents for `.warc.gz`),
   * so `substring(media, offset+1, length)` is independently parseable. */
-case class WarcIndex(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = WarcIndex.resultType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"warc_index expects binary, got $other")
-  }
-
+case class WarcIndex(child: Expression)
+    extends BinaryCodecExpression("warc_index", WarcIndex.resultType) {
   override def nullSafeEval(payload: Any): Any = {
     val recs = Warc.index(payload.asInstanceOf[Array[Byte]])
     if (recs == null) null
@@ -325,22 +293,8 @@ case class WarcIndex(child: Expression) extends UnaryExpression {
       UTF8String.fromString(r._6)): Any))
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("warcIndex", this, classOf[WarcIndex].getName)
-    val r = ctx.freshName("cdx")
-    nullSafeCodeGen(ctx, ev, b => {
-      s"""
-         |Object $r = $self.nullSafeEval($b);
-         |if ($r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $r; }
-       """.stripMargin
-    })
-  }
-
   override protected def withNewChildInternal(newChild: Expression): WarcIndex =
     copy(child = newChild)
-
-  override def prettyName: String = "warc_index"
 }
 
 object WarcIndex {

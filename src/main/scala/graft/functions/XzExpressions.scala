@@ -4,9 +4,7 @@ import scala.util.control.NonFatal
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumnShim
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types._
 
 /** Library-free XZ / LZMA (the public `.xz` file format and LZMA/LZMA2
@@ -1448,35 +1446,12 @@ object Xz {
 
 /** `xz_bytes(binary)` → decompressed bytes; null when the payload is
   * not XZ or any structural / checksum break occurs (see [[Xz]]). */
-case class XzBytes(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"xz_bytes expects binary, got $other")
-  }
-
+case class XzBytes(child: Expression) extends BinaryCodecExpression("xz_bytes", BinaryType) {
   override def nullSafeEval(payload: Any): Any =
     Xz.decode(payload.asInstanceOf[Array[Byte]])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("xzBytes", this, classOf[XzBytes].getName)
-    val r = ctx.freshName("xz")
-    nullSafeCodeGen(ctx, ev, b => {
-      s"""
-         |Object $r = $self.nullSafeEval($b);
-         |if ($r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = (byte[]) $r; }
-       """.stripMargin
-    })
-  }
-
   override protected def withNewChildInternal(newChild: Expression): XzBytes =
     copy(child = newChild)
-
-  override def prettyName: String = "xz_bytes"
 }
 
 object XzBytes {

@@ -5,7 +5,7 @@ import scala.util.control.NonFatal
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumnShim
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 
@@ -202,35 +202,12 @@ object Zstandard {
 
 /** `zstd_bytes(binary)` → decompressed bytes; null when the payload is
   * not zstd or any frame fails (see [[Zstandard.decode]]). */
-case class ZstdBytes(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"zstd_bytes expects binary, got $other")
-  }
-
+case class ZstdBytes(child: Expression) extends BinaryCodecExpression("zstd_bytes", BinaryType) {
   override def nullSafeEval(payload: Any): Any =
     Zstandard.decode(payload.asInstanceOf[Array[Byte]])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("zstdBytes", this, classOf[ZstdBytes].getName)
-    val r = ctx.freshName("zs")
-    nullSafeCodeGen(ctx, ev, b => {
-      s"""
-         |Object $r = $self.nullSafeEval($b);
-         |if ($r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = (byte[]) $r; }
-       """.stripMargin
-    })
-  }
-
   override protected def withNewChildInternal(newChild: Expression): ZstdBytes =
     copy(child = newChild)
-
-  override def prettyName: String = "zstd_bytes"
 }
 
 object ZstdBytes {
@@ -241,35 +218,12 @@ object ZstdBytes {
 /** `zstd_dict(binary)` → the dictionary carried in a leading
   * 0x184D2A5D skippable frame (see [[Zstandard.leadingDictionary]]);
   * null when the payload has no dictionary frame. */
-case class ZstdDictExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"zstd_dict expects binary, got $other")
-  }
-
+case class ZstdDictExpr(child: Expression) extends BinaryCodecExpression("zstd_dict", BinaryType) {
   override def nullSafeEval(payload: Any): Any =
     Zstandard.leadingDictionary(payload.asInstanceOf[Array[Byte]])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("zstdDict", this, classOf[ZstdDictExpr].getName)
-    val r = ctx.freshName("zd")
-    nullSafeCodeGen(ctx, ev, b => {
-      s"""
-         |Object $r = $self.nullSafeEval($b);
-         |if ($r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = (byte[]) $r; }
-       """.stripMargin
-    })
-  }
-
   override protected def withNewChildInternal(newChild: Expression): ZstdDictExpr =
     copy(child = newChild)
-
-  override def prettyName: String = "zstd_dict"
 }
 
 object ZstdDictExpr {
@@ -326,16 +280,8 @@ object ZstdBytesDict {
 /** `zstd_extents(binary)` → `array<struct<off bigint, len bigint>>` —
   * data-frame extents of a multi-frame .zst (see
   * [[Zstandard.frameExtents]]); null when not zstd at all. */
-case class ZstdExtents(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ZstdExtents.resultType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"zstd_extents expects binary, got $other")
-  }
-
+case class ZstdExtents(child: Expression)
+    extends BinaryCodecExpression("zstd_extents", ZstdExtents.resultType) {
   override def nullSafeEval(payload: Any): Any = {
     val exts = Zstandard.frameExtents(payload.asInstanceOf[Array[Byte]])
     if (exts == null) null
@@ -344,23 +290,8 @@ case class ZstdExtents(child: Expression) extends UnaryExpression {
         org.apache.spark.sql.catalyst.InternalRow(e._1, e._2): Any))
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("zstdExtents", this,
-      classOf[ZstdExtents].getName)
-    val r = ctx.freshName("zx")
-    nullSafeCodeGen(ctx, ev, b => {
-      s"""
-         |Object $r = $self.nullSafeEval($b);
-         |if ($r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $r; }
-       """.stripMargin
-    })
-  }
-
   override protected def withNewChildInternal(newChild: Expression): ZstdExtents =
     copy(child = newChild)
-
-  override def prettyName: String = "zstd_extents"
 }
 
 object ZstdExtents {

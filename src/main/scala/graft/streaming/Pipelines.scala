@@ -41,6 +41,18 @@ object Pipelines {
     df.repartition(n, keys: _*)
   }
 
+  /** The one directory watch of every file pipeline: the binaryFile
+    * source over `dir` and its subdirectories, keeping the file names that
+    * `glob` matches, with the source's fixed schema (path,
+    * modificationTime, length, content). */
+  private def watch(spark: SparkSession, dir: String, glob: String = "*"): DataFrame =
+    spark.readStream
+      .format("binaryFile")
+      .option("pathGlobFilter", glob)
+      .option("recursiveFileLookup", "true")
+      .schema("path STRING, modificationTime TIMESTAMP, length LONG, content BINARY")
+      .load(dir)
+
   /** S1/S2/S3 upload side: a directory watched by the binaryFile file source
     * (existing files read first batch, new files per microbatch —
     * `maxFilesPerTrigger` paces; reference debounce becomes the source's
@@ -51,12 +63,7 @@ object Pipelines {
       chunkSize: Int = Chunker.DefaultChunkSize,
       pathGlobFilter: String = "*"): DataFrame = {
     import spark.implicits._
-    val files = spark.readStream
-      .format("binaryFile")
-      .option("pathGlobFilter", pathGlobFilter)
-      .option("recursiveFileLookup", "true")
-      .schema("path STRING, modificationTime TIMESTAMP, length LONG, content BINARY")
-      .load(dir)
+    val files = watch(spark, dir, pathGlobFilter)
     // The source renders paths as absolute URIs (file:/abs/...); normalize
     // the root the same way so relative dirs and file:// URIs both strip
     // cleanly (a raw prefix-strip of a relative dir silently no-ops and the
@@ -230,11 +237,7 @@ object Pipelines {
     * route, don't lose). At 100 TB this is the admission step that
     * partitions a mixed media crawl by modality before any codec runs. */
   def mediaTriageStream(spark: SparkSession, dir: String): DataFrame =
-    mediaTriage(spark.readStream
-      .format("binaryFile")
-      .option("recursiveFileLookup", "true")
-      .schema("path STRING, modificationTime TIMESTAMP, length LONG, content BINARY")
-      .load(dir))
+    mediaTriage(watch(spark, dir))
 
   /** The triage projection itself, over any frame with (`path`, `length`,
     * `content binary`) — shared verbatim by the streaming source above and
@@ -329,11 +332,7 @@ object Pipelines {
   def flacVadStream(spark: SparkSession, dir: String,
       frameSamples: Int = 160, energyFloor: Long = 5000000L): DataFrame = {
     import graft.functions.{FlacDecode, PcmFrames}
-    val files = spark.readStream
-      .format("binaryFile")
-      .option("recursiveFileLookup", "true")
-      .schema("path STRING, modificationTime TIMESTAMP, length LONG, content BINARY")
-      .load(dir)
+    val files = watch(spark, dir)
     files
       .select(col("path"),
         PcmFrames.pcmFrames(FlacDecode.flacDecode(col("content")),
@@ -355,11 +354,7 @@ object Pipelines {
   /** Image-PII privacy gate over a directory watch: every payload runs
     * through [[privacyScrub]] before anything downstream may see it. */
   def privacyScrubStream(spark: SparkSession, dir: String): DataFrame =
-    privacyScrub(spark.readStream
-      .format("binaryFile")
-      .option("recursiveFileLookup", "true")
-      .schema("path STRING, modificationTime TIMESTAMP, length LONG, content BINARY")
-      .load(dir))
+    privacyScrub(watch(spark, dir))
 
   /** The privacy projection itself, over any frame with (`path`, `length`,
     * `content binary`) — shared verbatim by the streaming watch above and
@@ -399,11 +394,7 @@ object Pipelines {
     * error. Per-row map only — nothing shuffles. */
   def wetTextStream(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.WarcRecords
-    val files = spark.readStream
-      .format("binaryFile")
-      .option("recursiveFileLookup", "true")
-      .schema("path STRING, modificationTime TIMESTAMP, length LONG, content BINARY")
-      .load(dir)
+    val files = watch(spark, dir)
     def hits(ws: String) =
       size(expr(s"filter(split(text, ' '), w -> w IN ($ws))"))
     files
@@ -424,11 +415,7 @@ object Pipelines {
 
   def warcTextStream(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.WarcRecords
-    val files = spark.readStream
-      .format("binaryFile")
-      .option("recursiveFileLookup", "true")
-      .schema("path STRING, modificationTime TIMESTAMP, length LONG, content BINARY")
-      .load(dir)
+    val files = watch(spark, dir)
     htmlMainText(
       files
         .select(col("path"),
@@ -448,11 +435,7 @@ object Pipelines {
     * ingest arm. */
   def cdxIndexStream(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.WarcIndex
-    val files = spark.readStream
-      .format("binaryFile")
-      .option("recursiveFileLookup", "true")
-      .schema("path STRING, modificationTime TIMESTAMP, length LONG, content BINARY")
-      .load(dir)
+    val files = watch(spark, dir)
     files
       .select(col("path"), WarcIndex.warcIndex(col("content")).as("idx"))
       .select(col("path"), explode(when(col("idx").isNotNull, col("idx"))
@@ -478,11 +461,7 @@ object Pipelines {
     * shape: a per-file in-row expression — no state, no shuffle. */
   def pdfTextStream(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.PdfText
-    val files = spark.readStream
-      .format("binaryFile")
-      .option("recursiveFileLookup", "true")
-      .schema("path STRING, modificationTime TIMESTAMP, length LONG, content BINARY")
-      .load(dir)
+    val files = watch(spark, dir)
     files
       .select(col("path"), PdfText.pdfText(col("content")).as("pages"))
       .select(col("path"), col("pages"),
@@ -648,11 +627,7 @@ object Pipelines {
     * dropped into `dir` lands as text rows through the one shared
     * projection. */
   def docTextStream(spark: SparkSession, dir: String): DataFrame =
-    docText(spark.readStream
-      .format("binaryFile")
-      .option("recursiveFileLookup", "true")
-      .schema("path STRING, modificationTime TIMESTAMP, length LONG, content BINARY")
-      .load(dir))
+    docText(watch(spark, dir))
 
   /** Wikipedia-dump ingest (the x249/x250 projection as a reusable
     * surface): (path, content) rows of `.xml.bz2` dumps → one row per
@@ -818,11 +793,7 @@ object Pipelines {
 
   /** Streaming twin of [[wikidumpPlain]] — same projection verbatim. */
   def wikidumpPlainStream(spark: SparkSession, dir: String): DataFrame =
-    wikidumpPlain(spark.readStream
-      .format("binaryFile")
-      .option("recursiveFileLookup", "true")
-      .schema("path STRING, modificationTime TIMESTAMP, length LONG, content BINARY")
-      .load(dir))
+    wikidumpPlain(watch(spark, dir))
 
   /** The published multistream INDEX parse
     * (`…-multistream-index.txt.bz2`: one `offset:pageid:title` line per
@@ -943,11 +914,7 @@ object Pipelines {
   /** Streaming twin of [[wikidumpArticles]] — the corpus view over a
     * directory watch, same projection verbatim. */
   def wikidumpArticlesStream(spark: SparkSession, dir: String): DataFrame =
-    wikidumpArticles(spark.readStream
-      .format("binaryFile")
-      .option("recursiveFileLookup", "true")
-      .schema("path STRING, modificationTime TIMESTAMP, length LONG, content BINARY")
-      .load(dir))
+    wikidumpArticles(watch(spark, dir))
 
   /** The INVERSE path: write a curated corpus back out as the
     * randomly-accessible artifact the ecosystem already knows how to
@@ -1194,22 +1161,12 @@ object Pipelines {
     * watched directory emit post rows through the same projection
     * verbatim, so the two ingest modes cannot drift. */
   def sedumpPostsStream(spark: SparkSession, dir: String): DataFrame =
-    sedumpPosts(spark.readStream
-      .format("binaryFile")
-      .option("pathGlobFilter", "*.7z")
-      .option("recursiveFileLookup", "true")
-      .schema("path STRING, modificationTime TIMESTAMP, length LONG, content BINARY")
-      .load(dir))
+    sedumpPosts(watch(spark, dir, "*.7z"))
 
   /** Streaming twin of [[warcZstRecords]] — same projection verbatim,
     * dictionary frames and all. */
   def warcZstStream(spark: SparkSession, dir: String): DataFrame =
-    warcZstRecords(spark.readStream
-      .format("binaryFile")
-      .option("pathGlobFilter", "*.warc.zst")
-      .option("recursiveFileLookup", "true")
-      .schema("path STRING, modificationTime TIMESTAMP, length LONG, content BINARY")
-      .load(dir))
+    warcZstRecords(watch(spark, dir, "*.warc.zst"))
 
   /** The `.warc.zst` CORPUS SINK — the zstd twin of [[wikidumpSink]],
     * for the other giant-file corpus format: each PARTITION becomes one
@@ -1418,11 +1375,7 @@ object Pipelines {
     * of [[wikidumpPages]] (the pdfTextStream pattern: a corpus grows as
     * dump files land instead of being re-scanned). */
   def wikidumpStream(spark: SparkSession, dir: String): DataFrame =
-    wikidumpPages(spark.readStream
-      .format("binaryFile")
-      .option("recursiveFileLookup", "true")
-      .schema("path STRING, modificationTime TIMESTAMP, length LONG, content BINARY")
-      .load(dir))
+    wikidumpPages(watch(spark, dir))
 
   /** The one member-level extraction chain both [[archiveText]] and
     * [[docText]] project through: dispatch by the member NAME's
@@ -1551,11 +1504,7 @@ object Pipelines {
     * (ArchiveTextStreamSpec proves the two produce identical rows on
     * mixed drops). */
   def archiveTextStream(spark: SparkSession, dir: String): DataFrame =
-    archiveText(spark.readStream
-      .format("binaryFile")
-      .option("recursiveFileLookup", "true")
-      .schema("path STRING, modificationTime TIMESTAMP, length LONG, content BINARY")
-      .load(dir))
+    archiveText(watch(spark, dir))
 
   /** Streaming incremental-dedup gate against a PRIOR corpus's Bloom
     * filter (the x166 batch gate's streaming twin): text files dropped
@@ -1573,11 +1522,7 @@ object Pipelines {
   def bloomGateStream(spark: SparkSession, dir: String, bits: Array[Long],
       mBits: Int, minNovelty: Double = 0.5): DataFrame = {
     require(bits.length == mBits / 64, "bits length must match mBits")
-    val files = spark.readStream
-      .format("binaryFile")
-      .option("recursiveFileLookup", "true")
-      .schema("path STRING, modificationTime TIMESTAMP, length LONG, content BINARY")
-      .load(dir)
+    val files = watch(spark, dir)
     def seen(j: Int): String =
       s"""(element_at(bits, cast(cast(conv(substr(md5(concat('$j', g)), 1, 15),
          |16, 10) as bigint) % $mBits div 64 as int) + 1)
@@ -1617,11 +1562,7 @@ object Pipelines {
     * dropped and not fatal (dead-letter posture). */
   def jsonlTextStream(spark: SparkSession, dir: String,
       schema: String): DataFrame = {
-    val files = spark.readStream
-      .format("binaryFile")
-      .option("recursiveFileLookup", "true")
-      .schema("path STRING, modificationTime TIMESTAMP, length LONG, content BINARY")
-      .load(dir)
+    val files = watch(spark, dir)
     jsonlParse(
       files
         .select(col("path"),
@@ -1869,13 +1810,7 @@ object Pipelines {
     * routes it. */
   private def pathStream(spark: SparkSession, dir: String,
       glob: String): DataFrame =
-    spark.readStream
-      .format("binaryFile")
-      .option("pathGlobFilter", glob)
-      .option("recursiveFileLookup", "true")
-      .schema("path STRING, modificationTime TIMESTAMP, length LONG, content BINARY")
-      .load(dir)
-      .select(col("path"))
+    watch(spark, dir, glob).select(col("path"))
 
   /** Streaming twin of [[sedumpPostsRanged]] — same projection
     * verbatim over a listing-only watch ([[pathStream]]): the ranged
@@ -1901,11 +1836,7 @@ object Pipelines {
     * and no shuffle ever touches the frame bytes. */
   def mjpegFrameStream(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.{JpegPixels, VideoSamples}
-    spark.readStream
-      .format("binaryFile")
-      .option("recursiveFileLookup", "true")
-      .schema("path STRING, modificationTime TIMESTAMP, length LONG, content BINARY")
-      .load(dir)
+    watch(spark, dir)
       .select(col("path"), col("content"),
         explode(VideoSamples.videoSamples(col("content"))).as("s"))
       .select(col("path"),

@@ -81,14 +81,16 @@ class AppSessionListingSpec extends AnyFunSuite {
     }
     // unset: every processor the JVM sees
     assert(AppSession.cpus(Map.empty) == Right(Runtime.getRuntime.availableProcessors))
-    // Prof's run count goes through the same check
-    assert(AppSession.positiveSetting("SPARK_GRAFT_PROF_N", 3, Map.empty) == Right(3))
-    assert(AppSession.positiveSetting("SPARK_GRAFT_PROF_N", 3,
-      Map("SPARK_GRAFT_PROF_N" -> "5")) == Right(5))
-    Seq("", "0", "-1", "abc", "2.5", "99999999999").foreach { raw =>
-      assert(AppSession.positiveSetting("SPARK_GRAFT_PROF_N", 3,
-        Map("SPARK_GRAFT_PROF_N" -> raw)) ==
-        Left(s"SPARK_GRAFT_PROF_N must be a positive integer, got '$raw'"))
+    // Prof's and Bench's run counts and StreamBench's scale go through the
+    // same check
+    Seq("SPARK_GRAFT_PROF_N" -> 3, "SPARK_GRAFT_BENCH_N" -> 3,
+        "SPARK_GRAFT_STREAM_SCALE" -> 1).foreach { case (name, unset) =>
+      assert(AppSession.positiveSetting(name, unset, Map.empty) == Right(unset))
+      assert(AppSession.positiveSetting(name, unset, Map(name -> "5")) == Right(5))
+      Seq("", "0", "-1", "abc", "2.5", "99999999999").foreach { raw =>
+        assert(AppSession.positiveSetting(name, unset, Map(name -> raw)) ==
+          Left(s"$name must be a positive integer, got '$raw'"))
+      }
     }
   }
 }

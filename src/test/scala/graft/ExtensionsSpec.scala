@@ -1,15 +1,96 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.util.Try
+
+import org.apache.spark.sql.{AnalysisException, GraftColumnShim, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, Literal, UnsafeProjection}
+import org.apache.spark.sql.types.BinaryType
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.GraftExtensions
+import graft.functions.{BinaryCodecExpression, ChunkFunctions, GraftExtensions, PdfRevisions}
 
 /** The SparkSessionExtensions install path: a session built with
   * GraftExtensions resolves pack_chunk/unpack_chunk in SQL with no explicit
   * registration call. The session is private to the test: extensions apply
-  * only when a session is built, and none may reach another spec. */
+  * only when a session is built, and none may reach another spec. The
+  * function table is installed whole by both paths, and every binary codec
+  * keeps the contract its base class promises. */
 class ExtensionsSpec extends AnyFunSuite {
+
+  /** SQL arguments for the table's functions that take something other
+    * than one binary payload. */
+  private val otherArgs = Map(
+    "pack_chunk" -> "struct('f', X'00', X'00', 0L, 0, 1, '', '', X'00', 0D)",
+    "chunk_binary" -> "X'00', 4",
+    "vec_dot" -> "array(CAST(1 AS FLOAT)), array(CAST(1 AS FLOAT))",
+    "vec_norm" -> "array(CAST(1 AS FLOAT))",
+    "gear_boundaries" -> "'text', 4",
+    "pcm_frames" -> "X'00', 4",
+    "zstd_bytes_dict" -> "X'00', X'00'",
+    "wikitext_plain" -> "'text'",
+    "bloom_bits" -> "array(CAST(0 AS BIGINT)), 64")
+
+  /** The table's names that `spark` cannot resolve in SQL to an expression
+    * of the table's class. */
+  private def unresolved(spark: SparkSession): Seq[String] =
+    ChunkFunctions.table.filterNot { f =>
+      val args = otherArgs.getOrElse(f.name, "CAST(NULL AS BINARY)")
+      Try(spark.sql(s"SELECT ${f.name}($args)").queryExecution.analyzed).toOption
+        .exists(_.collect { case node => node.expressions }.flatten
+          .exists(_.exists(f.cls.isInstance)))
+    }.map(_.name)
+
+  test("register and withExtensions install the same function table") {
+    assert(ChunkFunctions.table.map(_.name).distinct.length == 54)
+    // a fresh session of the shared context: no extension, no earlier
+    // registration
+    val registered = LocalSpark.session.newSession()
+    assert(unresolved(registered).nonEmpty)
+    ChunkFunctions.register(registered)
+    assert(unresolved(registered).isEmpty)
+    LocalSpark.isolated(SparkSession.builder()
+        .withExtensions(new GraftExtensions).getOrCreate()) { extended =>
+      assert(unresolved(extended).isEmpty)
+    }
+  }
+
+  test("every binary codec: null in null out, binary only, same answer with or without codegen") {
+    val payload = BoundReference(0, BinaryType, nullable = true)
+    val codecs = ChunkFunctions.table
+      .filter(f => classOf[BinaryCodecExpression].isAssignableFrom(f.cls))
+      .map(f => f.name -> f.build) :+
+      ("pdf_revisions" -> ((es: Seq[Expression]) => PdfRevisions(es.head)))
+    assert(codecs.length == 45)
+    val garbage = Array.tabulate[Byte](16)(i => (i * 73 + 41).toByte)
+    def run(mode: String, e: Expression, in: Array[Byte]): Try[InternalRow] =
+      LocalSpark.withConf("spark.sql.codegen.factoryMode" -> mode,
+          "spark.sql.codegen.fallback" -> "false") {
+        Try(UnsafeProjection.create(Seq(e)).apply(InternalRow(in)).copy())
+      }
+    codecs.foreach { case (name, build) =>
+      val e = build(Seq(payload))
+      assert(e.prettyName == name && e.nullable, name)
+      // tasks carry expressions through Java serialization
+      val bytes = new java.io.ByteArrayOutputStream
+      new java.io.ObjectOutputStream(bytes).writeObject(e)
+      assert(new java.io.ObjectInputStream(new java.io.ByteArrayInputStream(bytes.toByteArray))
+        .readObject() == e, s"$name: Java serialization round trip")
+      Seq("NO_CODEGEN", "CODEGEN_ONLY").foreach { mode =>
+        assert(run(mode, e, null).get.isNullAt(0), s"$name($mode): null payload")
+      }
+      val bad = intercept[AnalysisException](LocalSpark.session.range(1)
+        .select(GraftColumnShim.column(build(Seq(Literal(1))))).queryExecution.assertAnalyzed())
+      assert(bad.getMessage.contains(s"$name expects binary, got IntegerType"), bad.getMessage)
+      (run("NO_CODEGEN", e, garbage), run("CODEGEN_ONLY", e, garbage)) match {
+        case (interpreted, generated) if interpreted.isSuccess && generated.isSuccess =>
+          assert(interpreted.get == generated.get, s"$name: interpreted vs generated")
+        case (interpreted, generated) =>
+          assert(interpreted.isFailure && generated.isFailure,
+            s"$name threw in one mode only: $interpreted vs $generated")
+      }
+    }
+  }
 
   test("withExtensions installs codec functions for SQL") {
     LocalSpark.isolated(SparkSession.builder()
