@@ -36,7 +36,7 @@ object Bench {
     val sampleQueries = Set("x207_lsh_sweep", "x153s_image_dedup_scale")
     val sampleDir: Option[String] = sys.env.get("SPARK_GRAFT_BENCH_SAMPLE").map { _ =>
       import org.apache.spark.sql.functions.col
-      val d = Files.createTempDirectory("graft_bench_sample").toString
+      val d = queries.Scratch.scratch("graft_bench_sample")
       queries.Core.table(spark, sfDir, "documents")
         .where(col("doc_id") % 4 === 0)
         .write.mode("overwrite").parquet(s"$d/documents.parquet")

@@ -5616,18 +5616,10 @@ object Dataflow {
       |FROM r ORDER BY media_id, stream, page""".stripMargin)) {
     (spark, dir) =>
       import spark.implicits._
-      val tmp = java.nio.file.Files.createTempDirectory("x251_dumps")
-        .toFile.getAbsolutePath
-      spread(table(spark, dir, "documents").select(col("doc_id"))
-          .where(col("doc_id") % 5 === 0))
-        .as[Long]
-        .foreachPartition { (it: Iterator[Long]) =>
-          it.foreach { id =>
-            java.nio.file.Files.write(
-              java.nio.file.Paths.get(tmp, s"$id.xml.bz2"),
-              multistreamDump(id))
-          }
-        }
+      val tmp = Scratch.scratch("x251_dumps")
+      Scratch.writeDocs(table(spark, dir, "documents").select(col("doc_id"))
+          .where(col("doc_id") % 5 === 0), tmp)(
+        id => Seq(s"$id.xml.bz2" -> multistreamDump(id)))
       val paths = new java.io.File(tmp).listFiles.map(_.getAbsolutePath).toSeq
       graft.streaming.Pipelines.wikidumpPagesRanged(paths.toDF("path"))
         .select(
@@ -5857,38 +5849,19 @@ object Dataflow {
         .orderBy("media_id", "member")
   }
 
-  /** x256's fixture directories (the x267 setup-caching note applies). */
-  private val x256Fixtures =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** x256 fixture build (SETUP, not the operator under test): one
-    * bzip2-encode + write of the dump/index pair per (JVM, sf dir).
-    * Named so [[graft.Bench]] can run it in its untimed setup phase
-    * (via [[fixtureSetups]]) — the timed region then measures only the
-    * index parse + range fetch, never the from-scratch bzip2 ENCODER
-    * (~1 MB/s). Idempotent: standalone callers (Verify, tests) hit the
-    * same computeIfAbsent on first use. */
-  private[graft] def x256FixtureDir(
+  /** x256's fixture: the dump/index pair of every doc. The bzip2 ENCODE
+    * (~1 MB/s) is setup; the timed operator is the index parse + range
+    * fetch. */
+  private def x256Fixture(
       spark: org.apache.spark.sql.SparkSession, dir: String): String =
-    x256Fixtures.computeIfAbsent(dir, { _ =>
-      import spark.implicits._
-      import graft.functions.Bzip2
-      val t = java.nio.file.Files.createTempDirectory("x256_dumps")
-        .toFile.getAbsolutePath
-      spread(table(spark, dir, "documents").select(col("doc_id")))
-        .as[Long]
-        .foreachPartition { (it: Iterator[Long]) =>
-          it.foreach { id =>
-            val (bytes, lines) = multistreamDumpIndexed(id)
-            java.nio.file.Files.write(
-              java.nio.file.Paths.get(t, s"$id.xml.bz2"), bytes)
-            java.nio.file.Files.write(
-              java.nio.file.Paths.get(t, s"$id-index.txt.bz2"),
-              Bzip2.encode((lines.mkString("\n") + "\n").getBytes("UTF-8")))
-          }
-        }
-      t
-    })
+    Scratch.fixture("x256_dumps", dir) { t =>
+      Scratch.writeDocs(table(spark, dir, "documents").select(col("doc_id")), t) { id =>
+        val (bytes, lines) = multistreamDumpIndexed(id)
+        Seq(s"$id.xml.bz2" -> bytes,
+          s"$id-index.txt.bz2" -> graft.functions.Bzip2.encode(
+            (lines.mkString("\n") + "\n").getBytes("UTF-8")))
+      }
+    }
 
   /** x256: RANDOM-ACCESS PAGE FETCH over the published multistream
     * INDEX — the whole point of the multistream distribution: a
@@ -5918,12 +5891,7 @@ object Dataflow {
       |    AS n_chars
       |FROM e ORDER BY media_id""".stripMargin)) {
     (spark, dir) =>
-      import spark.implicits._
-      import graft.functions.Bzip2
-      // fixture build is SETUP, not the operator under test: built in
-      // Bench's untimed setup phase (fixtureSetups); first-use fallback
-      // here for standalone callers (see x256FixtureDir)
-      val tmp = Dataflow.x256FixtureDir(spark, dir)
+      val tmp = x256Fixture(spark, dir)
       val idx = graft.streaming.Pipelines.wikidumpIndexLines(
           spark.read.format("binaryFile")
             .option("pathGlobFilter", "*-index.txt.bz2")
@@ -6183,8 +6151,7 @@ object Dataflow {
       |FROM p ORDER BY page_id""".stripMargin)) {
     (spark, dir) =>
       import spark.implicits._
-      val tmp = java.nio.file.Files.createTempDirectory("x261_sink")
-        .toFile.getAbsolutePath
+      val tmp = Scratch.scratch("x261_sink")
       val pages = table(spark, dir, "documents").select(col("doc_id"))
         .select(col("doc_id").as("page_id"),
           concat(lit("Doc <"), col("doc_id"), lit("> & \"q\"")).as("title"),
@@ -6270,44 +6237,34 @@ object Dataflow {
         .orderBy("media_id", "member")
   }
 
-  /** x267's fixture directories, one per sf dir per JVM (see the gate's
-    * setup note). */
-  private val x267Fixtures =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** One `<id>.7z` per doc of `dir`'s documents, written by the archive
+    * `build(id)` returns, into the fixture directory `name`. */
+  private def sevenZipFixture(spark: org.apache.spark.sql.SparkSession,
+      dir: String, name: String)(build: Long => Array[Byte]): String =
+    Scratch.fixture(name, dir) { t =>
+      Scratch.writeDocs(table(spark, dir, "documents").select(col("doc_id")), t)(
+        id => Seq(s"$id.7z" -> build(id)))
+    }
 
-  /** x267 fixture build — see the x256FixtureDir note: Bench runs this
-    * untimed via [[fixtureSetups]]; first use elsewhere builds on demand. */
-  private[graft] def x267FixtureDir(
+  /** x267's fixture: Posts.xml archives; every 13th is torn. */
+  private def x267Fixture(
       spark: org.apache.spark.sql.SparkSession, dir: String): String =
-    x267Fixtures.computeIfAbsent(dir, { _ =>
-      import spark.implicits._
-      import graft.functions.SevenZip
-      val t = java.nio.file.Files.createTempDirectory("x267_sedump")
-        .toFile.getAbsolutePath
-      spread(table(spark, dir, "documents").select(col("doc_id"))).as[Long]
-        .foreachPartition { (it: Iterator[Long]) =>
-          it.foreach { id =>
-            val xml = sedumpPostsFixtureXml(id)
-            val arc = SevenZip.build(
-              Seq(("Posts.xml", xml.getBytes("UTF-8"))),
-              encodedHeader = id % 2 == 1,
-              chainFor = _ =>
-                // exotic branch-converter chain (a non-x86 arch):
-                // unstreamable in BOTH modes — the routing arm
-                if (id % 17 == 0 && id % 13 != 0)
-                  Some((0x05L, Array.empty[Byte]))
-                else None,
-              coderFor = _ =>
-                if (id % 3 == 0) 0
-                else if (id % 5 == 0) 2 // raw LZMA1: streams ranged too
-                else 1) // Copy / LZMA2
-            val arm = if (id % 13 == 0) arc.dropRight(5) else arc
-            java.nio.file.Files.write(
-              java.nio.file.Paths.get(t, s"$id.7z"), arm)
-          }
-        }
-      t
-    })
+    sevenZipFixture(spark, dir, "x267_sedump") { id =>
+      val arc = graft.functions.SevenZip.build(
+        Seq(("Posts.xml", sedumpPostsFixtureXml(id).getBytes("UTF-8"))),
+        encodedHeader = id % 2 == 1,
+        chainFor = _ =>
+          // exotic branch-converter chain (a non-x86 arch):
+          // unstreamable in BOTH modes — the routing arm
+          if (id % 17 == 0 && id % 13 != 0)
+            Some((0x05L, Array.empty[Byte]))
+          else None,
+        coderFor = _ =>
+          if (id % 3 == 0) 0
+          else if (id % 5 == 0) 2 // raw LZMA1: streams ranged too
+          else 1) // Copy / LZMA2
+      if (id % 13 == 0) arc.dropRight(5) else arc
+    }
 
   /** The 3-post `Posts.xml` both SE-dump ingest gates build (x263
     * bounded, x267 ranged) — SAME text formulas so both oracles state
@@ -6430,8 +6387,7 @@ object Dataflow {
     (spark, dir) =>
       import spark.implicits._
       import graft.functions.{WarcRecords, ZstdBytes, ZstdExtents}
-      val tmp = java.nio.file.Files.createTempDirectory("x264_sink")
-        .toFile.getAbsolutePath
+      val tmp = Scratch.scratch("x264_sink")
       val recs = table(spark, dir, "documents").select(col("doc_id"))
         .select(
           concat(lit("http://d"), col("doc_id"), lit(".example/x")).as("uri"),
@@ -6487,23 +6443,8 @@ object Dataflow {
       |  CAST(length(payload) AS BIGINT) AS n_bytes
       |FROM p ORDER BY media_id""".stripMargin)) {
     (spark, dir) =>
-      import spark.implicits._
-      val tmp = java.nio.file.Files.createTempDirectory("x265_dict")
-        .toFile.getAbsolutePath
-      val boiler = "HTTP/1.1 200 OK | Content-Type: text/html; " +
-        "charset=utf-8 | Server: graft-origin/2.4 (corpus mirror tier) | " +
-        "Cache-Control: max-age=86400, public | " +
-        "X-Crawl-Tier: curated-common-corpus | " +
-        "<!doctype html><html lang=en><head><meta charset=utf-8>" +
-        "<title>corpus page</title></head><body><main id=content>"
-      val recs = table(spark, dir, "documents").select(col("doc_id"))
-        .select(
-          concat(lit("http://d"), col("doc_id"), lit(".example/p")).as("uri"),
-          lit("2024-01-01T00:00:00Z").as("date"),
-          concat(lit(boiler), lit("doc "), col("doc_id"), lit(" tail "),
-            col("doc_id") % 7, lit("</main></body></html>"))
-            .cast("binary").as("payload"))
-        .repartition(4)
+      val tmp = Scratch.scratch("x265_dict")
+      val recs = boilerplateWarcRecords(spark, dir)
       val dict = graft.streaming.Pipelines.trainWarcDict(
         recs, maxSamples = 1024, dictBytes = 4 << 10)
       graft.streaming.Pipelines.warcZstSink(recs, tmp, dict = Some(dict))
@@ -6673,12 +6614,7 @@ object Dataflow {
       |  SELECT doc_id, NULL, NULL, NULL, NULL, false FROM d WHERE tq OR fq)
       |ORDER BY media_id, post_id""".stripMargin)) {
     (spark, dir) =>
-      import spark.implicits._
-      import graft.functions.SevenZip
-      // fixture build is SETUP, not the operator under test: built in
-      // Bench's untimed setup phase (fixtureSetups); bench repetitions
-      // measure the ranged read
-      val tmp = Dataflow.x267FixtureDir(spark, dir)
+      val tmp = x267Fixture(spark, dir)
       val paths = table(spark, dir, "documents").select(
         concat(lit(tmp + "/"), col("doc_id"), lit(".7z")).as("path"))
       graft.streaming.Pipelines.sedumpPostsRanged(paths)
@@ -6691,37 +6627,37 @@ object Dataflow {
         .orderBy("media_id", "post_id")
   }
 
-  /** x268's fixture directories (the x267 setup-caching note applies). */
-  private val x268Fixtures =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** x265 and x268's records: one WARC response per doc whose payload is
+    * a shared HTTP/HTML boilerplate (what a trained dictionary learns)
+    * around a short per-doc body, in 4 partitions. */
+  private def boilerplateWarcRecords(
+      spark: org.apache.spark.sql.SparkSession, dir: String) = {
+    val boiler = "HTTP/1.1 200 OK | Content-Type: text/html; " +
+      "charset=utf-8 | Server: graft-origin/2.4 (corpus mirror tier) | " +
+      "Cache-Control: max-age=86400, public | " +
+      "X-Crawl-Tier: curated-common-corpus | " +
+      "<!doctype html><html lang=en><head><meta charset=utf-8>" +
+      "<title>corpus page</title></head><body><main id=content>"
+    table(spark, dir, "documents").select(col("doc_id"))
+      .select(
+        concat(lit("http://d"), col("doc_id"), lit(".example/p")).as("uri"),
+        lit("2024-01-01T00:00:00Z").as("date"),
+        concat(lit(boiler), lit("doc "), col("doc_id"), lit(" tail "),
+          col("doc_id") % 7, lit("</main></body></html>"))
+          .cast("binary").as("payload"))
+      .repartition(4)
+  }
 
-  /** x268 fixture build — dictionary training + .warc.zst sink (x264/
-    * x265's operators, gated there). Bench runs this untimed via
-    * [[fixtureSetups]]; first use elsewhere builds on demand. */
-  private[graft] def x268FixtureDir(
+  /** x268's fixture: the x265 dictionary sink's `.warc.zst` files
+    * (dictionary training and the sink are gated by x264/x265). */
+  private def x268Fixture(
       spark: org.apache.spark.sql.SparkSession, dir: String): String =
-    x268Fixtures.computeIfAbsent(dir, { _ =>
-      val t = java.nio.file.Files.createTempDirectory("x268_ranged")
-        .toFile.getAbsolutePath
-      val boiler = "HTTP/1.1 200 OK | Content-Type: text/html; " +
-        "charset=utf-8 | Server: graft-origin/2.4 (corpus mirror tier) | " +
-        "Cache-Control: max-age=86400, public | " +
-        "X-Crawl-Tier: curated-common-corpus | " +
-        "<!doctype html><html lang=en><head><meta charset=utf-8>" +
-        "<title>corpus page</title></head><body><main id=content>"
-      val recs = table(spark, dir, "documents").select(col("doc_id"))
-        .select(
-          concat(lit("http://d"), col("doc_id"), lit(".example/p")).as("uri"),
-          lit("2024-01-01T00:00:00Z").as("date"),
-          concat(lit(boiler), lit("doc "), col("doc_id"), lit(" tail "),
-            col("doc_id") % 7, lit("</main></body></html>"))
-            .cast("binary").as("payload"))
-        .repartition(4)
+    Scratch.fixture("x268_ranged", dir) { t =>
+      val recs = boilerplateWarcRecords(spark, dir)
       val dict = graft.streaming.Pipelines.trainWarcDict(
         recs, maxSamples = 1024, dictBytes = 4 << 10)
       graft.streaming.Pipelines.warcZstSink(recs, t, dict = Some(dict))
-      t
-    })
+    }
 
   /** x268: RANGED WARC.ZST INGEST — the zstd member of the ranged
     * trio, lifting the column path's 2 GB bound for crawl monoliths:
@@ -6757,11 +6693,7 @@ object Dataflow {
       |  CAST(length(payload) AS BIGINT) AS n_bytes
       |FROM p ORDER BY media_id""".stripMargin)) {
     (spark, dir) =>
-      import spark.implicits._
-      // fixture build is SETUP, not the operator under test: built in
-      // Bench's untimed setup phase (fixtureSetups); bench repetitions
-      // measure the RANGED READ
-      val tmp = Dataflow.x268FixtureDir(spark, dir)
+      val tmp = x268Fixture(spark, dir)
       val listing = spark.read.format("binaryFile").load(tmp)
         .select(regexp_replace(col("path"), "^file:", "").as("path"))
       graft.streaming.Pipelines.warcZstRanged(listing)
@@ -6775,31 +6707,13 @@ object Dataflow {
         .orderBy("media_id")
   }
 
-  /** x269's fixture directories, one per sf dir per JVM (the x267
-    * setup-caching note applies). */
-  private val x269Fixtures =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** x269 fixture build — see the x256FixtureDir note. */
-  private[graft] def x269FixtureDir(
+  /** x269's fixture: three-table archives, Copy/LZMA2. */
+  private def x269Fixture(
       spark: org.apache.spark.sql.SparkSession, dir: String): String =
-    x269Fixtures.computeIfAbsent(dir, { _ =>
-      import spark.implicits._
-      import graft.functions.SevenZip
-      val t = java.nio.file.Files.createTempDirectory("x269_sedump")
-        .toFile.getAbsolutePath
-      spread(table(spark, dir, "documents").select(col("doc_id"))).as[Long]
-        .foreachPartition { (it: Iterator[Long]) =>
-          it.foreach { id =>
-            val arc = SevenZip.build(sedumpTablesFixture(id),
-              encodedHeader = id % 4 < 2,
-              coderFor = _ => if (id % 2 == 0) 0 else 1)
-            java.nio.file.Files.write(
-              java.nio.file.Paths.get(t, s"$id.7z"), arc)
-          }
-        }
-      t
-    })
+    sevenZipFixture(spark, dir, "x269_sedump")(id =>
+      graft.functions.SevenZip.build(sedumpTablesFixture(id),
+        encodedHeader = id % 4 < 2,
+        coderFor = _ => if (id % 2 == 0) 0 else 1))
 
   /** x269: RANGED SE-DUMP RELATIONAL — x266's composition (generic
     * attribute tables, LEFT owner join for ownerless posts, map-side
@@ -6829,10 +6743,7 @@ object Dataflow {
       |  n_comments, sum_score
       |FROM e ORDER BY media_id, post_id""".stripMargin)) {
     (spark, dir) =>
-      import spark.implicits._
-      import graft.functions.SevenZip
-      // fixture build: Bench untimed setup phase (fixtureSetups)
-      val tmp = Dataflow.x269FixtureDir(spark, dir)
+      val tmp = x269Fixture(spark, dir)
       val paths = table(spark, dir, "documents").select(
         concat(lit(tmp + "/"), col("doc_id"), lit(".7z")).as("path"))
       def tbl(member: String, attrs: Seq[String]) =
@@ -6861,30 +6772,13 @@ object Dataflow {
         .orderBy("media_id", "post_id")
   }
 
-  /** x270's fixture directories (the x267 setup-caching note applies). */
-  private val x270Fixtures =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** x270 fixture build — see the x256FixtureDir note. */
-  private[graft] def x270FixtureDir(
+  /** x270's fixture: three-table archives, every member raw LZMA1. */
+  private def x270Fixture(
       spark: org.apache.spark.sql.SparkSession, dir: String): String =
-    x270Fixtures.computeIfAbsent(dir, { _ =>
-      import spark.implicits._
-      import graft.functions.SevenZip
-      val t = java.nio.file.Files.createTempDirectory("x270_lzma1")
-        .toFile.getAbsolutePath
-      spread(table(spark, dir, "documents").select(col("doc_id"))).as[Long]
-        .foreachPartition { (it: Iterator[Long]) =>
-          it.foreach { id =>
-            val arc = SevenZip.build(sedumpTablesFixture(id),
-              encodedHeader = id % 2 == 0,
-              coderFor = _ => 2) // every member raw LZMA1
-            java.nio.file.Files.write(
-              java.nio.file.Paths.get(t, s"$id.7z"), arc)
-          }
-        }
-      t
-    })
+    sevenZipFixture(spark, dir, "x270_lzma1")(id =>
+      graft.functions.SevenZip.build(sedumpTablesFixture(id),
+        encodedHeader = id % 2 == 0,
+        coderFor = _ => 2))
 
   /** x270: RANGED SE-DUMP OVER RAW-LZMA1 ARCHIVES — the coder
     * pre-2015 7-Zip wrote by DEFAULT, so a large slice of real
@@ -6920,10 +6814,7 @@ object Dataflow {
       |  n_comments, sum_score
       |FROM e ORDER BY media_id, post_id""".stripMargin)) {
     (spark, dir) =>
-      import spark.implicits._
-      import graft.functions.SevenZip
-      // fixture build: Bench untimed setup phase (fixtureSetups)
-      val tmp = Dataflow.x270FixtureDir(spark, dir)
+      val tmp = x270Fixture(spark, dir)
       val paths = table(spark, dir, "documents").select(
         concat(lit(tmp + "/"), col("doc_id"), lit(".7z")).as("path"))
       def tbl(member: String, attrs: Seq[String]) =
@@ -6952,44 +6843,27 @@ object Dataflow {
         .orderBy("media_id", "post_id")
   }
 
-  /** x271's fixture directories (the x267 setup-caching note applies). */
-  private val x271Fixtures =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** x271 fixture build — see the x256FixtureDir note. */
-  private[graft] def x271FixtureDir(
+  /** x271's fixture: chained Posts.xml archives; every 13th is torn. */
+  private def x271Fixture(
       spark: org.apache.spark.sql.SparkSession, dir: String): String =
-    x271Fixtures.computeIfAbsent(dir, { _ =>
-      import spark.implicits._
-      import graft.functions.SevenZip
-      val t = java.nio.file.Files.createTempDirectory("x271_chained")
-        .toFile.getAbsolutePath
-      spread(table(spark, dir, "documents").select(col("doc_id"))).as[Long]
-        .foreachPartition { (it: Iterator[Long]) =>
-          it.foreach { id =>
-            val xml = sedumpPostsFixtureXml(id)
-            val chains: Int => Option[(Long, Array[Byte])] = _ =>
-              if (id % 17 == 0 && id % 13 != 0)
-                Some((0x05L, Array.empty[Byte])) // exotic: routes
-              else (id % 3) match {
-                case 0 => None
-                case 1 => Some((0x03L, Array[Byte]((id % 4).toByte)))
-                case _ => Some((
-                  if (id % 2 == 0) 0x04L else 0x03030103L,
-                  Array.empty[Byte]))
-              }
-            val arc = SevenZip.build(
-              Seq(("Posts.xml", xml.getBytes("UTF-8"))),
-              encodedHeader = id % 2 == 1,
-              chainFor = chains,
-              coderFor = _ => if (id % 5 == 0) 2 else 1)
-            val arm = if (id % 13 == 0) arc.dropRight(5) else arc
-            java.nio.file.Files.write(
-              java.nio.file.Paths.get(t, s"$id.7z"), arm)
-          }
+    sevenZipFixture(spark, dir, "x271_chained") { id =>
+      val chains: Int => Option[(Long, Array[Byte])] = _ =>
+        if (id % 17 == 0 && id % 13 != 0)
+          Some((0x05L, Array.empty[Byte])) // exotic: routes
+        else (id % 3) match {
+          case 0 => None
+          case 1 => Some((0x03L, Array[Byte]((id % 4).toByte)))
+          case _ => Some((
+            if (id % 2 == 0) 0x04L else 0x03030103L,
+            Array.empty[Byte]))
         }
-      t
-    })
+      val arc = graft.functions.SevenZip.build(
+        Seq(("Posts.xml", sedumpPostsFixtureXml(id).getBytes("UTF-8"))),
+        encodedHeader = id % 2 == 1,
+        chainFor = chains,
+        coderFor = _ => if (id % 5 == 0) 2 else 1)
+      if (id % 13 == 0) arc.dropRight(5) else arc
+    }
 
   /** x271: RANGED SE-DUMP OVER FILTER-CHAINED ARCHIVES — delta and
     * BCJ-x86 folders (`-mf=…`, the real-world chained layout x262/x263
@@ -7027,10 +6901,7 @@ object Dataflow {
       |  SELECT doc_id, NULL, NULL, NULL, NULL, false FROM d WHERE tq OR fq)
       |ORDER BY media_id, post_id""".stripMargin)) {
     (spark, dir) =>
-      import spark.implicits._
-      import graft.functions.SevenZip
-      // fixture build: Bench untimed setup phase (fixtureSetups)
-      val tmp = Dataflow.x271FixtureDir(spark, dir)
+      val tmp = x271Fixture(spark, dir)
       val paths = table(spark, dir, "documents").select(
         concat(lit(tmp + "/"), col("doc_id"), lit(".7z")).as("path"))
       graft.streaming.Pipelines.sedumpPostsRanged(paths)
@@ -7043,57 +6914,42 @@ object Dataflow {
         .orderBy("media_id", "post_id")
   }
 
-  /** x272's fixture directories (the x267 setup-caching note applies). */
-  private val x272Fixtures =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** x272 fixture build — see the x256FixtureDir note. */
-  private[graft] def x272FixtureDir(
+  /** x272's fixture: chained HTML-body Posts.xml archives; every 13th is
+    * torn. */
+  private def x272Fixture(
       spark: org.apache.spark.sql.SparkSession, dir: String): String =
-    x272Fixtures.computeIfAbsent(dir, { _ =>
-      import spark.implicits._
-      import graft.functions.SevenZip
-      val t = java.nio.file.Files.createTempDirectory("x272_capstone")
-        .toFile.getAbsolutePath
-      spread(table(spark, dir, "documents").select(col("doc_id"))).as[Long]
-        .foreachPartition { (it: Iterator[Long]) =>
-          def esc(s: String) = s.replace("&", "&amp;")
-            .replace("<", "&lt;").replace("\"", "&quot;")
-          it.foreach { id =>
-            val note =
-              if (id % 7 == 0) "<p>no</p>"
-              else s"<p>Note $id: a > b\nc</p>"
-            val xml =
-              s"""<?xml version="1.0"?><posts>""" +
-                s"""<row Id="${id * 10 + 1}" PostTypeId="1" Body="${esc(
-                  s"<p>Question body ${id % 37} &amp; more.</p>")}" />""" +
-                s"""<row Id="${id * 10 + 2}" PostTypeId="2" Body="${esc(
-                  s"<p>Answer for ${id % 53}</p>" +
-                    "<pre><code>x &lt; 1</code></pre>")}" />""" +
-                s"""<row Id="${id * 10 + 3}" PostTypeId="3" """ +
-                s"""Body="${esc(note)}" /></posts>"""
-            val chains: Int => Option[(Long, Array[Byte])] = _ =>
-              if (id % 17 == 0 && id % 13 != 0)
-                Some((0x05L, Array.empty[Byte])) // exotic: routes
-              else (id % 3) match {
-                case 1 => Some((0x03L, Array[Byte]((id % 4).toByte)))
-                case 2 => Some((
-                  if (id % 2 == 0) 0x04L else 0x03030103L,
-                  Array.empty[Byte]))
-                case _ => None
-              }
-            val arc = SevenZip.build(
-              Seq(("Posts.xml", xml.getBytes("UTF-8"))),
-              encodedHeader = id % 2 == 1,
-              chainFor = chains,
-              coderFor = _ => ((id % 5) % 3).toInt)
-            val arm = if (id % 13 == 0) arc.dropRight(5) else arc
-            java.nio.file.Files.write(
-              java.nio.file.Paths.get(t, s"$id.7z"), arm)
-          }
+    sevenZipFixture(spark, dir, "x272_capstone") { id =>
+      def esc(s: String) = s.replace("&", "&amp;")
+        .replace("<", "&lt;").replace("\"", "&quot;")
+      val note =
+        if (id % 7 == 0) "<p>no</p>"
+        else s"<p>Note $id: a > b\nc</p>"
+      val xml =
+        s"""<?xml version="1.0"?><posts>""" +
+          s"""<row Id="${id * 10 + 1}" PostTypeId="1" Body="${esc(
+            s"<p>Question body ${id % 37} &amp; more.</p>")}" />""" +
+          s"""<row Id="${id * 10 + 2}" PostTypeId="2" Body="${esc(
+            s"<p>Answer for ${id % 53}</p>" +
+              "<pre><code>x &lt; 1</code></pre>")}" />""" +
+          s"""<row Id="${id * 10 + 3}" PostTypeId="3" """ +
+          s"""Body="${esc(note)}" /></posts>"""
+      val chains: Int => Option[(Long, Array[Byte])] = _ =>
+        if (id % 17 == 0 && id % 13 != 0)
+          Some((0x05L, Array.empty[Byte])) // exotic: routes
+        else (id % 3) match {
+          case 1 => Some((0x03L, Array[Byte]((id % 4).toByte)))
+          case 2 => Some((
+            if (id % 2 == 0) 0x04L else 0x03030103L,
+            Array.empty[Byte]))
+          case _ => None
         }
-      t
-    })
+      val arc = graft.functions.SevenZip.build(
+        Seq(("Posts.xml", xml.getBytes("UTF-8"))),
+        encodedHeader = id % 2 == 1,
+        chainFor = chains,
+        coderFor = _ => ((id % 5) % 3).toInt)
+      if (id % 13 == 0) arc.dropRight(5) else arc
+    }
 
   /** x272: SE-DUMP CAPSTONE — the ranged front door FEEDS the curation
     * pipeline end-to-end in ONE declarative plan: `.7z` site dumps on
@@ -7135,10 +6991,7 @@ object Dataflow {
       |SELECT media_id, post_id, text, CAST(n_dups AS BIGINT) AS n_dups
       |FROM w WHERE rn = 1 ORDER BY media_id, post_id""".stripMargin)) {
     (spark, dir) =>
-      import spark.implicits._
-      import graft.functions.SevenZip
-      // fixture build: Bench untimed setup phase (fixtureSetups)
-      val tmp = Dataflow.x272FixtureDir(spark, dir)
+      val tmp = x272Fixture(spark, dir)
       val paths = table(spark, dir, "documents").select(
         concat(lit(tmp + "/"), col("doc_id"), lit(".7z")).as("path"))
       graft.streaming.Pipelines.sedumpPostsRanged(paths)
@@ -7157,22 +7010,20 @@ object Dataflow {
         .orderBy("media_id", "post_id")
   }
 
-  /** Every per-(JVM, sf dir) cached fixture build, keyed by the query that
-    * needs it. [[graft.Bench]] runs these in its explicit UNTIMED setup
-    * phase (before the timing loop), so the timed region is honest by
-    * construction: no run of a measured query — first or later — pays for
-    * (or skips) fixture construction. Standalone callers (Verify, specs)
-    * that never ran setup still build on first use via the same
-    * computeIfAbsent, so results are unchanged everywhere. */
+  /** Every [[Scratch.fixture]] build, keyed by the query that needs it.
+    * [[graft.Bench]] runs these in its UNTIMED setup phase (before the
+    * timing loop), so no run of a measured query — first or later — pays
+    * for (or skips) fixture construction. Other callers (Verify, specs)
+    * build on first use, so results are the same everywhere. */
   val fixtureSetups: Seq[(String, (org.apache.spark.sql.SparkSession, String) => Unit)] =
     Seq(
-      "x256_wikidump_fetch" -> ((s, d) => { x256FixtureDir(s, d); () }),
-      "x267_sedump_ranged" -> ((s, d) => { x267FixtureDir(s, d); () }),
-      "x268_warczst_ranged" -> ((s, d) => { x268FixtureDir(s, d); () }),
-      "x269_sedump_ranged_relational" -> ((s, d) => { x269FixtureDir(s, d); () }),
-      "x270_sedump_lzma1_ranged" -> ((s, d) => { x270FixtureDir(s, d); () }),
-      "x271_sedump_chained_ranged" -> ((s, d) => { x271FixtureDir(s, d); () }),
-      "x272_sedump_ranged_corpus" -> ((s, d) => { x272FixtureDir(s, d); () }))
+      "x256_wikidump_fetch" -> ((s, d) => { x256Fixture(s, d); () }),
+      "x267_sedump_ranged" -> ((s, d) => { x267Fixture(s, d); () }),
+      "x268_warczst_ranged" -> ((s, d) => { x268Fixture(s, d); () }),
+      "x269_sedump_ranged_relational" -> ((s, d) => { x269Fixture(s, d); () }),
+      "x270_sedump_lzma1_ranged" -> ((s, d) => { x270Fixture(s, d); () }),
+      "x271_sedump_chained_ranged" -> ((s, d) => { x271Fixture(s, d); () }),
+      "x272_sedump_ranged_corpus" -> ((s, d) => { x272Fixture(s, d); () }))
 
   val all: Seq[DQ] = Seq(x01, x11, x102, x103, x104, x107, x108, x123, x125,
     x126, x127, x132, x133, x134, x135, x136, x137, x138, x139, x140, x141,

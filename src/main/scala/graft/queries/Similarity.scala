@@ -1230,8 +1230,7 @@ object Similarity {
           v(2) = (id % 7 - 3).toFloat
           (id, v)
         }.toDF("vec_id", "embedding")
-      val indexDir = java.nio.file.Files
-        .createTempDirectory("x239_ivf").toString
+      val indexDir = Scratch.scratch("x239_ivf")
       // land under a BAD model: 4 near-origin centroids, so true clusters
       // smear across every inverted list until the retrain fixes them
       val badCids = Array(0L, 1L, 2L, 3L)

@@ -4515,8 +4515,7 @@ object TextOps {
       import graft.streaming.InvertedIndex
       val docs = spread(table(spark, dir, "documents")
         .select(col("doc_id"), col("text")))
-      val indexDir = java.nio.file.Files
-        .createTempDirectory("x235_index").toFile.getAbsolutePath
+      val indexDir = Scratch.scratch("x235_index")
       // the three batch appends are independent jobs (disjoint batch_id
       // partitions); submit them concurrently so each job's task tail
       // back-fills the others' idle cores (guide §2.6 "overlap

@@ -97,6 +97,10 @@ class ExtensionsSpec extends AnyFunSuite {
         // Fail loudly (no interpreted fallback) if the codec expressions'
         // doGenCode emits Java that janino can't compile.
         .config("spark.sql.codegen.fallback", "false")
+        // Run the codec calls in tasks: left on, ConvertToLocalRelation
+        // folds them over the local inputs on the driver, interpreted.
+        .config("spark.sql.optimizer.excludedRules",
+          "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation")
         .withExtensions(new GraftExtensions)
         .getOrCreate()) { spark =>
       import spark.implicits._

@@ -376,6 +376,9 @@ class ImageHeaderSpec extends AnyFunSuite with LocalSpark {
   test("image_header runs as a native expression with codegen fallback off") {
     LocalSpark.isolated(SparkSession.builder()
         .config("spark.sql.codegen.fallback", "false")
+        // run in generated code in a task, not folded on the driver
+        .config("spark.sql.optimizer.excludedRules",
+          "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation")
         .withExtensions(new graft.functions.GraftExtensions)
         .getOrCreate()) { strict =>
       import strict.implicits._
