@@ -70,6 +70,21 @@ object AppSession {
     qBad.awaitTermination()
   }
 
+  /** The registry loop of every file-processing consumer: [[consume]] the
+    * topic at `topicDir`, reassemble it, and land `rows(files)` of each
+    * micro-batch in `registryDir` through [[IdempotentParquetSink]], so a
+    * replayed batch rewrites its own rows instead of adding them again. */
+  def consumeToRegistry(spark: SparkSession, topicDir: String, registryDir: String,
+      checkpoint: String)(rows: Dataset[AssembledFile] => DataFrame): Unit =
+    consume(topic(spark, topicDir), registryDir, checkpoint) { good =>
+      AssemblyStream.assemble(good, timeoutMs = 0)
+        .writeStream
+        .foreachBatch { (files: Dataset[AssembledFile], batchId: Long) =>
+          IdempotentParquetSink.writeBatch(registryDir)(rows(files), batchId)
+        }
+        .outputMode("append")
+    }
+
   /** The first half of [[consume]] over the topic at `topicDir`, for a
     * caller that starts its sink query itself: returns the good chunks and
     * the started quarantine query to await. */
@@ -408,18 +423,13 @@ object StreamProcessorApp {
       spark, "stream-processor", s"$registryDir/_state_metrics")
     spark.streams.addListener(stateBeats)
     try {
-      AppSession.consume(AppSession.topic(spark, topicDir), registryDir,
-          "_checkpoint_processor") { chunks =>
-        AssemblyStream.assemble(chunks, timeoutMs = 0)
-          .map { f =>
-            val sha = if (f.data == null) null
-              else graft.core.ChunkCodec.digestHex("SHA-256", f.data)
-            (f.rel_filepath, f.code, f.n_chunks, f.size, sha, f.file_mtime)
-          }
-          .toDF("rel_filepath", "status_code", "n_chunks", "size", "sha256", "mtime")
-          .writeStream
-          .foreachBatch(IdempotentParquetSink.writeBatch(registryDir) _)
-          .outputMode("append")
+      AppSession.consumeToRegistry(spark, topicDir, registryDir,
+          "_checkpoint_processor") { files =>
+        files.map { f =>
+          val sha = if (f.data == null) null
+            else graft.core.ChunkCodec.digestHex("SHA-256", f.data)
+          (f.rel_filepath, f.code, f.n_chunks, f.size, sha, f.file_mtime)
+        }.toDF("rel_filepath", "status_code", "n_chunks", "size", "sha256", "mtime")
       }
     } finally spark.streams.removeListener(stateBeats)
     compactTarget.foreach { t =>
@@ -648,15 +658,8 @@ object GirderTransferApp {
   /** App body, factored for tests. Does not stop `spark`. */
   def run(spark: SparkSession, topicDir: String, baseUrl: String,
       registryDir: String): Unit =
-    AppSession.consume(AppSession.topic(spark, topicDir), registryDir,
-        "_checkpoint_girder") { good =>
-      AssemblyStream.assemble(good, timeoutMs = 0)
-        .writeStream
-        .foreachBatch { (batch: Dataset[AssembledFile], batchId: Long) =>
-          IdempotentParquetSink.writeBatch(registryDir)(
-            graft.streaming.RestSink.upload(batch, baseUrl).toDF(), batchId)
-        }
-        .outputMode("append")
+    AppSession.consumeToRegistry(spark, topicDir, registryDir, "_checkpoint_girder") {
+      files => graft.streaming.RestSink.upload(files, baseUrl).toDF()
     }
 
   def main(args: Array[String]): Unit = {
@@ -681,15 +684,8 @@ object ObjectStoreTransferApp {
   /** App body, factored for tests. Does not stop `spark`. */
   def run(spark: SparkSession, topicDir: String, baseUri: String, topic: String,
       registryDir: String): Unit =
-    AppSession.consume(AppSession.topic(spark, topicDir), registryDir,
-        "_checkpoint_transfer") { good =>
-      AssemblyStream.assemble(good, timeoutMs = 0)
-        .writeStream
-        .foreachBatch { (batch: Dataset[AssembledFile], batchId: Long) =>
-          IdempotentParquetSink.writeBatch(registryDir)(
-            graft.streaming.ObjectStoreSink.putVerified(batch, baseUri, topic).toDF(), batchId)
-        }
-        .outputMode("append")
+    AppSession.consumeToRegistry(spark, topicDir, registryDir, "_checkpoint_transfer") {
+      files => graft.streaming.ObjectStoreSink.putVerified(files, baseUri, topic).toDF()
     }
 
   def main(args: Array[String]): Unit = {

@@ -3,6 +3,8 @@ package graft.batch
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
+import graft.streaming.IdempotentParquetSink
+
 /** Small-files compaction — the operational pass every streaming parquet
   * sink eventually needs: micro-batches (and the reference's per-file
   * registry shards, dataclass_table.py:64-66 / producer_file_registry
@@ -55,38 +57,24 @@ object Compaction {
     if (before == 0) return (0, 0)
     val totalBytes = parquetFiles.map(_.getLen).sum
     val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
-    val tmp = new Path(path.getParent, path.getName + "._compact_tmp")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
+    val tmp = IdempotentParquetSink.scratchBeside(path)
+    fs.delete(tmp, true)
     spark.read.parquet(dir)
       .repartition(nOut)
       .write.parquet(tmp.toString)
-    // swap: the non-atomic window documented above. Every FS call is
-    // checked — on a rename failure the data still exists under `tmp`,
-    // and the error says so instead of leaving a silent empty table.
-    if (!fs.delete(path, true))
-      throw new java.io.IOException(
-        s"compactDir: failed to delete '$dir'; compacted copy left at '$tmp'")
-    if (!fs.rename(tmp, path))
-      throw new java.io.IOException(
-        s"compactDir: rename '$tmp' -> '$dir' failed; ORIGINAL WAS DELETED — " +
-          s"the data survives at '$tmp', restore it manually")
+    IdempotentParquetSink.swap(fs, tmp, path)
     val after = fs.listStatus(path)
       .count(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
     (before, after)
   }
 
-  /** Compaction for [[graft.streaming.IdempotentParquetSink]] layouts
-    * (`batch_id=N` partition directory per micro-batch): folds every
-    * committed batch partition into ONE `batch_id=-1` compacted partition
-    * of ~`targetBytes` files. This is the registry-consolidation pass the
-    * reference runs on shutdown (producer_file_registry.py:80-138 rewrites
-    * its per-file CSV shards) re-expressed for the partitioned-parquet
-    * registry.
-    *
-    * Safe ONLY between runs of the owning streaming query: the engine
-    * never emits batchId -1, and a resumed query continues at fresh,
-    * strictly-increasing ids, so later dynamic-partition overwrites can
-    * never touch the compacted partition. Underscore dirs (`_quarantine`,
+  /** Compaction for [[IdempotentParquetSink]] layouts (`batch_id=N`
+    * partition directory per micro-batch): [[IdempotentParquetSink.fold]]
+    * with the rows repartitioned to ~`targetBytes` files. This is the
+    * registry-consolidation pass the reference runs on shutdown
+    * (producer_file_registry.py:80-138 rewrites its per-file CSV shards)
+    * re-expressed for the partitioned-parquet registry. Safe ONLY between
+    * runs of the owning streaming query. Underscore dirs (`_quarantine`,
     * checkpoints) are untouched; readers keep using
     * `spark.read.parquet(dir)` unchanged. Returns (filesBefore,
     * filesAfter) over data files. */
@@ -98,35 +86,12 @@ object Compaction {
     require(!fs.exists(new Path(path, "_spark_metadata")),
       s"refusing to compact '$dir': FileStreamSink dir, not an " +
         "IdempotentParquetSink layout — its commit log would orphan")
-    val parts = fs.listStatus(path)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch_id="))
-    def dataFiles(p: Path) = fs.listStatus(p)
-      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-    val before = parts.map(p => dataFiles(p.getPath).length).sum
-    if (before == 0) return (0, 0)
-    val totalBytes = parts.flatMap(p => dataFiles(p.getPath)).map(_.getLen).sum
-    val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
-    // underscore prefix: invisible to readers racing the rewrite
-    val tmp = new Path(path, "_compact_tmp")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    spark.read.parquet(dir)
-      .withColumn("batch_id", org.apache.spark.sql.functions.lit(-1L))
-      .repartition(nOut)
-      .write.partitionBy("batch_id").parquet(tmp.toString)
-    // swap: same non-atomic window as compactDir, same recovery story —
-    // every FS call checked, data always survives somewhere nameable
-    parts.foreach { p =>
-      if (!fs.delete(p.getPath, true))
-        throw new java.io.IOException(
-          s"compactBatchPartitioned: failed to delete '${p.getPath}'; " +
-            s"compacted copy intact at '$tmp'")
-    }
-    val dest = new Path(path, "batch_id=-1")
-    if (!fs.rename(new Path(tmp, "batch_id=-1"), dest))
-      throw new java.io.IOException(
-        s"compactBatchPartitioned: rename into '$dest' failed; ORIGINALS " +
-          s"WERE DELETED — the data survives under '$tmp', restore manually")
-    fs.delete(tmp, true)
-    (before, dataFiles(dest).length)
+    def dataFiles() = IdempotentParquetSink.batches(spark, dir).flatMap(p =>
+      fs.listStatus(p).filter(f => f.isFile && f.getPath.getName.endsWith(".parquet")))
+    val before = dataFiles()
+    if (before.isEmpty) return (0, 0)
+    val nOut = math.max(1, math.ceil(before.map(_.getLen).sum.toDouble / targetBytes).toInt)
+    IdempotentParquetSink.fold(spark, dir)(_.repartition(nOut))
+    (before.length, dataFiles().length)
   }
 }

@@ -4525,10 +4525,7 @@ object TextOps {
           InvertedIndex.appendBatch(indexDir)(
             docs.where(col("doc_id") % 3 === b), b.toLong))
       }.foreach(_.join())
-      // counted = false: the fold is the operator; the before/after row
-      // counts are report instrumentation this gate never reads
-      InvertedIndex.compact(spark, indexDir, InvertedIndex.ChunkSize,
-        counted = false)
+      InvertedIndex.compact(spark, indexDir)
       InvertedIndex.bm25(spark, indexDir, Seq("scan", "merge", "key"), 5)
         .orderBy("term", "doc_id")
   }

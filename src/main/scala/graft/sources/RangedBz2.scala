@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.io.{IOException, ObjectInputStream, ObjectOutputStream}
+import java.io.IOException
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -8,19 +8,6 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 
 import graft.functions.Bzip2
-
-/** Hadoop `Configuration` is not `Serializable`; this is the standard
-  * write/readFields envelope so executors can open the SAME filesystem
-  * the driver resolved (credentials, scheme handlers) — the public
-  * pattern every Hadoop-input Spark job uses. */
-final class SerializableHadoopConf(@transient var value: Configuration)
-    extends Serializable {
-  private def writeObject(out: ObjectOutputStream): Unit = value.write(out)
-  private def readObject(in: ObjectInputStream): Unit = {
-    value = new Configuration(false)
-    value.readFields(in)
-  }
-}
 
 /** Range access to (multistream) `.bz2` files that never materializes a
   * whole file in memory — the layer BELOW the 2 GB binary-column limit

@@ -5,6 +5,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.queries.Core
+
 /** Incremental inverted-index maintenance — the daily-batch world's answer
   * to x112's one-shot build: new documents' postings land as per-batch
   * SEGMENTS (the Lucene segment model re-expressed on parquet), reads
@@ -40,9 +42,6 @@ object InvertedIndex {
 
   /** Max postings stored in one row (segment and compacted form alike). */
   val ChunkSize = 4096
-
-  private def tokens(c: org.apache.spark.sql.Column) =
-    filter(split(lower(c), "[^a-z]+"), t => t =!= "")
 
   /** Width of the doc_id pre-split ranges under the chunk window: ranks
     * are computed per (term, doc_id-range) rather than per term, so no
@@ -83,11 +82,14 @@ object InvertedIndex {
   def segment(docs: DataFrame): DataFrame = segment(docs, ChunkSize)
 
   def segment(docs: DataFrame, cap: Int): DataFrame =
-    chunkRows(
-      docs
-        .select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
-        .groupBy("doc_id", "tok").agg(count(lit(1)).as("tf")),
-      cap)
+    chunkRows(termFreqs(docs), cap)
+
+  /** `(doc_id, text)` → `(doc_id, tok, tf)`: the map-side (doc, term)
+    * collapse every segment family starts from. */
+  private def termFreqs(docs: DataFrame): DataFrame =
+    docs
+      .select(col("doc_id"), explode(Core.tokens(col("text"))).as("tok"))
+      .groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
 
   /** Directory of the doc-stats segments: `<indexDir>/_stats` — the
     * underscore prefix makes it invisible to `spark.read.parquet(indexDir)`
@@ -104,41 +106,16 @@ object InvertedIndex {
     * the stats segment is O(#docs in the batch) rows written once at
     * arrival, exactly like the reference consolidates derived registry
     * state with the primary on rotation (producer_file_registry.py:80-138). */
-  def statsSegment(docs: DataFrame): DataFrame =
-    docs
-      .select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
-      .groupBy("doc_id").agg(count(lit(1)).as("dl"))
+  def statsSegment(docs: DataFrame): DataFrame = docLengths(termFreqs(docs))
 
-  /** Read a `batch_id=N`-partitioned segment directory by its explicit
-    * children (with the directory as basePath, so the partition column
-    * survives). Needed for `_stats`: handing Spark the underscore
-    * directory itself trips the hidden-path filter's "all paths were
-    * ignored" warning on every read, while explicit non-hidden children
-    * read silently — the same dodge VectorIndex.loadModel uses for
-    * `_model/gen=N`. */
-  private def readSegmentDir(spark: SparkSession, dir: String): DataFrame = {
-    val path = new Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parts = fs.listStatus(path)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch_id="))
-      .map(_.getPath.toString)
-    spark.read.option("basePath", dir).parquet(parts.toIndexedSeq: _*)
-  }
+  private def docLengths(tf: DataFrame): DataFrame =
+    tf.groupBy("doc_id").agg(sum("tf").as("dl"))
 
   /** Per-doc length table `(doc_id, dl)` merged over stats segments (each
-    * doc arrives in exactly one batch, so the union IS the table).
-    * Requires at least one stats segment — gate with [[hasStats]]. */
+    * doc arrives in exactly one batch, so the union IS the table). An index
+    * directory without the `_stats` family fails here, naming it. */
   def docStats(spark: SparkSession, indexDir: String): DataFrame =
-    readSegmentDir(spark, statsDir(indexDir)).drop("batch_id")
-
-  /** Whether this index directory carries the doc-stats segment family
-    * (indexes written before it existed do not). */
-  def hasStats(spark: SparkSession, indexDir: String): Boolean = {
-    val p = new Path(statsDir(indexDir))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p) && fs.listStatus(p).exists(s =>
-      s.isDirectory && s.getPath.getName.startsWith("batch_id="))
-  }
+    IdempotentParquetSink.read(spark, statsDir(indexDir)).drop("batch_id")
 
   /** foreachBatch hook: segment the micro-batch and land it replay-safe —
     * posting chunks under `indexDir/batch_id=N`, doc-length stats under
@@ -148,25 +125,17 @@ object InvertedIndex {
     * (doc, term) → tf collapse is computed once and cached for the two
     * writes (a micro-batch, not the corpus). */
   def appendBatch(indexDir: String)(batch: DataFrame, batchId: Long): Unit = {
-    val tf = batch
-      .select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
-      .groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
-      .persist()
+    val tf = termFreqs(batch).persist()
     try {
       IdempotentParquetSink.writeBatch(indexDir)(chunkRows(tf, ChunkSize), batchId)
-      IdempotentParquetSink.writeBatch(statsDir(indexDir))(
-        tf.groupBy("doc_id").agg(sum("tf").as("dl")), batchId)
+      IdempotentParquetSink.writeBatch(statsDir(indexDir))(docLengths(tf), batchId)
     } finally tf.unpersist()
   }
 
   /** Maintain the index from a streaming `(doc_id, text)` source. */
   def maintain(docs: DataFrame, indexDir: String,
       checkpoint: String): StreamingQuery =
-    docs.writeStream
-      .foreachBatch(appendBatch(indexDir) _)
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+    IdempotentParquetSink.maintain(docs, checkpoint)(appendBatch(indexDir))
 
   /** Fold segment chunk rows to ONE row per term (array-typed postings —
     * doc-ordered because each doc lives in exactly one segment chunk).
@@ -216,7 +185,7 @@ object InvertedIndex {
     * a query term. */
   def bm25From(segments: DataFrame, terms: Seq[String], k: Int): DataFrame = {
     val post = postings(segments)
-    scoreBm25(post, post.groupBy("doc_id").agg(sum("tf").as("dl")), terms, k)
+    scoreBm25(post, docLengths(post), terms, k)
   }
 
   /** The shared BM25 scoring tail: `post` is the flat (tok, doc_id, tf)
@@ -250,84 +219,35 @@ object InvertedIndex {
       .filter(col("rn") <= k).drop("rn")
   }
 
-  /** BM25 served from the STORED index. When the directory carries the
-    * doc-stats segment family (anything [[appendBatch]] maintained), the
-    * serving plan touches only QUERY-TERM posting chunks: the `tok IN`
-    * filter lands on the chunk rows BEFORE any explode, so it pushes down
-    * to the parquet scan (row-group stats skip non-matching chunks), and
-    * doc lengths / N / avgdl come from the O(#docs) stats segment instead
-    * of a full posting-store rescan — the round-10 serving-scale fix. A
-    * pre-stats index directory falls back to deriving lengths from the
-    * postings (correct, but a corpus-width scan per query). */
+  /** BM25 served from the STORED index: the serving plan touches only
+    * QUERY-TERM posting chunks — the `tok IN` filter lands on the chunk
+    * rows BEFORE any explode, so it pushes down to the parquet scan
+    * (row-group stats skip non-matching chunks) — and doc lengths / N /
+    * avgdl come from the O(#docs) `_stats` segment family instead of a
+    * full posting-store rescan (the round-10 serving-scale fix). Requires
+    * the `_stats` family that [[appendBatch]] maintains. */
   def bm25(spark: SparkSession, indexDir: String, terms: Seq[String],
       k: Int): DataFrame = {
-    val segments = spark.read.parquet(indexDir).drop("batch_id")
-    if (hasStats(spark, indexDir))
-      scoreBm25(postings(segments.filter(col("tok").isin(terms: _*))),
-        docStats(spark, indexDir), terms, k)
-    else bm25From(segments, terms, k)
+    val lengths = docStats(spark, indexDir)
+    scoreBm25(postings(spark.read.parquet(indexDir).drop("batch_id")
+      .filter(col("tok").isin(terms: _*))), lengths, terms, k)
   }
 
-  /** Posting-level compaction: fold EVERY segment into one merged segment
-    * under `batch_id=-1` (the id the engine never emits — same contract
-    * as [[graft.batch.Compaction.compactBatchPartitioned]], which
-    * consolidates FILES; this also consolidates ROWS, restoring at most
-    * ceil(df/cap) chunk rows per term — NOT one unbounded row: a stopword
-    * posting list is re-chunked at [[ChunkSize]], never re-materialized
-    * as a single array cell). Safe only between runs of the owning query.
-    * Returns (segmentRowsBefore, segmentRowsAfter); `counted = false`
-    * skips the row-count scans (report instrumentation — extra segment
-    * scans per compaction) and returns (-1, -1). */
-  def compact(spark: SparkSession, indexDir: String): (Long, Long) =
+  /** Posting-level compaction: [[IdempotentParquetSink.fold]] both
+    * families to `batch_id=-1`. The posting family also consolidates ROWS,
+    * restoring at most ceil(df/cap) chunk rows per term — NOT one
+    * unbounded row: a stopword posting list is re-chunked at
+    * [[ChunkSize]], never re-materialized as a single array cell. Safe
+    * only between runs of the owning query. Returns the posting family's
+    * (batchPartitionsBefore, batchPartitionsAfter). */
+  def compact(spark: SparkSession, indexDir: String): (Int, Int) =
     compact(spark, indexDir, ChunkSize)
 
-  def compact(spark: SparkSession, indexDir: String,
-      cap: Int, counted: Boolean = true): (Long, Long) = {
+  def compact(spark: SparkSession, indexDir: String, cap: Int): (Int, Int) = {
     // stats first: if the posting fold later fails mid-way, a re-run still
     // sees a consistent (if partially folded) pair — each family's fold is
-    // independently idempotent and serving reads either layout. The stats
-    // fold never counts: no caller reads stats row counts.
-    foldSegments(spark, statsDir(indexDir), identity, counted = false)
-    foldSegments(spark, indexDir,
-      df => chunkRows(postings(df), cap), counted)
-  }
-
-  /** Fold every `batch_id=N` partition of one segment directory into a
-    * single `batch_id=-1` partition via tmp-write → delete → rename (the
-    * same consolidate-between-runs contract as
-    * [[graft.batch.Compaction.compactBatchPartitioned]]). `rewrite` maps
-    * the merged rows to their compacted form (posting re-chunk for the
-    * index family, identity for doc-stats). Returns (rowsBefore,
-    * rowsAfter); a directory with no segments folds to (0, 0). */
-  private def foldSegments(spark: SparkSession, dir: String,
-      rewrite: DataFrame => DataFrame, counted: Boolean = true): (Long, Long) = {
-    val path = new Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a fresh/empty index (no segments landed yet) compacts to nothing —
-    // same contract as VectorIndex.compact, not an AnalysisException
-    if (!fs.exists(path) || !fs.listStatus(path).exists(s =>
-        s.isDirectory && s.getPath.getName.startsWith("batch_id=")))
-      return (0L, 0L)
-    val before = if (counted) readSegmentDir(spark, dir).count() else -1L
-    val tmp = new Path(path, "_compact_tmp")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    rewrite(readSegmentDir(spark, dir).drop("batch_id"))
-      .withColumn("batch_id", lit(-1L))
-      .write.partitionBy("batch_id").parquet(tmp.toString)
-    val parts = fs.listStatus(path)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch_id="))
-    parts.foreach { p =>
-      if (!fs.delete(p.getPath, true))
-        throw new java.io.IOException(
-          s"InvertedIndex.compact: failed to delete '${p.getPath}'; " +
-            s"compacted copy intact at '$tmp'")
-    }
-    val dest = new Path(path, "batch_id=-1")
-    if (!fs.rename(new Path(tmp, "batch_id=-1"), dest))
-      throw new java.io.IOException(
-        s"InvertedIndex.compact: rename into '$dest' failed; ORIGINALS WERE " +
-          s"DELETED — the data survives under '$tmp', restore manually")
-    fs.delete(tmp, true)
-    (before, if (counted) readSegmentDir(spark, dir).count() else -1L)
+    // independently idempotent and serving reads either layout
+    IdempotentParquetSink.fold(spark, statsDir(indexDir))(identity)
+    IdempotentParquetSink.fold(spark, indexDir)(df => chunkRows(postings(df), cap))
   }
 }

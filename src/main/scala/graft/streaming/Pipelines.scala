@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.batch.{ChunkRow, ChunkPipeline}
 import graft.core.Chunker
@@ -762,9 +763,9 @@ object Pipelines {
         graft.sources.RangedBz2.DefaultMaxExtentBytes): DataFrame = {
     val spark = paths.sparkSession
     import spark.implicits._
-    import graft.sources.{RangedBz2, SerializableHadoopConf}
+    import graft.sources.RangedBz2
     val bc = spark.sparkContext.broadcast(
-      new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration))
+      new SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
     val extents = spreadBy(paths.select(col("path")), col("path"))
       .as[String]
       .mapPartitions { it =>
@@ -840,9 +841,9 @@ object Pipelines {
     val spark = idx.sparkSession
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
-    import graft.sources.{RangedBz2, SerializableHadoopConf}
+    import graft.sources.RangedBz2
     val bc = spark.sparkContext.broadcast(
-      new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration))
+      new SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
 
     // NOT cached: the returned DataFrame is lazy, so there is no safe
     // unpersist point (the x39 rule in SCALE.md) — hits is a cheap
@@ -947,9 +948,8 @@ object Pipelines {
     val spark = pages.sparkSession
     import spark.implicits._
     import graft.functions.{Bzip2, Wikitext}
-    import graft.sources.SerializableHadoopConf
     val bc = spark.sparkContext.broadcast(
-      new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration))
+      new SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
     pages.select(col("page_id").cast("long"), col("title"), col("text"))
       .as[(Long, String, String)]
       .foreachPartition { (it: Iterator[(Long, String, String)]) =>
@@ -1107,9 +1107,9 @@ object Pipelines {
       copyTile: Long = 256L << 20): DataFrame = {
     val spark = paths.sparkSession
     import spark.implicits._
-    import graft.sources.{Ranged7z, SerializableHadoopConf}
+    import graft.sources.Ranged7z
     val bc = spark.sparkContext.broadcast(
-      new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration))
+      new SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
     // spread the LISTING before the header scans: a listing often
     // arrives as one split (one parquet row-group, one text file), and
     // without this every header pread would run in a single task
@@ -1194,9 +1194,8 @@ object Pipelines {
     val spark = records.sparkSession
     import spark.implicits._
     import graft.functions.{Warc, Zstandard}
-    import graft.sources.SerializableHadoopConf
     val bc = spark.sparkContext.broadcast(
-      new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration))
+      new SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
     val bcDict = spark.sparkContext.broadcast(dict)
     records.select(col("uri"), col("date"), col("payload"))
       .as[(String, String, Array[Byte])]
@@ -1314,9 +1313,9 @@ object Pipelines {
     val spark = paths.sparkSession
     import spark.implicits._
     import graft.functions.Zstandard
-    import graft.sources.{RangedBz2, RangedZstd, SerializableHadoopConf}
+    import graft.sources.{RangedBz2, RangedZstd}
     val bc = spark.sparkContext.broadcast(
-      new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration))
+      new SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
     val extents = spreadBy(paths.select(col("path")), col("path"))
       .as[String]
       .mapPartitions { it =>

@@ -64,22 +64,15 @@ object VectorIndex {
   def appendBatch(indexDir: String, cids: Array[Long],
       centroids: Array[Array[Float]], gen: Long = 0L)(
       batch: DataFrame, batchId: Long): Unit =
-    segment(batch, cids, centroids)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id", "cid")
-      .parquet(genRoot(indexDir, gen))
+    IdempotentParquetSink.writeBatch(genRoot(indexDir, gen), "cid")(
+      segment(batch, cids, centroids), batchId)
 
   /** Maintain the index from a streaming `(vec_id, embedding)` source. */
   def maintain(vectors: DataFrame, indexDir: String, checkpoint: String,
       cids: Array[Long], centroids: Array[Array[Float]],
       gen: Long = 0L): StreamingQuery =
-    vectors.writeStream
-      .foreachBatch(appendBatch(indexDir, cids, centroids, gen) _)
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+    IdempotentParquetSink.maintain(vectors, checkpoint)(
+      appendBatch(indexDir, cids, centroids, gen))
 
   /** The merged index of the CURRENT generation: `(cid, vec_id,
     * embedding)` over its segments. An unpublished newer era (a retrain
@@ -107,45 +100,16 @@ object VectorIndex {
       .limit(k)
   }
 
-  /** Segment compaction: fold every per-batch partition into one
-    * `batch_id=-1` partition (the id the engine never emits — the
-    * [[graft.batch.Compaction.compactBatchPartitioned]] contract),
-    * PRESERVING the `cid` sub-partitioning so probe filters keep their
-    * directory pruning. Vectors don't merge (unlike postings), so this is
-    * purely the small-files pass: O(batches·cids) directories fold to
-    * O(cids). Safe only between runs of the owning query. Returns
+  /** Segment compaction: [[IdempotentParquetSink.fold]] the current
+    * generation's root to one `batch_id=-1` partition, PRESERVING the `cid`
+    * sub-partitioning so probe filters keep their directory pruning.
+    * Vectors don't merge (unlike postings), so this is purely the
+    * small-files pass: O(batches·cids) directories fold to O(cids). Safe
+    * only between runs of the owning query. Returns
     * (batchPartitionsBefore, batchPartitionsAfter). */
-  def compact(spark: SparkSession, indexDir: String): (Int, Int) = {
-    val path = new org.apache.hadoop.fs.Path(
-      genRoot(indexDir, currentGen(spark, indexDir)))
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(path)) return (0, 0)
-    val parts = fs.listStatus(path)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch_id="))
-    val before = parts.length
-    if (before == 0) return (0, 0)
-    val tmp = new org.apache.hadoop.fs.Path(path, "_compact_tmp")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    spark.read.parquet(path.toString)
-      .select("cid", "vec_id", "embedding")
-      .withColumn("batch_id", lit(-1L))
-      .write.partitionBy("batch_id", "cid").parquet(tmp.toString)
-    parts.foreach { p =>
-      if (!fs.delete(p.getPath, true))
-        throw new java.io.IOException(
-          s"VectorIndex.compact: failed to delete '${p.getPath}'; " +
-            s"compacted copy intact at '$tmp'")
-    }
-    val dest = new org.apache.hadoop.fs.Path(path, "batch_id=-1")
-    if (!fs.rename(new org.apache.hadoop.fs.Path(tmp, "batch_id=-1"), dest))
-      throw new java.io.IOException(
-        s"VectorIndex.compact: rename into '$dest' failed; ORIGINALS WERE " +
-          s"DELETED — the data survives under '$tmp', restore manually")
-    fs.delete(tmp, true)
-    val after = fs.listStatus(path)
-      .count(s => s.isDirectory && s.getPath.getName.startsWith("batch_id="))
-    (before, after)
-  }
+  def compact(spark: SparkSession, indexDir: String): (Int, Int) =
+    IdempotentParquetSink.fold(spark, genRoot(indexDir, currentGen(spark, indexDir)),
+      "cid")(identity)
 
   // ------------------------------------------------- model generations
 
@@ -162,16 +126,13 @@ object VectorIndex {
     val base = new org.apache.hadoop.fs.Path(indexDir, "_model")
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tmp = new org.apache.hadoop.fs.Path(indexDir, "_model_tmp")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
+    fs.delete(tmp, true)
     cids.zip(centroids).toSeq.toDF("cid", "centroid")
       .coalesce(1)
       .write.parquet(tmp.toString)
     fs.mkdirs(base)
-    val dest = new org.apache.hadoop.fs.Path(base, s"gen=$gen")
-    if (fs.exists(dest)) fs.delete(dest, true) // torn earlier publish
-    if (!fs.rename(tmp, dest))
-      throw new java.io.IOException(
-        s"VectorIndex.saveModel: rename into '$dest' failed")
+    // an existing gen=N is a torn earlier publish: the swap replaces it
+    IdempotentParquetSink.swap(fs, tmp, new org.apache.hadoop.fs.Path(base, s"gen=$gen"))
   }
 
   /** The newest persisted model: (generation, cids, centroids), or None
@@ -284,18 +245,14 @@ object VectorIndex {
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // 1. reassigned corpus to tmp (invisible to every reader)
     val tmp = new org.apache.hadoop.fs.Path(path, "_retrain_tmp")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
+    fs.delete(tmp, true)
     segment(vectors, cids, cur)
       .withColumn("batch_id", lit(-1L))
       .write.partitionBy("batch_id", "cid").parquet(tmp.toString)
-    // 2. one rename → the new era root (still unreachable: no model yet).
-    // A torn earlier attempt left an unpublished root here — discard it.
-    val dest = new org.apache.hadoop.fs.Path(genRoot(indexDir, newGen))
-    if (fs.exists(dest)) fs.delete(dest, true)
-    if (!fs.rename(tmp, dest))
-      throw new java.io.IOException(
-        s"VectorIndex.retrain: rename into '$dest' failed; the reassigned " +
-          s"copy is intact at '$tmp' and generation ${newGen - 1} still serves")
+    // 2. one swap → the new era root (still unreachable: no model yet).
+    // A torn earlier attempt left an unpublished root here — it is replaced.
+    IdempotentParquetSink.swap(fs, tmp,
+      new org.apache.hadoop.fs.Path(genRoot(indexDir, newGen)))
     // 3. PUBLISH: from here readers resolve the new era
     saveModel(spark, indexDir, newGen, cids, cur)
     // 4. cleanup: every other era root is now unreachable

@@ -30,7 +30,7 @@ class IndexServingPlanSpec extends AnyFunSuite with LocalSpark {
     for (b <- 0 until 2) {
       val wave = docs.filter(_._1 % 2 == b).toDF("doc_id", "text")
       if (withStats) InvertedIndex.appendBatch(dir)(wave, b.toLong)
-      else // the pre-stats layout: posting segments only
+      else // posting segments only, no _stats family
         graft.streaming.IdempotentParquetSink.writeBatch(dir)(
           InvertedIndex.segment(wave), b.toLong)
     }
@@ -81,16 +81,11 @@ class IndexServingPlanSpec extends AnyFunSuite with LocalSpark {
       == before, "compaction changed served BM25")
   }
 
-  test("a pre-stats index directory falls back to the posting-derived lengths") {
+  test("an index directory without the _stats family is refused, naming it") {
     val dir = buildIndex(withStats = false)
-    val served = InvertedIndex.bm25(spark, dir, Seq("quick", "dog"), 3)
-    assert(!served.queryExecution.executedPlan.toString.contains("_stats"))
-    import spark.implicits._
-    val adhoc = InvertedIndex.bm25From(
-      InvertedIndex.segment(docs.toDF("doc_id", "text")), Seq("quick", "dog"), 3)
-      .orderBy("term", "doc_id").collect().map(_.toString).toSeq
-    assert(served.orderBy("term", "doc_id")
-      .collect().map(_.toString).toSeq == adhoc,
-      "fallback BM25 != ad-hoc BM25")
+    val e = intercept[IllegalArgumentException] {
+      InvertedIndex.bm25(spark, dir, Seq("quick", "dog"), 3)
+    }
+    assert(e.getMessage.contains(InvertedIndex.statsDir(dir)), e.getMessage)
   }
 }

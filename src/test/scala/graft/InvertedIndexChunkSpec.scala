@@ -112,9 +112,11 @@ class InvertedIndexChunkSpec extends AnyFunSuite with LocalSpark {
     }
     val servedBefore = InvertedIndex.read(spark, indexDir)
       .orderBy("tok").collect().map(_.toString).toSeq
-    val (before, after) = InvertedIndex.compact(spark, indexDir, Cap)
-    assert(after < before, s"compact did not fold ($before -> $after)")
+    val before = spark.read.parquet(indexDir).count()
+    assert(InvertedIndex.compact(spark, indexDir, Cap) == ((3, 1)))
     val stored = spark.read.parquet(indexDir)
+    val after = stored.count()
+    assert(after < before, s"compact did not fold ($before -> $after)")
     assert(stored.select("batch_id").distinct().count() == 1)
     val maxRow = stored.agg(max(size(col("postings")))).first().getInt(0)
     assert(maxRow <= Cap, s"a compacted row carries $maxRow postings")
@@ -122,26 +124,5 @@ class InvertedIndexChunkSpec extends AnyFunSuite with LocalSpark {
     val servedAfter = InvertedIndex.read(spark, indexDir)
       .orderBy("tok").collect().map(_.toString).toSeq
     assert(servedAfter == servedBefore, "compaction changed the index")
-  }
-
-  test("counted = false folds identically and skips the row-count scans") {
-    import spark.implicits._
-    val base = Files.createTempDirectory("inv_chunk").toFile
-    val indexDir = new java.io.File(base, "index").getAbsolutePath
-    (0 until 3).foreach { b =>
-      InvertedIndex.appendBatch(indexDir)(
-        docs.where(col("doc_id") % 3 === b), b.toLong)
-    }
-    val servedBefore = InvertedIndex.read(spark, indexDir)
-      .orderBy("tok").collect().map(_.toString).toSeq
-    val (before, after) =
-      InvertedIndex.compact(spark, indexDir, Cap, counted = false)
-    assert(before == -1L && after == -1L,
-      s"counted = false must return sentinel counts, got ($before, $after)")
-    val stored = spark.read.parquet(indexDir)
-    assert(stored.select("batch_id").distinct().count() == 1)
-    val servedAfter = InvertedIndex.read(spark, indexDir)
-      .orderBy("tok").collect().map(_.toString).toSeq
-    assert(servedAfter == servedBefore, "uncounted compaction changed the index")
   }
 }

@@ -105,7 +105,10 @@ class InvertedIndexStreamSpec extends AnyFunSuite with LocalSpark {
     // posting-level compaction: rows per term fold to 1, served index
     // unchanged, and a further read sees exactly one segment partition
     val servedBefore = readIndex(indexDir)
-    val (rowsBefore, rowsAfter) = InvertedIndex.compact(spark, indexDir)
+    val rowsBefore = spark.read.parquet(indexDir).count()
+    val (partsBefore, partsAfter) = InvertedIndex.compact(spark, indexDir)
+    assert(partsBefore > 1 && partsAfter == 1, s"compact $partsBefore -> $partsAfter")
+    val rowsAfter = spark.read.parquet(indexDir).count()
     assert(rowsAfter < rowsBefore, s"compact did not fold ($rowsBefore -> $rowsAfter)")
     val perTerm = spark.read.parquet(indexDir)
       .groupBy("tok").count().agg(max("count")).first().getLong(0)

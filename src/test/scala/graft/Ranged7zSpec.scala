@@ -92,7 +92,7 @@ class Ranged7zSpec extends AnyFunSuite with LocalSpark {
     assert(whole.length == 300)
     assert(split.sorted.toSeq == whole.sorted.toSeq)
     // and the split genuinely happened: more than one slice planned
-    import graft.sources.{Ranged7z, SerializableHadoopConf}
+    import graft.sources.Ranged7z
     val conf = spark.sparkContext.hadoopConfiguration
     val ms = Ranged7z.scanMembers(conf, p)
     val slices = Ranged7z.planSlices(conf, p, ms.head, lzma2SplitMin = 0L)
